@@ -32,14 +32,17 @@ work" items 1-3):
 from __future__ import annotations
 
 import json
+import operator
 import os
 from dataclasses import dataclass, field
+from decimal import Decimal
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, CommitIO, PosixCommitIO)
 
@@ -53,6 +56,18 @@ _MAX_STRING_STAT = 256
 
 
 _INT_WIDEN_ORDER = ("byte", "short", "integer", "long")
+
+_SCAN_OPS = {"==": operator.eq, "<": operator.lt, "<=": operator.le,
+             ">": operator.gt, ">=": operator.ge}
+
+
+def _typed_lit(v, dt: T.DataType):
+    """``v`` as a literal of the column type ``dt``. py4j sends a Python int
+    only as a Java long, so a wider one (a 25-digit ``_seq`` watermark)
+    travels as a Decimal."""
+    if type(v) is int and not -(1 << 63) <= v < (1 << 63):
+        v = Decimal(v)
+    return F.lit(v).cast(dt)
 
 
 def _widened_type(old_dt, new_dt):
@@ -290,7 +305,7 @@ class LakeTable:
     # ---------------------------------------------------------------- layout
 
     def _bucket_expr(self, key_cols: list[str], n_buckets: int):
-        return F.pmod(F.xxhash64(*[F.col(c) for c in key_cols]), F.lit(n_buckets)).cast("int")
+        return bucket_of(key_cols, n_buckets)
 
     def _write_bucketed(self, df: DataFrame, version: int,
                         sort_cols: list[str] | None = None,
@@ -382,6 +397,10 @@ class LakeTable:
 
     def _read_files(self, spark: SparkSession, schema: T.StructType,
                     entries: list[dict[str, Any]]) -> DataFrame:
+        """Read exactly the manifest's files. Planning runs no Spark job:
+        the schema is given, and session.get_spark raises the parallel
+        listing threshold above the file count of a 4,096-bucket table, so
+        the paths are stat'ed on the driver."""
         if not entries:
             return spark.createDataFrame([], schema)
         paths = [os.path.join(self.root, e["path"]) for e in entries]
@@ -725,7 +744,7 @@ class LakeTable:
     def read_key(self, spark: SparkSession, key_values: dict[str, Any], *,
                  include_meta: bool = False) -> DataFrame:
         """Bucket-pruned point lookup: compute the key's hash bucket on the
-        driver (one 1-row job) and scan ONLY that bucket's files —
+        driver (see :meth:`_bucket_of`) and scan ONLY that bucket's files —
         1/n_buckets of the table instead of a full scan; at 100 TB / 4096
         buckets a lookup touches ~25 GB of files, further cut by parquet
         row-group stats on the key columns inside the bucket."""
@@ -734,7 +753,7 @@ class LakeTable:
             raise ValueError(f"need exactly keys {m.key_cols}")
         sch = m.schema()
         bucket = self._bucket_of(spark, m, key_values)
-        lits = {c: F.lit(key_values[c]).cast(sch[c].dataType)
+        lits = {c: _typed_lit(key_values[c], sch[c].dataType)
                 for c in m.key_cols}
         entries = [e for e in m.files if e["bucket"] == bucket]
         # stats-prune WITHIN the bucket too: hash-scattered keys leave
@@ -755,18 +774,22 @@ class LakeTable:
 
     def _bucket_of(self, spark: SparkSession, m: Manifest,
                    key_values: dict[str, Any]) -> int:
-        """Hash bucket of a concrete key (one 1-row job). xxhash64 is
-        input-TYPE-sensitive (an int literal defaults to IntegerType and
-        hashes differently from a stored LongType column), so each literal
-        is cast to the table's key dtype before hashing — the exact
-        expression _bucket_expr evaluated at write time."""
+        """Hash bucket of a concrete key, hashed as the table's key dtypes
+        (xxhash64 is input-TYPE-sensitive: an int hashes differently as
+        IntegerType and as LongType). String and integral keys hash on the
+        driver with no Spark job (hashing.key_bucket); any other key type,
+        or a value whose Python type does not match its column, falls back
+        to a 1-row job evaluating bucket_of on literals cast to the key
+        dtypes — the expression _bucket_expr evaluated at write time."""
         sch = m.schema()
-        lits = [F.lit(key_values[c]).cast(sch[c].dataType)
-                for c in m.key_cols]
+        types = [sch[c].dataType for c in m.key_cols]
+        values = [key_values[c] for c in m.key_cols]
+        b = key_bucket(values, types, m.n_buckets)
+        if b is not None:
+            return b
+        lits = [_typed_lit(v, dt) for v, dt in zip(values, types)]
         return spark.range(1).select(
-            F.pmod(F.xxhash64(*lits),
-                   F.lit(m.n_buckets)).cast("int").alias("b")
-        ).collect()[0]["b"]
+            bucket_of(lits, m.n_buckets).alias("b")).collect()[0]["b"]
 
     def pruned_entries(self, predicates: list[tuple[str, str, Any]],
                        version: int | None = None) -> list[dict[str, Any]]:
@@ -785,12 +808,14 @@ class LakeTable:
         """Stats-pruned read: ``predicates`` are ``(col, op, value)`` with op
         in {'==','<','<=','>','>='}, ANDed. Files whose footer-collected
         [min,max] cannot satisfy a predicate are dropped at PLANNING time
-        from the manifest alone — no listing job, no footer reads at query
-        time; at 100 TB a selective range over a sorted-ish column (commit
-        seq-no, ingest day) turns a full-table scan into a handful of files,
-        on top of parquet row-group pruning inside the survivors. The same
-        predicates are re-applied to the DataFrame, so results are exact
-        (skipping is a superset filter, never wrong).
+        from the manifest alone — no listing job (see :meth:`_read_files`),
+        no footer reads at query time; at 100 TB a selective range over a
+        sorted-ish column (commit seq-no, ingest day) turns a full-table
+        scan into a handful of files, on top of parquet row-group pruning
+        inside the survivors. The same predicates are re-applied to the
+        DataFrame, each value cast to its column's type (a 25-digit
+        ``_seq`` watermark compares as the decimal it is), so results are
+        exact (skipping is a superset filter, never wrong).
 
         When every key column carries an equality predicate, the key's hash
         bucket prunes as well (stats ∩ bucket) — scan() then subsumes
@@ -801,12 +826,12 @@ class LakeTable:
         if all(k in eq for k in m.key_cols):
             b = self._bucket_of(spark, m, {k: eq[k] for k in m.key_cols})
             entries = [e for e in entries if e["bucket"] == b]
-        df = self._read_files(spark, m.schema(), entries)
+        sch = m.schema()
+        df = self._read_files(spark, sch, entries)
         df = df.filter(~F.col("_deleted"))
         for c, op, v in predicates:
-            col = F.col(c)
-            df = df.filter({"==": col == v, "<": col < v, "<=": col <= v,
-                            ">": col > v, ">=": col >= v}[op])
+            df = df.filter(
+                _SCAN_OPS[op](F.col(c), _typed_lit(v, sch[c].dataType)))
         if not include_meta:
             df = df.drop(*META_COLS)
         return df

@@ -258,9 +258,6 @@ def minhash_lsh_candidates_sha(df: DataFrame, *, id_col: str = "doc_id",
                         F.col("p.b").alias("id_b")).distinct()
 
 
-_HI_NIBBLE = tuple("89abcdef")
-
-
 def simhash_bits(df: DataFrame, *, id_col: str = "doc_id",
                  text_col: str = "text", bits: int = 64) -> DataFrame:
     """Portable SimHash: bit b of a token = high bit of hex nibble b of
@@ -893,20 +890,23 @@ def incremental_winnow_matches(new_docs: DataFrame, index: DataFrame, *,
 
     Contract notes (r8, ADVICE): a document present in BOTH the index
     and the increment is counted once — its index rows are dropped
-    (broadcast anti-join on the increment's ids, "the re-probe wins") so
+    (broadcast anti-join on ``new_docs``' ids, "the re-probe wins") so
     re-probing cannot double-count a doc toward ``max_bucket`` or pair a
-    doc with itself. New-vs-new pairs are emitted in BOTH orientations
-    ((a, b) AND (b, a)) — ``id_new`` enumerates every increment doc's
-    matches, exactly the shape the candidate's DuckDB oracle certifies;
-    canonicalize with ``id_new < id_idx`` downstream if undirected pairs
-    are wanted."""
+    doc with itself. The anti-join keys on every increment doc, not only
+    those that still yield fingerprints: a doc whose new text is too
+    short to fingerprint must lose its stale index rows too. New-vs-new
+    pairs are emitted in BOTH orientations ((a, b) AND (b, a)) —
+    ``id_new`` enumerates every increment doc's matches, exactly the shape
+    the candidate's DuckDB oracle certifies; canonicalize with
+    ``id_new < id_idx`` downstream if undirected pairs are wanted."""
     inc = (winnow_index(new_docs, id_col=id_col, text_col=text_col,
                         k=k, window=window)
            .select("fp_hash", "id"))
     inc_hashes = F.broadcast(inc.select("fp_hash").distinct())
     idx_hits = (index.select("fp_hash", "id")
                 .join(inc_hashes, "fp_hash", "left_semi")
-                .join(F.broadcast(inc.select("id").distinct()),
+                .join(F.broadcast(new_docs.select(F.col(id_col).alias("id"))
+                                  .distinct()),
                       "id", "left_anti")
                 .select("fp_hash", "id"))   # USING-join put "id" first
     combined = idx_hits.union(inc)

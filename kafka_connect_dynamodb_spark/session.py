@@ -5,6 +5,17 @@ AQE on (runtime skew-join splitting replaces the reference's one-shard-one-
 processor ordering), shuffle partitions sized to cores (not 200), Arrow on for
 the pandas-UDF envelope path, UTC session timezone so results compare exactly
 against the DuckDB oracle.
+
+The parallel partition-discovery threshold is raised above any lake table's
+file count. Every lake read (merge's target read, read, scan, read_key,
+count_live, diff, compact) names its files from the manifest; past 32 paths
+Spark's InMemoryFileIndex would otherwise launch a distributed listing job
+(one task per path: 64 tasks at 64 buckets) that only re-stats files the
+manifest already names. The trade: the driver now stats the paths serially,
+which is cheap on a local filesystem; a manifest-backed file index would
+skip the stats altogether but needs JVM code, so it is out of scope. The
+conf is set once per session, never around a read, because the session
+conf is shared with the streaming tail's foreachBatch thread.
 """
 
 from __future__ import annotations
@@ -12,6 +23,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+# Above the 4,096-bucket layout the README sizes for, with room for
+# several files per bucket; see the module docstring.
+_LISTING_THRESHOLD = 1 << 16
 
 
 def _local_dir() -> str:
@@ -100,6 +116,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(_LISTING_THRESHOLD))
         .config("spark.local.dir", _local_dir())
     )
     for k, v in (extra_conf or {}).items():

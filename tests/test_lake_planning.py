@@ -1,0 +1,140 @@
+"""Lake read planning from the manifest: the driver-side bucket hash matches
+Spark's layout function, manifest reads launch no listing job, and scan
+predicates compare as the column's type."""
+
+import random
+import uuid
+from decimal import Decimal
+
+import pytest
+from pyspark.sql import types as T
+
+from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
+from kafka_connect_dynamodb_spark.lake.table import LakeTable
+from kafka_connect_dynamodb_spark.sources.generator import SEQ_BASE
+
+N_BUCKETS = (1, 8, 64, 4096)
+
+
+def _assert_spark_parity(spark, schema: T.StructType, rows):
+    keys = schema.fieldNames()
+    types = [f.dataType for f in schema.fields]
+    got = spark.createDataFrame(rows, schema).select(
+        *keys, *[bucket_of(keys, n).alias(f"b{n}") for n in N_BUCKETS]
+    ).collect()
+    assert len(got) == len(rows)
+    for r in got:
+        vals = [r[k] for k in keys]
+        for n in N_BUCKETS:
+            assert key_bucket(vals, types, n) == r[f"b{n}"], (vals, n)
+
+
+def test_key_bucket_matches_spark_strings(spark):
+    rng = random.Random(7)
+    alphabet = "abcXYZ09/._-éü日本語🙂ß"
+    rows = [("", "x"), ("é", "日本語"), ("🙂" * 9, "p" * 32),
+            ("a" * 31, "b" * 33), ("r" * 64, "q" * 71), ("x", None),
+            (None, "only-path"), (None, None)]
+    rows += [("".join(rng.choice(alphabet) for _ in range(rng.randint(0, 45))),
+              "".join(rng.choice(alphabet) for _ in range(rng.randint(0, 45))))
+             for _ in range(200)]
+    _assert_spark_parity(spark, T.StructType(
+        [T.StructField("repo", T.StringType()),
+         T.StructField("path", T.StringType())]), rows)
+
+
+@pytest.mark.parametrize("dt,lo,hi", [
+    (T.ByteType(), -(1 << 7), (1 << 7) - 1),
+    (T.ShortType(), -(1 << 15), (1 << 15) - 1),
+    (T.IntegerType(), -(1 << 31), (1 << 31) - 1),
+    (T.LongType(), -(1 << 63), (1 << 63) - 1),
+])
+def test_key_bucket_matches_spark_integral(spark, dt, lo, hi):
+    rng = random.Random(11)
+    vals = [lo, hi, 0, -1, 1, None] + [rng.randint(lo, hi) for _ in range(100)]
+    _assert_spark_parity(spark, T.StructType([T.StructField("k", dt)]),
+                         [(v,) for v in vals])
+
+
+def test_key_bucket_matches_spark_composite_long_int(spark):
+    rng = random.Random(3)
+    rows = [(rng.randint(-(1 << 63), (1 << 63) - 1),
+             rng.randint(-(1 << 31), (1 << 31) - 1)) for _ in range(100)]
+    rows += [(None, 5), (7, None), (0, 0)]
+    _assert_spark_parity(spark, T.StructType(
+        [T.StructField("a", T.LongType()),
+         T.StructField("b", T.IntegerType())]), rows)
+
+
+def test_key_bucket_declines_uncovered_pairs():
+    assert key_bucket([1.5], [T.DoubleType()], 8) is None
+    assert key_bucket([5], [T.StringType()], 8) is None
+    assert key_bucket(["5"], [T.LongType()], 8) is None
+    assert key_bucket([True], [T.IntegerType()], 8) is None
+    assert key_bucket([1 << 31], [T.IntegerType()], 8) is None
+
+
+def test_bucket_of_falls_back_to_spark_for_uncovered_key(spark, tmp_path):
+    """A key type the driver hash does not cover still finds its row: the
+    bucket comes from the Spark fallback, same layout as the write."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [(float(i), f"v{i}") for i in range(20)], "k double, v string"),
+        ["k"], n_buckets=8)
+    assert [r.v for r in t.read_key(spark, {"k": 13.0}).collect()] == ["v13"]
+
+
+def test_scan_casts_wide_int_watermark(spark, tmp_path):
+    """A 25-digit ``_seq`` watermark (the generator's own SEQ_BASE width)
+    does not fit a Java long; scan compares it as the decimal column."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [("r", f"p{i}", "v0") for i in range(4)],
+        "repo string, path string, content string"), ["repo", "path"],
+        n_buckets=4)
+    base = int(SEQ_BASE)
+    t.merge(spark, spark.createDataFrame(
+        [("r", f"p{i}", f"v{i}", "u", Decimal(base + i)) for i in range(4)],
+        "repo string, path string, content string, _op string,"
+        " _seq decimal(38,0)"), batch_id=0)
+    w = base + 1
+    assert w >= 10 ** 24
+    got = {r.path for r in t.scan(spark, [("_seq", ">", w)]).collect()}
+    assert got == {"p2", "p3"}
+    got = {r.path for r in t.scan(spark, [("_seq", "<=", w)]).collect()}
+    assert got == {"p0", "p1"}
+
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn`` launches, counted through a job group."""
+    sc = spark.sparkContext
+    group = f"plan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_manifest_reads_launch_no_listing_job(spark, tmp_path):
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [(f"r{i % 7}", f"p{i}", f"v{i}") for i in range(2000)],
+        "repo string, path string, content string"), ["repo", "path"],
+        n_buckets=64)
+    t.merge(spark, spark.createDataFrame(
+        [("r0", "p0", "new", "u", 10)],
+        "repo string, path string, content string, _op string, _seq long"),
+        batch_id=0)
+    m = t.manifest()
+    assert len(m.files) == 64
+    assert _jobs(spark, lambda: t._read_files(spark, m.schema(), m.files)) == 0
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(
+        t.read_key(spark, {"repo": "r0", "path": "p0"}).collect())) == 1
+    assert [r.content for r in rows] == ["new"]
+    rows.clear()
+    assert _jobs(spark, lambda: rows.extend(
+        t.scan(spark, [("_seq", ">", 5)]).collect())) == 1
+    assert [r.content for r in rows] == ["new"]

@@ -1186,3 +1186,22 @@ def test_incremental_winnow_reprobe_counts_doc_once(spark):
         cdf.filter(cdf.doc_id != "n0"), k=8, window=4))
     assert with_reprobe == without and without, (with_reprobe, without)
     assert not any(a == b for a, b in with_reprobe)
+
+
+def test_incremental_winnow_reprobe_without_fingerprints_drops_stale_rows(spark):
+    """A re-probed doc whose NEW text is too short to fingerprint must still
+    lose its index rows: otherwise its stale fingerprints pair it with an
+    increment doc that shares only the OLD text."""
+    from kafka_connect_dynamodb_spark.operators.dedup import (
+        incremental_winnow_matches, winnow_index)
+    shared = "a long shared boilerplate sentence that winnows well"
+    corpus = [("c0", shared + " unique tail zero")]
+    inc = [("c0", "short"), ("n1", shared + " unique tail zero")]
+    cdf = spark.createDataFrame(corpus, "doc_id string, text string")
+    idf = spark.createDataFrame(inc, "doc_id string, text string")
+    idx = winnow_index(cdf, k=8, window=4)
+    assert winnow_index(idf.filter(idf.doc_id == "c0"), k=8,
+                        window=4).count() == 0
+    got = incremental_winnow_matches(idf, idx, k=8, window=4,
+                                     min_shared=2).collect()
+    assert got == [], got
