@@ -31,12 +31,14 @@ work" items 1-3):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import operator
 import os
+import uuid
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -50,6 +52,10 @@ __all__ = ["LakeTable", "Manifest", "CommitConflict"]
 
 META_COLS = ("_seq", "_deleted")
 SEQ_TYPE = "decimal(38,0)"  # 26-digit DynamoDB seq-nos fit (tests use 26 digits)
+
+# commit races a writer absorbs (re-reading the manifest and rebuilding its
+# successor each time) before CommitConflict reaches the caller
+_COMMIT_RETRIES = 4
 
 
 _MAX_STRING_STAT = 256
@@ -302,10 +308,61 @@ class LakeTable:
         self.io.put_if_absent(
             os.path.join(self.log_dir, f"v{m.version:012d}.json"), m.to_json())
 
-    # ---------------------------------------------------------------- layout
+    def _transact(self, attempt: Callable[[Manifest], Manifest]
+                  ) -> Manifest | None:
+        """The optimistic commit loop every writer runs (the Delta log
+        protocol): read the manifest ``m``, let ``attempt(m)`` build its
+        successor (or return ``m`` itself: nothing to commit, and None is
+        returned), then put it if absent. Losing the race to another
+        committer drops the attempt's staged feed delta and reruns
+        ``attempt`` against the new manifest, at most ``_COMMIT_RETRIES``
+        times; orphaned data staging is invisible to readers and reclaimed
+        by :meth:`vacuum`. A won commit that staged a delta publishes it."""
+        for tries in range(_COMMIT_RETRIES + 1):
+            m = self.manifest()
+            new_m = attempt(m)
+            if new_m is m:
+                return None
+            staged = [e["staged"] for e in new_m.change_files[-1:]
+                      if e["version"] == new_m.version]
+            try:
+                self._commit(new_m, parent=m)
+            except CommitConflict:
+                for rel in staged:
+                    self.io.remove_tree(os.path.join(self.root, rel))
+                if tries == _COMMIT_RETRIES:
+                    raise
+                continue
+            if staged:
+                self._heal_changes(new_m)
+            return new_m
 
-    def _bucket_expr(self, key_cols: list[str], n_buckets: int):
-        return bucket_of(key_cols, n_buckets)
+    def _next(self, m: Manifest, lineage_entry: dict[str, Any], *,
+              feed: DataFrame | None = None, **fields) -> Manifest:
+        """The successor of ``m`` with ``fields`` replaced and
+        ``lineage_entry`` appended (the last 50 kept). Its stamp is left
+        for :meth:`_commit`. ``feed`` is written as this version's change
+        delta, STAGED under a hidden ``.stage-`` dir: dot-dirs are invisible
+        to :meth:`stream_changes`' file listing, so a lost or crashed commit
+        can never leak a phantom micro-batch; :meth:`_heal_changes`
+        publishes it to its final path once the commit wins."""
+        version = m.version + 1
+        change_files = fields.pop("change_files", m.change_files)
+        if feed is not None:
+            uid = uuid.uuid4().hex[:8]
+            staged = os.path.join("changes", f".stage-c{version:012d}-{uid}")
+            feed.write.mode("errorifexists").parquet(
+                os.path.join(self.root, staged))
+            change_files = change_files + [{
+                "version": version, "staged": staged,
+                "path": os.path.join("changes",
+                                     f"c{version:012d}-{uid}.parquet")}]
+        return dataclasses.replace(
+            m, version=version, committed_at_ms=0, change_files=change_files,
+            lineage=(m.lineage + [{"commit": version, **lineage_entry}])[-50:],
+            **fields)
+
+    # ---------------------------------------------------------------- layout
 
     def _write_bucketed(self, df: DataFrame, version: int,
                         sort_cols: list[str] | None = None,
@@ -332,7 +389,6 @@ class LakeTable:
         paths, so the suffix is invisible to readers; orphans are
         vacuum-reclaimed.
         """
-        import uuid
         staged = os.path.join(self.root, "data",
                               f"c{version:012d}-{uuid.uuid4().hex[:8]}")
         if zval_col is not None:
@@ -420,16 +476,8 @@ class LakeTable:
         """
         if self.exists():
             raise FileExistsError(f"table already exists at {self.root}")
-        stored = df
-        if seq_col is None:
-            stored = stored.withColumn("_seq", F.lit(0).cast(SEQ_TYPE))
-        else:
-            stored = stored.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
-            if seq_col != "_seq":
-                stored = stored.drop(seq_col)
-        stored = stored.withColumn("_deleted", F.lit(False))
-        data_schema = stored.schema
-        stored = stored.withColumn("_bucket", self._bucket_expr(key_cols, n_buckets))
+        stored, data_schema = self._snapshot_rows(df, seq_col, key_cols,
+                                                  n_buckets)
         entries = self._write_bucketed(stored, 1)
         m = Manifest(version=1, table=table, key_cols=list(key_cols),
                      n_buckets=n_buckets, schema_json=json.dumps(data_schema.jsonValue()),
@@ -437,6 +485,22 @@ class LakeTable:
                      lineage=[{"commit": 1, "op": "create", "files": len(entries)}])
         self._commit(m)
         return m
+
+    @staticmethod
+    def _snapshot_rows(df: DataFrame, seq_col: str | None,
+                       key_cols: list[str], n_buckets: int
+                       ) -> tuple[DataFrame, T.StructType]:
+        """Snapshot rows as stored (``_seq`` from ``seq_col`` or 0,
+        ``_deleted=false``) plus their ``_bucket``, and the stored schema."""
+        if seq_col is None:
+            stored = df.withColumn("_seq", F.lit(0).cast(SEQ_TYPE))
+        else:
+            stored = df.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
+            if seq_col != "_seq":
+                stored = stored.drop(seq_col)
+        stored = stored.withColumn("_deleted", F.lit(False))
+        return (stored.withColumn("_bucket", bucket_of(key_cols, n_buckets)),
+                stored.schema)
 
     def create_empty(self, spark: SparkSession, schema: T.StructType,
                      key_cols: list[str], n_buckets: int = 64,
@@ -448,8 +512,7 @@ class LakeTable:
                 key_cols: list[str] | None = None, *,
                 n_buckets: int | None = None,
                 seq_col: str | None = None,
-                properties: dict[str, Any] | None = None,
-                conflict_retries: int = 4) -> Manifest:
+                properties: dict[str, Any] | None = None) -> Manifest:
         """Truncate-and-reload in ONE atomic manifest commit — the
         danger-zone re-snapshot path (the reference treats resync as a
         first-class recovery, DynamoDBSourceTask.java:318-331).
@@ -467,118 +530,73 @@ class LakeTable:
         records to the topic on resync (DynamoDBSourceTask.java:246-249,318-331),
         and without it a downstream mirror would silently diverge after a
         danger-zone re-snapshot. ``streaming.feed.mirror_changes`` detects
-        the 'r' epoch and truncates its table to it.
+        the 'r' epoch and truncates its table to it. The delta is read back
+        from the staged data files, so ``df`` is evaluated once.
 
-        Losing a commit race (a maintenance job landing mid-resync) retries
-        with the SAME staged files under the next version number. The staged
-        dirs are first RE-HOMED to names embedding the new version: vacuum's
-        in-flight guard only protects staging dirs whose embedded version is
-        ahead of the current version, and after the lost race the original
-        number is <= current — without the re-home a concurrent vacuum could
-        reclaim staged files the retried commit is about to reference."""
-        m = self.manifest()
-        key_cols = list(key_cols) if key_cols is not None else m.key_cols
-        n_buckets = n_buckets if n_buckets is not None else m.n_buckets
-        stored = df
-        if seq_col is None:
-            stored = stored.withColumn("_seq", F.lit(0).cast(SEQ_TYPE))
-        else:
-            stored = stored.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
-            if seq_col != "_seq":
-                stored = stored.drop(seq_col)
-        stored = stored.withColumn("_deleted", F.lit(False))
-        data_schema = stored.schema
-        stored = stored.withColumn("_bucket",
-                                   self._bucket_expr(key_cols, n_buckets))
-        version = m.version + 1
-        entries = self._write_bucketed(stored, version)
-        change_entry: list[dict[str, Any]] = []
-        staged_rel: str | None = None
-        if self.change_feed:
-            import uuid as _uuid
-            uid = _uuid.uuid4().hex[:8]
-            rel = os.path.join("changes", f"c{version:012d}-{uid}.parquet")
-            staged_rel = os.path.join("changes", f".stage-c{version:012d}-{uid}")
-            (stored.drop("_bucket", "_deleted")
-                   .withColumn("_op", F.lit("r"))
-                   .write.mode("errorifexists")
-                   .parquet(os.path.join(self.root, staged_rel)))
-            change_entry = [{"version": version, "path": rel,
-                             "staged": staged_rel, "replace": True}]
-        attempt = 0
-        while True:
-            new_m = Manifest(
-                version=version, table=m.table, key_cols=key_cols,
-                n_buckets=n_buckets,
+        Losing a commit race (a maintenance job landing mid-resync) reruns
+        the attempt in :meth:`_transact` with the SAME staged data files,
+        first RE-HOMED (:meth:`_restage`) to a dir name embedding the new
+        version: vacuum's in-flight guard only protects staging dirs whose
+        embedded version is ahead of the current version, and after the
+        lost race the original number is <= current — without the re-home a
+        concurrent vacuum could reclaim staged files the retried commit is
+        about to reference."""
+        m0 = self.manifest()
+        key_cols = list(key_cols) if key_cols is not None else m0.key_cols
+        n_buckets = n_buckets if n_buckets is not None else m0.n_buckets
+        stored, data_schema = self._snapshot_rows(df, seq_col, key_cols,
+                                                  n_buckets)
+        entries: list[dict[str, Any]] | None = None
+
+        def attempt(m: Manifest) -> Manifest:
+            nonlocal entries
+            version = m.version + 1
+            entries = (self._write_bucketed(stored, version) if entries is None
+                       else self._restage(entries, version))
+            feed = None
+            if self.change_feed:
+                feed = (self._read_files(spark, data_schema, entries)
+                            .drop("_deleted").withColumn("_op", F.lit("r")))
+            return self._next(
+                m, {"op": "replace", "files": len(entries)}, feed=feed,
+                key_cols=key_cols, n_buckets=n_buckets,
                 schema_json=json.dumps(data_schema.jsonValue()),
-                files=entries, committed={}, properties=properties or {},
-                lineage=(m.lineage + [{"commit": version,
-                                       "op": "replace",
-                                       "files": len(entries)}])[-50:],
-                change_files=m.change_files + change_entry)
-            try:
-                self._commit(new_m, parent=m)
-                break
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    if staged_rel is not None:
-                        self.io.remove_tree(os.path.join(self.root, staged_rel))
-                    raise
-                attempt += 1
-                m = self.manifest()
-                version = m.version + 1
-                entries, staged_rel = self._restage(entries, staged_rel,
-                                                    version)
-                if change_entry:
-                    rel = os.path.join(
-                        "changes",
-                        f"c{version:012d}-{_uuid.uuid4().hex[:8]}.parquet")
-                    change_entry = [{"version": version, "path": rel,
-                                     "staged": staged_rel, "replace": True}]
-        if staged_rel is not None:
-            self._heal_changes(new_m)
-        return new_m
+                files=entries, committed={}, properties=properties or {})
 
-    def _restage(self, entries: list[dict[str, Any]], staged_rel: str | None,
-                 version: int) -> tuple[list[dict[str, Any]], str | None]:
-        """Move staged data/delta dirs under names embedding ``version`` and
+        return self._transact(attempt)
+
+    def _restage(self, entries: list[dict[str, Any]],
+                 version: int) -> list[dict[str, Any]]:
+        """Move the staged data dir under a name embedding ``version`` and
         rewrite the entry paths accordingly — keeps a retried replace()'s
         staging AHEAD of the current version so vacuum's in-flight guard
         still covers it. One dir rename per retry on POSIX/HDFS (the data
         is not rewritten); on an object store move_dir is copy+delete, paid
         only on the rare resync-loses-its-commit-race path, and vacuum's
         mtime grace window independently protects the staging either way."""
-        import uuid as _uuid
-        if entries:
-            # all entries share one staging top dir: data/c{old:012d}-{uid};
-            # verify that invariant for EVERY entry before rewriting paths —
-            # a stray entry outside the moved dir would otherwise be silently
-            # pointed at a location nothing was moved to (r4 ADVICE low; a
-            # ValueError, not assert, so -O cannot strip the guard)
-            old_top = entries[0]["path"].split(os.sep)[:2]
-            if len(old_top) < 2 or old_top[0] != "data":
-                raise ValueError(
-                    f"restage: unexpected staged path layout: {entries[0]['path']!r}")
-            old_rel = os.path.join(*old_top)
-            stray = [e["path"] for e in entries
-                     if not e["path"].startswith(old_rel + os.sep)]
-            if stray:
-                raise ValueError(
-                    f"restage: entries span multiple staging dirs "
-                    f"(expected all under {old_rel!r}): {stray[:3]}")
-            new_rel = os.path.join(
-                "data", f"c{version:012d}-{_uuid.uuid4().hex[:8]}")
-            self.io.move_dir(os.path.join(self.root, old_rel),
-                             os.path.join(self.root, new_rel))
-            entries = [{**e, "path": new_rel + e["path"][len(old_rel):]}
-                       for e in entries]
-        if staged_rel is not None:
-            new_staged = os.path.join(
-                "changes", f".stage-c{version:012d}-{_uuid.uuid4().hex[:8]}")
-            self.io.move_dir(os.path.join(self.root, staged_rel),
-                             os.path.join(self.root, new_staged))
-            staged_rel = new_staged
-        return entries, staged_rel
+        if not entries:
+            return entries
+        # all entries share one staging top dir: data/c{old:012d}-{uid};
+        # verify that invariant for EVERY entry before rewriting paths —
+        # a stray entry outside the moved dir would otherwise be silently
+        # pointed at a location nothing was moved to (r4 ADVICE low; a
+        # ValueError, not assert, so -O cannot strip the guard)
+        old_top = entries[0]["path"].split(os.sep)[:2]
+        if len(old_top) < 2 or old_top[0] != "data":
+            raise ValueError(
+                f"restage: unexpected staged path layout: {entries[0]['path']!r}")
+        old_rel = os.path.join(*old_top)
+        stray = [e["path"] for e in entries
+                 if not e["path"].startswith(old_rel + os.sep)]
+        if stray:
+            raise ValueError(
+                f"restage: entries span multiple staging dirs "
+                f"(expected all under {old_rel!r}): {stray[:3]}")
+        new_rel = os.path.join("data", f"c{version:012d}-{uuid.uuid4().hex[:8]}")
+        self.io.move_dir(os.path.join(self.root, old_rel),
+                         os.path.join(self.root, new_rel))
+        return [{**e, "path": new_rel + e["path"][len(old_rel):]}
+                for e in entries]
 
     # ------------------------------------------------------------------ read
 
@@ -780,7 +798,7 @@ class LakeTable:
         driver with no Spark job (hashing.key_bucket); any other key type,
         or a value whose Python type does not match its column, falls back
         to a 1-row job evaluating bucket_of on literals cast to the key
-        dtypes — the expression _bucket_expr evaluated at write time."""
+        dtypes — the expression every write evaluates."""
         sch = m.schema()
         types = [sch[c].dataType for c in m.key_cols]
         values = [key_values[c] for c in m.key_cols]
@@ -846,8 +864,7 @@ class LakeTable:
 
     def merge(self, spark: SparkSession, updates: DataFrame, *,
               batch_id: int | None = None, source: str = "default",
-              op_col: str = "_op", seq_col: str = "_seq",
-              conflict_retries: int = 2) -> dict[str, Any]:
+              op_col: str = "_op", seq_col: str = "_seq") -> dict[str, Any]:
         """Apply a batch of LWW-deduped changes (one row per key, columns:
         keys + payload + op_col + seq_col).
 
@@ -859,30 +876,30 @@ class LakeTable:
         Exactly-once: if ``batch_id <= committed[source]`` the call is a no-op
         (foreachBatch redelivery after crash).
 
-        Multi-writer liveness: if another committer (a maintenance job, a
-        concurrent stream) wins the optimistic commit race, the merge
-        re-reads the new manifest and recomputes against it, up to
-        ``conflict_retries`` times — the standard lakehouse
-        read-check-recompute-commit loop. Orphaned staging from lost
-        attempts is invisible to readers and reclaimed by :meth:`vacuum`.
+        Multi-writer liveness: the merge runs inside :meth:`_transact`, so
+        if another committer (a maintenance job, a concurrent stream) wins
+        the optimistic commit race, the batch is re-checked and recomputed
+        against the new manifest — the standard lakehouse
+        read-check-recompute-commit loop.
         """
-        attempt = 0
-        while True:
-            m = self.manifest()
+        def attempt(m: Manifest) -> Manifest:
             if batch_id is not None and batch_id <= m.committed.get(source, -1):
-                return {"skipped": True, "batch_id": batch_id}
-            try:
-                return self._merge_once(spark, updates, m,
-                                        batch_id=batch_id, source=source,
-                                        op_col=op_col, seq_col=seq_col)
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+                return m
+            return self._merge_attempt(spark, updates, m, batch_id=batch_id,
+                                       source=source, op_col=op_col,
+                                       seq_col=seq_col)
 
-    def _merge_once(self, spark: SparkSession, updates: DataFrame,
-                    m: Manifest, *, batch_id: int | None, source: str,
-                    op_col: str, seq_col: str) -> dict[str, Any]:
+        new_m = self._transact(attempt)
+        if new_m is None:
+            return {"skipped": True, "batch_id": batch_id}
+        e = new_m.lineage[-1]
+        return {"skipped": False, "batch_id": batch_id,
+                "version": new_m.version,
+                **{k: e[k] for k in ("rows_in", "buckets_touched") if k in e}}
+
+    def _merge_attempt(self, spark: SparkSession, updates: DataFrame,
+                       m: Manifest, *, batch_id: int | None, source: str,
+                       op_col: str, seq_col: str) -> Manifest:
         keys = m.key_cols
         upd = updates.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
         if op_col != "_op":
@@ -934,17 +951,19 @@ class LakeTable:
             + new_fields)
         evolved_names = [f.name for f in evolved.fields]
 
-        upd = upd.withColumn("_bucket", self._bucket_expr(keys, m.n_buckets)).persist()
+        upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets)).persist()
+        committed = dict(m.committed)
+        if batch_id is not None:
+            committed[source] = batch_id
+        lineage = {"batch_id": batch_id, "source": source, "op": "merge"}
         try:
             # one partial-agg job yields both the touched-bucket set (pruning)
             # and the batch row count (metrics) — ≤ n_buckets rows collected
             bucket_counts = upd.groupBy("_bucket").count().collect()
             n_upd = sum(r["count"] for r in bucket_counts)
             if n_upd == 0:
-                new_m = self._advance(m, m.files, batch_id, source,
-                                      {"op": "merge", "rows_in": 0})
-                return {"skipped": False, "batch_id": batch_id, "rows_in": 0,
-                        "version": new_m.version}
+                return self._next(m, {**lineage, "rows_in": 0},
+                                  committed=committed)
 
             # --- bucket pruning: only buckets the batch touches are rewritten
             touched = sorted(r["_bucket"] for r in bucket_counts)
@@ -990,26 +1009,15 @@ class LakeTable:
                   for c in payload_cols],
                 F.when(take_src, F.col("s._seq")).otherwise(F.col("t._seq")).alias("_seq"),
                 F.when(take_src, F.col("s._deleted")).otherwise(F.col("t._deleted")).alias("_deleted"),
-            ).withColumn("_bucket", self._bucket_expr(keys, m.n_buckets))
+            ).withColumn("_bucket", bucket_of(keys, m.n_buckets))
 
-            version = m.version + 1
-            change_entry: list[dict[str, Any]] = []
-            staged_rel: str | None = None
+            new_entries = self._write_bucketed(merged, m.version + 1)
+            feed_df = None
             if self.change_feed:
                 # CDC-OUT: this commit's compacted delta (the LWW winners as
                 # submitted, deletes as _op='d' tombstone rows). Cost is one
                 # extra write of ~|keys| rows — the winners are already
                 # cached by apply_batch, no extra source pass.
-                # The delta is STAGED under a hidden prefix (dot-dirs are
-                # invisible to stream_changes' file listing) and published
-                # to its final path only after the manifest commit wins —
-                # a lost commit attempt or crash can therefore never leak a
-                # phantom/duplicate micro-batch to streaming consumers.
-                import uuid as _uuid
-                uid = _uuid.uuid4().hex[:8]
-                rel = os.path.join("changes", f"c{version:012d}-{uid}.parquet")
-                staged_rel = os.path.join("changes",
-                                          f".stage-c{version:012d}-{uid}")
                 if self.feed_preimages:
                     # Delta-CDF-shaped delta: APPLIED winners only, plus the
                     # pre-image of every live row they overwrote/deleted
@@ -1036,51 +1044,16 @@ class LakeTable:
                     feed_df = post.unionByName(pre)
                 else:
                     feed_df = upd.drop("_bucket", "_deleted")
-                (feed_df
-                    .write.mode("errorifexists")
-                    .parquet(os.path.join(self.root, staged_rel)))
-                change_entry = [{"version": version, "path": rel,
-                                 "staged": staged_rel}]
-            new_entries = self._write_bucketed(merged, version)
-            try:
-                new_m = self._advance(
-                    m, keep_entries + new_entries, batch_id, source,
-                    {"op": "merge", "rows_in": n_upd, "buckets_touched": len(touched),
-                     "files_rewritten": len(tgt_entries), "files_written": len(new_entries)},
-                    evolved if (new_fields or widened) else None, version,
-                    change_files=change_entry)
-            except CommitConflict:
-                if staged_rel is not None:
-                    # lost the commit race: the staged delta belongs to no
-                    # committed manifest — drop it before the retry re-stages
-                    self.io.remove_tree(os.path.join(self.root, staged_rel))
-                raise
-            if staged_rel is not None:
-                self._heal_changes(new_m)
-            return {"skipped": False, "batch_id": batch_id, "rows_in": n_upd,
-                    "buckets_touched": len(touched), "version": new_m.version}
+            return self._next(
+                m, {**lineage, "rows_in": n_upd, "buckets_touched": len(touched),
+                    "files_rewritten": len(tgt_entries),
+                    "files_written": len(new_entries)},
+                feed=feed_df, files=keep_entries + new_entries,
+                committed=committed,
+                schema_json=json.dumps(evolved.jsonValue()) if (
+                    new_fields or widened) else m.schema_json)
         finally:
             upd.unpersist()
-
-    def _advance(self, m: Manifest, files, batch_id, source,
-                 lineage_entry: dict[str, Any], evolved: T.StructType | None = None,
-                 version: int | None = None,
-                 change_files: list[dict[str, Any]] | None = None) -> Manifest:
-        version = version if version is not None else m.version + 1
-        committed = dict(m.committed)
-        if batch_id is not None:
-            committed[source] = batch_id
-        lineage_entry = {"commit": version, "batch_id": batch_id, "source": source,
-                         **lineage_entry}
-        new_m = Manifest(
-            version=version, table=m.table, key_cols=m.key_cols,
-            n_buckets=m.n_buckets,
-            schema_json=json.dumps(evolved.jsonValue()) if evolved is not None else m.schema_json,
-            files=files, committed=committed, properties=m.properties,
-            lineage=(m.lineage + [lineage_entry])[-50:],
-            change_files=m.change_files + (change_files or []))
-        self._commit(new_m, parent=m)
-        return new_m
 
     # ------------------------------------------------------------ change feed
 
@@ -1174,39 +1147,23 @@ class LakeTable:
 
     # ------------------------------------------------------------- properties
 
-    def update_properties(self, props: dict[str, Any], *,
-                          conflict_retries: int = 4) -> Manifest:
+    def update_properties(self, props: dict[str, Any]) -> Manifest:
         """Commit a metadata-only version carrying updated properties
         (state-doc persistence — SourceInfo.java:107-125 analog). Metadata
         commits are cheap, so losing a race just re-reads and re-applies."""
-        attempt = 0
-        while True:
-            m = self.manifest()
-            new_m = Manifest(version=m.version + 1, table=m.table, key_cols=m.key_cols,
-                             n_buckets=m.n_buckets, schema_json=m.schema_json,
-                             files=m.files, committed=m.committed,
-                             properties={**m.properties, **props},
-                             lineage=(m.lineage + [{"commit": m.version + 1, "op": "props"}])[-50:],
-                             change_files=m.change_files)
-            try:
-                self._commit(new_m, parent=m)
-                return new_m
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+        return self._transact(lambda m: self._next(
+            m, {"op": "props"}, properties={**m.properties, **props}))
 
     # ------------------------------------------------------------ maintenance
 
     def compact(self, spark: SparkSession, *, drop_tombstones_below_seq: int | None = None,
                 target_buckets: list[int] | None = None,
                 zorder_cols: list[str] | None = None,
-                zorder_files_per_bucket: int = 4,
-                conflict_retries: int = 1) -> Manifest:
+                zorder_files_per_bucket: int = 4) -> Manifest:
         """Rewrite buckets to one file each; optionally purge tombstones whose
         _seq is below a watermark (no older event can still arrive).
         Losing a commit race to a concurrent merge re-reads the new manifest
-        and recompacts (bounded by ``conflict_retries``).
+        and recompacts (:meth:`_transact`).
 
         ``zorder_cols`` switches the rewrite from linear key clustering to
         Z-ORDER layout (``lake/zorder.py``): each bucket is split into
@@ -1217,50 +1174,32 @@ class LakeTable:
         :meth:`scan` skips files for predicates on any of them — the
         multi-column data-skipping layout (Delta OSS ZORDER BY). One extra
         quantile job at compaction time; read paths are unchanged."""
-        try:
-            return self._compact_once(spark, drop_tombstones_below_seq,
-                                      target_buckets, zorder_cols,
-                                      zorder_files_per_bucket)
-        except CommitConflict:
-            if conflict_retries <= 0:
-                raise
-            return self.compact(spark,
-                                drop_tombstones_below_seq=drop_tombstones_below_seq,
-                                target_buckets=target_buckets,
-                                zorder_cols=zorder_cols,
-                                zorder_files_per_bucket=zorder_files_per_bucket,
-                                conflict_retries=conflict_retries - 1)
+        def attempt(m: Manifest) -> Manifest:
+            buckets = (sorted({e["bucket"] for e in m.files})
+                       if target_buckets is None else target_buckets)
+            bset = set(buckets)
+            tgt_entries = [e for e in m.files if e["bucket"] in bset]
+            keep_entries = [e for e in m.files if e["bucket"] not in bset]
+            df = self._read_files(spark, m.schema(), tgt_entries)
+            if drop_tombstones_below_seq is not None:
+                df = df.filter(~(F.col("_deleted") &
+                                 (F.col("_seq") < F.lit(drop_tombstones_below_seq))))
+            df = df.withColumn("_bucket", bucket_of(m.key_cols, m.n_buckets))
+            op = {"batch_id": None, "source": "compact", "op": "compact"}
+            if zorder_cols:
+                from .zorder import with_zvalue
+                df = with_zvalue(df, zorder_cols)
+                new_entries = self._write_bucketed(
+                    df, m.version + 1, sort_cols=m.key_cols, zval_col="_zval",
+                    n_range_parts=max(1, len(buckets)) * zorder_files_per_bucket)
+                op["zorder"] = list(zorder_cols)
+            else:
+                new_entries = self._write_bucketed(df, m.version + 1,
+                                                   sort_cols=m.key_cols)
+            return self._next(m, {**op, "files_rewritten": len(tgt_entries)},
+                              files=keep_entries + new_entries)
 
-    def _compact_once(self, spark: SparkSession,
-                      drop_tombstones_below_seq: int | None,
-                      target_buckets: list[int] | None,
-                      zorder_cols: list[str] | None = None,
-                      zorder_files_per_bucket: int = 4) -> Manifest:
-        m = self.manifest()
-        buckets = sorted({e["bucket"] for e in m.files}) if target_buckets is None else target_buckets
-        bset = set(buckets)
-        tgt_entries = [e for e in m.files if e["bucket"] in bset]
-        keep_entries = [e for e in m.files if e["bucket"] not in bset]
-        df = self._read_files(spark, m.schema(), tgt_entries)
-        if drop_tombstones_below_seq is not None:
-            df = df.filter(~(F.col("_deleted") &
-                             (F.col("_seq") < F.lit(drop_tombstones_below_seq))))
-        df = df.withColumn("_bucket", self._bucket_expr(m.key_cols, m.n_buckets))
-        version = m.version + 1
-        if zorder_cols:
-            from .zorder import with_zvalue
-            df = with_zvalue(df, zorder_cols)
-            new_entries = self._write_bucketed(
-                df, version, sort_cols=m.key_cols, zval_col="_zval",
-                n_range_parts=max(1, len(buckets)) * zorder_files_per_bucket)
-            op = {"op": "compact", "zorder": list(zorder_cols),
-                  "files_rewritten": len(tgt_entries)}
-        else:
-            new_entries = self._write_bucketed(df, version,
-                                               sort_cols=m.key_cols)
-            op = {"op": "compact", "files_rewritten": len(tgt_entries)}
-        return self._advance(m, keep_entries + new_entries, None, "compact",
-                             op, None, version)
+        return self._transact(attempt)
 
     def compact_small_files(self, spark: SparkSession, *,
                             max_files_per_bucket: int = 4) -> Manifest | None:
@@ -1294,8 +1233,7 @@ class LakeTable:
             self.io.delete_file(os.path.join(self.log_dir, f"v{v:012d}.json"))
         return len(victims)
 
-    def expire_change_feed(self, *, below_version: int,
-                           conflict_retries: int = 4) -> int:
+    def expire_change_feed(self, *, below_version: int) -> int:
         """Change-feed retention: commit a metadata-only version whose
         ``change_files`` drops entries below ``below_version``. Without this
         the feed list (and its delta dirs) grows with commit count forever.
@@ -1305,28 +1243,16 @@ class LakeTable:
         a consumer needing older history must re-bootstrap from a snapshot
         (exactly Kafka's compacted-topic contract). Returns entries dropped.
         """
-        attempt = 0
-        while True:
-            m = self.manifest()
+        def attempt(m: Manifest) -> Manifest:
             kept = [e for e in m.change_files if e["version"] >= below_version]
-            dropped = len(m.change_files) - len(kept)
-            if dropped == 0:
-                return 0
-            new_m = Manifest(
-                version=m.version + 1, table=m.table, key_cols=m.key_cols,
-                n_buckets=m.n_buckets, schema_json=m.schema_json,
-                files=m.files, committed=m.committed, properties=m.properties,
-                lineage=(m.lineage + [{"commit": m.version + 1,
-                                       "op": "expire_change_feed",
-                                       "dropped": dropped}])[-50:],
-                change_files=kept)
-            try:
-                self._commit(new_m, parent=m)
-                return dropped
-            except CommitConflict:
-                if attempt >= conflict_retries:
-                    raise
-                attempt += 1
+            if len(kept) == len(m.change_files):
+                return m
+            return self._next(m, {"op": "expire_change_feed",
+                                  "dropped": len(m.change_files) - len(kept)},
+                              change_files=kept)
+
+        new_m = self._transact(attempt)
+        return 0 if new_m is None else new_m.lineage[-1]["dropped"]
 
     @staticmethod
     def _staging_version(name: str) -> int:

@@ -5,7 +5,7 @@ reference's per-record ``sync()`` loop (DynamoDBSourceTask.java:276-371):
 
 raw events
   -> F2 pre-init-sync drop (filters.pre_init_sync_filter)
-  -> F3 danger-zone guard (batch-level min-ts aggregate)
+  -> F3 danger-zone guard (min-ts observe metric on the same events pass)
   -> F6 op decode + F1 image projection (JVM CASE/coalesce)
   -> parse only the small ``keys`` envelope per event (cheap from_json)
   -> F5 parse-error drop
@@ -46,7 +46,6 @@ class DangerZoneError(RuntimeError):
 
 
 def decode_events(df: DataFrame, *, col: str = "new_image",
-                  extra_fields: list[str] | None = None,
                   discover_fields: bool = False) -> tuple[DataFrame, list[str]]:
     """Decode an AttributeValue-envelope JSON column into typed columns.
 
@@ -57,7 +56,7 @@ def decode_events(df: DataFrame, *, col: str = "new_image",
     """
     out = df.withColumn("_m", F.from_json(F.col(col), TAGGED_MAP))
 
-    fields = list(PAYLOAD_FIELDS) + list(extra_fields or [])
+    fields = list(PAYLOAD_FIELDS)
     if discover_fields:
         known = set(fields)
         found = (out.select(F.explode(F.map_keys("_m")).alias("k"))
@@ -74,8 +73,7 @@ def decode_events(df: DataFrame, *, col: str = "new_image",
 
 
 def prepare_winners(df: DataFrame, *,
-                    init_sync_start: datetime | None = None,
-                    now: datetime | None = None) -> DataFrame:
+                    init_sync_start: datetime | None = None) -> DataFrame:
     """Filters + key-parse + LWW dedup: one row per key, image still raw.
 
     This is the only full-pass-over-events stage; callers persist its result
@@ -91,8 +89,6 @@ def prepare_winners(df: DataFrame, *,
     final state is identical to the reference's per-record skip
     (DynamoDBSourceTask.java:363-367).
     """
-    if now is not None and filters.danger_zone_breached(df, now):
-        raise DangerZoneError("batch contains events older than the 20h danger zone")
     if init_sync_start is not None:
         df = filters.pre_init_sync_filter(df, init_sync_start)
 
@@ -120,31 +116,14 @@ def prepare_winners(df: DataFrame, *,
 
 
 def decode_winners(winners: DataFrame, *,
-                   extra_fields: list[str] | None = None,
                    discover_fields: bool = False) -> DataFrame:
     """Decode the post-dedup winners' image envelope: O(|keys|) JSON work,
-    not O(|events|) (SURVEY §3.3 hot-path note)."""
+    not O(|events|) (SURVEY §3.3 hot-path note). Returns one merge-ready
+    row per key (columns: repo, path, payload..., _op, _seq)."""
     decoded, fields = decode_events(winners, col="_img",
-                                    extra_fields=extra_fields,
                                     discover_fields=discover_fields)
     payload = [f for f in fields if f not in KEY_FIELDS]
     return decoded.select(*KEY_FIELDS, *payload, "_op", "_seq")
-
-
-def prepare_batch(df: DataFrame, *,
-                  init_sync_start: datetime | None = None,
-                  now: datetime | None = None,
-                  extra_fields: list[str] | None = None,
-                  discover_fields: bool = False) -> DataFrame:
-    """Filters + key-parse + LWW dedup + winner decode; returns one
-    merge-ready row per key (columns: repo, path, payload..., _op, _seq).
-
-    The per-event work is minimal (op CASE + small keys-envelope parse); the
-    full image parse and schema discovery run on the post-dedup winners.
-    """
-    winners = prepare_winners(df, init_sync_start=init_sync_start, now=now)
-    return decode_winners(winners, extra_fields=extra_fields,
-                          discover_fields=discover_fields)
 
 
 def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,

@@ -61,26 +61,15 @@ def pre_init_sync_filter(df: DataFrame, init_sync_start: datetime,
 
 def danger_cutoff(now: datetime,
                   danger_hours: int = DANGER_ZONE_HOURS) -> datetime:
-    """The danger-zone boundary as a session-TZ-naive (UTC) datetime —
-    directly comparable to Spark-returned timestamps."""
+    """F3: the danger-zone boundary as a session-TZ-naive (UTC) datetime —
+    directly comparable to Spark-returned timestamps. An event at or below
+    it may have expired from the 24h stream, so the batch is abandoned and
+    INIT_SYNC re-run (DynamoDBSourceTask.java:318-331,379-381); apply_batch
+    compares it with the batch's observed min(ts)."""
     cutoff = now - timedelta(hours=danger_hours)
     if cutoff.tzinfo is not None:
         cutoff = cutoff.astimezone(timezone.utc).replace(tzinfo=None)
     return cutoff
-
-
-def danger_zone_breached(df: DataFrame, now: datetime, ts_col: str = "ts",
-                         danger_hours: int = DANGER_ZONE_HOURS) -> bool:
-    """F3: True if any event is older than now-20h => events may have expired
-    from the 24h stream; caller must abandon the batch and re-run INIT_SYNC
-    (DynamoDBSourceTask.java:318-331,379-381).
-
-    Batch-level min(ts) aggregate instead of a per-record check — one partial
-    agg over the micro-batch, evaluated before any merge work.
-    """
-    cutoff = danger_cutoff(now, danger_hours)
-    row = df.agg(F.min(ts_col).alias("min_ts")).collect()[0]
-    return row.min_ts is not None and row.min_ts <= cutoff
 
 
 def drop_parse_errors(df: DataFrame, required: list[str]) -> DataFrame:

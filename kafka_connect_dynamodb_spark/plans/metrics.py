@@ -5,7 +5,7 @@ we upgrade to first-class observability).
 Three layers:
 
 * **Per-commit lineage** — every manifest records {commit, batch_id, source,
-  rows_in, buckets_touched, files_rewritten/written} (lake/table.py::_advance);
+  rows_in, buckets_touched, files_rewritten/written} (lake/table.py::_next);
   ``lineage_frame`` exposes it as a DataFrame for SQL over commit history.
 * **Streaming progress** — ``TailMetricsListener`` captures per-micro-batch
   input rows, processing rate and durations from the Structured Streaming

@@ -9,7 +9,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
-from kafka_connect_dynamodb_spark.operators.apply import DangerZoneError, prepare_batch
+from kafka_connect_dynamodb_spark.operators.apply import (
+    DangerZoneError, decode_winners, prepare_winners)
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.plans.state import InitSyncStatus
 from kafka_connect_dynamodb_spark.sources.generator import (
@@ -107,7 +108,7 @@ def test_prepare_batch_is_fully_jvm(spark):
     """The hot path must contain no Python row processing: no BatchEvalPython
     / ArrowEvalPython / mapInPandas nodes in the physical plan."""
     events = change_events(spark, 50, 200)
-    plan = prepare_batch(events)._sc._jvm if False else None
-    explained = prepare_batch(events)._jdf.queryExecution().executedPlan().toString()
+    batch = decode_winners(prepare_winners(events))
+    explained = batch._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert marker not in explained

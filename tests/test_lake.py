@@ -4,7 +4,8 @@ idempotent commits, compaction, time travel."""
 import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_dynamodb_spark.lake.table import CommitConflict, LakeTable, Manifest
+from kafka_connect_dynamodb_spark.lake.table import (
+    _COMMIT_RETRIES, CommitConflict, LakeTable, Manifest)
 
 
 BASE = [("r1", "p1", "v1"), ("r1", "p2", "v2"), ("r2", "p1", "v3")]
@@ -184,7 +185,7 @@ def test_merge_retries_on_commit_conflict(spark, tmp_path):
 
 def test_merge_conflict_exhausts_retries(spark, tmp_path):
     """With a racer that wins EVERY attempt, merge raises CommitConflict
-    after conflict_retries recomputes instead of looping forever."""
+    after _COMMIT_RETRIES recomputes instead of looping forever."""
     from kafka_connect_dynamodb_spark.lake.commitio import PosixCommitIO
 
     t = _table(spark, tmp_path)
@@ -202,8 +203,158 @@ def test_merge_conflict_exhausts_retries(spark, tmp_path):
     t.io = AlwaysRace()
     with pytest.raises(CommitConflict):
         t.merge(spark, _upd(spark, [("r1", "p1", "X", "u", 9)]),
-                batch_id=0, source="s", conflict_retries=2)
-    assert t.io.attempts == 3            # initial try + 2 retries
+                batch_id=0, source="s")
+    assert t.io.attempts == _COMMIT_RETRIES + 1   # initial try + retries
+
+
+def _feed_table(spark, tmp_path):
+    """A change_feed table at version 2 (create, then one merge whose delta
+    gives expire_change_feed something to drop)."""
+    t = LakeTable(str(tmp_path / "tbl"), change_feed=True)
+    t.create(spark, spark.createDataFrame(BASE, SCHEMA), ["repo", "path"],
+             n_buckets=4)
+    t.merge(spark, _upd(spark, [("r2", "p1", "v3b", "u", 3)]),
+            batch_id=0, source="setup")
+    return t
+
+
+def _content(spark, t):
+    return {(r.repo, r.path): r.content for r in t.read(spark).collect()}
+
+
+def _check_merge(spark, t, res):
+    assert res["version"] == 4 and res["rows_in"] == 1
+    assert _content(spark, t)[("r1", "p1")] == "NEW"
+    feed = t.changes(spark, from_version=4).collect()
+    assert [(r.repo, r.path, r.content, r._op) for r in feed] == [
+        ("r1", "p1", "NEW", "u")]
+
+
+def _check_replace(spark, t, m):
+    assert m.version == 4 and m.properties == {}
+    assert _content(spark, t) == {("r1", "p1"): "NEW", ("r9", "p9"): "n"}
+    feed = t.changes(spark, from_version=4).collect()
+    assert sorted((r.repo, r.path, r.content, r._op) for r in feed) == [
+        ("r1", "p1", "NEW", "r"), ("r9", "p9", "n", "r")]
+
+
+def _check_props(spark, t, m):
+    assert m.version == 4
+    assert m.properties == {"racer": "yes", "mine": "yes"}
+
+
+def _check_compact(spark, t, m):
+    assert m.version == 4 and m.lineage[-1]["op"] == "compact"
+    buckets = [e["bucket"] for e in m.files]
+    assert len(buckets) == len(set(buckets))          # one file per bucket
+    assert _content(spark, t) == {("r1", "p1"): "v1", ("r1", "p2"): "v2",
+                                  ("r2", "p1"): "v3b"}
+
+
+def _check_expire(spark, t, dropped):
+    assert dropped == 1 and t.current_version() == 4
+    assert t.manifest().change_files == []
+
+
+_WRITERS = {
+    "merge": (lambda spark, t: t.merge(
+        spark, _upd(spark, [("r1", "p1", "NEW", "u", 5)]),
+        batch_id=0, source="s"), _check_merge),
+    "replace": (lambda spark, t: t.replace(spark, spark.createDataFrame(
+        [("r1", "p1", "NEW"), ("r9", "p9", "n")], SCHEMA)), _check_replace),
+    "update_properties": (lambda spark, t: t.update_properties(
+        {"mine": "yes"}), _check_props),
+    "compact": (lambda spark, t: t.compact(spark), _check_compact),
+    "expire_change_feed": (lambda spark, t: t.expire_change_feed(
+        below_version=3), _check_expire),
+}
+
+
+@pytest.mark.parametrize("writer", list(_WRITERS))
+def test_writer_lands_after_a_lost_commit_race(spark, tmp_path, writer):
+    """Every LakeTable writer shares one commit loop: a racer that steals
+    the version once makes the writer rebuild against the new manifest and
+    land on the next version with the right content."""
+    from kafka_connect_dynamodb_spark.lake.commitio import PosixCommitIO
+
+    t = _feed_table(spark, tmp_path)
+    racer = LakeTable(t.root)
+
+    class RaceOnce(PosixCommitIO):
+        raced = False
+
+        def put_if_absent(self, path, payload):
+            if not self.raced:
+                self.raced = True
+                racer.update_properties({"racer": "yes"})   # steals v3
+            return super().put_if_absent(path, payload)
+
+    run, check = _WRITERS[writer]
+    t.io = RaceOnce()
+    out = run(spark, t)
+    assert t.io.raced
+    check(spark, t, out)
+
+
+@pytest.mark.parametrize("writer", list(_WRITERS))
+def test_writer_conflict_exhausts_retries(spark, tmp_path, writer):
+    """A racer that wins EVERY attempt: each writer gives up with
+    CommitConflict after exactly _COMMIT_RETRIES + 1 attempts, and no lost
+    attempt leaves a staged feed delta behind."""
+    import os
+
+    from kafka_connect_dynamodb_spark.lake.commitio import PosixCommitIO
+
+    t = _feed_table(spark, tmp_path)
+    racer = LakeTable(t.root)
+
+    class AlwaysRace(PosixCommitIO):
+        attempts = 0
+
+        def put_if_absent(self, path, payload):
+            self.attempts += 1
+            racer.update_properties({"n": str(self.attempts)})
+            return super().put_if_absent(path, payload)
+
+    run, _ = _WRITERS[writer]
+    t.io = AlwaysRace()
+    with pytest.raises(CommitConflict):
+        run(spark, t)
+    assert t.io.attempts == _COMMIT_RETRIES + 1
+    changes_dir = os.path.join(t.root, "changes")
+    assert not [d for d in os.listdir(changes_dir) if d.startswith(".stage-")]
+    # nothing of the writer's landed: only the racer's commits followed v2
+    assert t.current_version() == 2 + _COMMIT_RETRIES + 1
+    assert {e["op"] for e in t.manifest().lineage[2:]} == {"props"}
+
+
+def test_replace_evaluates_snapshot_once_on_change_feed_table(spark, tmp_path):
+    """replace() on a change_feed table reads its 'r' feed delta back from
+    the staged data files: the snapshot source is evaluated once, and the
+    delta is exactly the new table."""
+    t = LakeTable(str(tmp_path / "tbl"), change_feed=True)
+    t.create(spark, spark.createDataFrame(BASE, SCHEMA), ["repo", "path"],
+             n_buckets=4)
+    evals = spark.sparkContext.accumulator(0)
+
+    @F.udf("string")
+    def counted(s):
+        evals.add(1)
+        return s
+
+    snap = spark.range(100).select(
+        F.lit("r").alias("repo"), F.col("id").cast("string").alias("path"),
+        counted(F.concat(F.lit("c"), F.col("id").cast("string")))
+        .alias("content"))
+    m = t.replace(spark, snap)
+    assert evals.value == 100
+
+    cols = ["repo", "path", "content", "_seq"]
+    feed = t.changes(spark, from_version=m.version)
+    assert {r._op for r in feed.select("_op").collect()} == {"r"}
+    assert sorted(feed.select(*cols).collect()) == \
+        sorted(t.read(spark, include_meta=True).select(*cols).collect())
+    assert feed.count() == 100
 
 
 def test_crashed_staging_does_not_block_redelivery(spark, tmp_path):

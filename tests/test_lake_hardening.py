@@ -14,7 +14,8 @@ from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, ObjectStoreCommitIO, PosixCommitIO, RenameCommitIO)
-from kafka_connect_dynamodb_spark.lake.table import LakeTable, Manifest
+from kafka_connect_dynamodb_spark.lake.table import (
+    _COMMIT_RETRIES, LakeTable, Manifest)
 
 BASE = [("r1", "p1", "v1"), ("r1", "p2", "v2"), ("r2", "p1", "v3")]
 
@@ -245,8 +246,8 @@ def test_merge_conflict_exhausts_retries_either_impl(spark, tmp_path, impl):
     t.io = AlwaysRace()
     with pytest.raises(CommitConflict):
         t.merge(spark, _upd(spark, [("r1", "p1", "X", "u", 9)]),
-                batch_id=0, source="s", conflict_retries=2)
-    assert t.io.attempts == 3
+                batch_id=0, source="s")
+    assert t.io.attempts == _COMMIT_RETRIES + 1
 
 
 def test_rename_commitio_end_to_end_table(spark, tmp_path):
