@@ -1,4 +1,5 @@
-"""Minimal ACID lake table: versioned parquet + atomic manifest log + COW MERGE.
+"""Minimal ACID lake table: versioned parquet + atomic manifest log +
+merge-on-read deltas.
 
 No Iceberg/Delta jars ship in this image, so the engine carries its own small
 lakehouse layer with the same properties the design needs (SURVEY §4 "custom
@@ -8,14 +9,21 @@ work" items 1-3):
   its hash bucket. Commit = write-temp + ``os.link`` (fails if the version
   exists → optimistic concurrency, single-winner). Readers see the max
   committed version; crashes leave only unreferenced temp files.
-* **Hash-bucket layout** — every data file belongs to one bucket
-  ``pmod(xxhash64(repo,path), n_buckets)``. A MERGE touches only the buckets
-  its batch keys hash to (partition pruning for upserts): at 100 TB / 4096
-  buckets a small batch rewrites a handful of ~25 GB buckets, not the table.
-* **Copy-on-write MERGE** with last-writer-wins guard: the update wins only if
-  ``_seq`` is strictly greater than the stored row's — a strictly stronger
-  guard than the reference's in-memory monotonic shard register
-  (DynamoDBSourceTask.java:419-426) because it survives restarts.
+* **Hash-bucket layout** — every base file belongs to one bucket
+  ``pmod(xxhash64(repo,path), n_buckets)``; point lookups and folds read
+  only the buckets a key or a delta hashes to.
+* **Merge-on-read deltas** with a last-writer-wins rule: a MERGE appends
+  its batch's winners as ONE delta file (sorted by bucket and key), so its
+  cost follows the batch's rows, not the buckets they hash to — at 4,096
+  buckets a 1,000-key batch touches ~900 of them. Readers resolve each key
+  across base files and deltas: the max ``_seq`` wins, and on equal
+  ``_seq`` the earlier commit (base before any delta) does — the strict
+  ``s._seq > t._seq`` guard of a copy-on-write merge, and stronger than the
+  reference's in-memory monotonic shard register
+  (DynamoDBSourceTask.java:419-426) because it survives restarts. Once a
+  table holds ``_MAX_DELTAS`` deltas, the merge FOLDS them
+  (:meth:`LakeTable.compact`): the buckets they touched are rewritten from
+  resolved rows (Hudi's inline compaction after N delta commits).
 * **Tombstones** — REMOVE keeps ``(key, _seq, _deleted=true)`` so a late,
   lower-seq MODIFY arriving in a later batch stays dead (SURVEY §7.4.3, the
   durable analog of Kafka tombstones, DynamoDBSourceTask.java:353-361).
@@ -40,13 +48,14 @@ from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, CommitIO, PosixCommitIO)
+from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
 
 __all__ = ["LakeTable", "Manifest", "CommitConflict"]
 
@@ -57,6 +66,9 @@ SEQ_TYPE = "decimal(38,0)"  # 26-digit DynamoDB seq-nos fit (tests use 26 digits
 # successor each time) before CommitConflict reaches the caller
 _COMMIT_RETRIES = 4
 
+# delta commits a table holds before merge folds them into its base files
+# (Hudi's hoodie.compact.inline.max.delta.commits default)
+_MAX_DELTAS = 5
 
 _MAX_STRING_STAT = 256
 
@@ -74,6 +86,28 @@ def _typed_lit(v, dt: T.DataType):
     if type(v) is int and not -(1 << 63) <= v < (1 << 63):
         v = Decimal(v)
     return F.lit(v).cast(dt)
+
+
+def _commit_rank() -> Column:
+    """Minus the commit version a row's file was written at, parsed from
+    its ``data/c{v:012d}[-uid]/`` staging dir: the tie-break of the
+    resolution order (max ``_seq``, then the EARLIER commit). Every delta is
+    newer than every base file (a fold or replace leaves no delta behind),
+    and a base file holds one row per key, so ranking base rows by their own
+    version still puts them before every delta. A file in no such dir
+    ranks as version 0, before every delta too. ``input_file_name()``
+    rather than ``_metadata.file_path``: the metadata column costs a point
+    lookup ~50 ms more (measured on 4 cores)."""
+    v = F.regexp_extract(F.input_file_name(),
+                         r"/c(\d{12})(?:-[0-9a-f]+)?/", 1).try_cast("long")
+    return -F.coalesce(v, F.lit(0))
+
+
+def _may_hold_two_versions(base: list[dict[str, Any]],
+                           deltas: list[dict[str, Any]]) -> bool:
+    """Can these files hold two versions of one key? Base files hold one
+    row per key, and so does each commit's delta."""
+    return len({d["version"] for d in deltas}) + bool(base) > 1
 
 
 def _widened_type(old_dt, new_dt):
@@ -201,12 +235,14 @@ class Manifest:
     key_cols: list[str]
     n_buckets: int
     schema_json: str                       # StructType.json() of stored columns
-    files: list[dict[str, Any]] = field(default_factory=list)   # {path, bucket}
+    files: list[dict[str, Any]] = field(default_factory=list)   # base: {path, bucket}
     committed: dict[str, int] = field(default_factory=dict)     # source -> last batch_id
     properties: dict[str, Any] = field(default_factory=dict)    # free-form (state doc etc.)
     lineage: list[dict[str, Any]] = field(default_factory=list) # recent commit metrics
     change_files: list[dict[str, Any]] = field(default_factory=list)  # {version, path}
     committed_at_ms: int = 0               # wall-clock commit stamp (AS OF reads)
+    # merge-on-read deltas, oldest first: {path, version, buckets, stats}
+    deltas: list[dict[str, Any]] = field(default_factory=list)
 
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.schema_json))
@@ -220,7 +256,8 @@ class Manifest:
 
 
 class LakeTable:
-    """A bucketed, versioned parquet table with atomic commits and COW merge.
+    """A bucketed, versioned parquet table with atomic commits and
+    merge-on-read delta merges.
 
     All driver-side metadata I/O goes through ``io`` (commitio.CommitIO) —
     swap in a rename-based (HDFS) or conditional-put (S3) implementation to
@@ -250,12 +287,20 @@ class LakeTable:
         proportional to churn, never to table size. Costs one extra
         bucket-pruned join per merge, hence opt-in.
 
+        How pre-images survive merge-on-read: the merge still writes its
+        DATA as a plain delta, but on a ``feed_preimages`` table it keeps
+        the bucket-pruned join to compute the feed, now against the
+        touched buckets' base files and deltas resolved per key
+        (:meth:`_feed_with_preimages`). Emitting pre-images at fold time
+        instead would need every delta's winners kept until the fold, and
+        the feed of a commit would lag it by up to ``_MAX_DELTAS`` commits.
+
         ``file_stats=True`` (default) records per-file min/max column stats
         in the manifest at commit time (read from the parquet footers the
         write already produced — metadata-only, no data re-read), enabling
         :meth:`scan` to skip files by predicate — the Iceberg/Delta
         data-skipping analog, and the non-key-column complement to the hash
-        bucket pruning MERGE and read_key already use."""
+        bucket pruning folds and read_key already use."""
         if feed_preimages and not change_feed:
             raise ValueError("feed_preimages requires change_feed=True")
         self.root = root
@@ -416,6 +461,42 @@ class LakeTable:
                     abs_path = os.path.join(staged, d, f)
                     rel = os.path.relpath(abs_path, self.root)
                     entries.append({"path": rel, "bucket": b})
+        return self._with_stats(df.sparkSession, entries)
+
+    def _write_delta(self, df: DataFrame, version: int, keys: list[str]
+                     ) -> tuple[list[dict[str, Any]], int]:
+        """Write ``df`` (with ``_bucket``) as the delta of commit
+        ``version``: rows sorted by bucket and key, one file unless the
+        batch outgrows AQE's advisory partition size. One ``observe`` on the
+        write yields the row count and the buckets the delta touches — no
+        extra job. Returns the delta entries (each carries the commit's
+        bucket set) and the row count; an empty delta leaves no entry and
+        no files. The staging dir is named like a base commit's, so
+        vacuum's in-flight guard covers it."""
+        staged = os.path.join(self.root, "data",
+                              f"c{version:012d}-{uuid.uuid4().hex[:8]}")
+        obs = Observation()
+        (df.repartition(F.col("_bucket"))
+           .sortWithinPartitions("_bucket", *keys)
+           # observed ABOVE the shuffle: an input with no partitions then
+           # still reports its zero count
+           .observe(obs, F.count(F.lit(1)).alias("rows"),
+                    F.collect_set("_bucket").alias("buckets"))
+           .drop("_bucket")
+           .write.mode("errorifexists").parquet(staged))
+        n, buckets = obs.get["rows"], sorted(obs.get["buckets"])
+        if n == 0:
+            self.io.remove_tree(staged)
+            return [], 0
+        entries = [{"path": os.path.relpath(os.path.join(staged, f), self.root),
+                    "version": version, "buckets": buckets}
+                   for f in sorted(self.io.list_dir(staged))
+                   if f.endswith(".parquet")]
+        return self._with_stats(df.sparkSession, entries), n
+
+    def _with_stats(self, spark: SparkSession, entries: list[dict[str, Any]]
+                    ) -> list[dict[str, Any]]:
+        """Add each written file's footer stats to its entry."""
         if self.file_stats and entries:
             # Footer-stats collection must not scale driver I/O with files
             # touched (VERDICT r3: a 4096-bucket full-table commit = 4096
@@ -435,7 +516,6 @@ class LakeTable:
                     all_stats = list(pool.map(_footer_stats, paths))
                 by_path = dict(zip(paths, all_stats))
             else:
-                spark = df.sparkSession
                 n_tasks = max(1, min(len(paths),
                                      spark.sparkContext.defaultParallelism))
                 rows = (spark.createDataFrame([(p,) for p in paths],
@@ -462,6 +542,24 @@ class LakeTable:
         paths = [os.path.join(self.root, e["path"]) for e in entries]
         # Explicit schema => missing (newly-evolved) columns read as null.
         return spark.read.schema(schema).parquet(*paths)
+
+    def _resolved(self, spark: SparkSession, m: Manifest,
+                  base: list[dict[str, Any]], deltas: list[dict[str, Any]],
+                  schema: T.StructType | None = None) -> DataFrame:
+        """The rows of ``base`` files and ``deltas`` with every key resolved
+        to its newest version (tombstones included): max ``_seq``, then the
+        earlier commit (:func:`_commit_rank`), through the engine's LWW
+        reduce. Files that cannot hold two versions of one key
+        (:func:`_may_hold_two_versions`) are read as they are, with no
+        shuffle. ``schema`` (default: the table's) must carry the keys and
+        ``_seq``."""
+        schema = schema or m.schema()
+        df = self._read_files(spark, schema, base + deltas)
+        if not _may_hold_two_versions(base, deltas):
+            return df
+        return (latest_per_key(df.withColumn("_rank", _commit_rank()),
+                               m.key_cols, ["_seq", "_rank"])
+                .select(*schema.fieldNames()))
 
     # ---------------------------------------------------------------- create
 
@@ -561,7 +659,8 @@ class LakeTable:
                 m, {"op": "replace", "files": len(entries)}, feed=feed,
                 key_cols=key_cols, n_buckets=n_buckets,
                 schema_json=json.dumps(data_schema.jsonValue()),
-                files=entries, committed={}, properties=properties or {})
+                files=entries, deltas=[], committed={},
+                properties=properties or {})
 
         return self._transact(attempt)
 
@@ -603,18 +702,23 @@ class LakeTable:
     def read(self, spark: SparkSession, *, include_meta: bool = False,
              include_deleted: bool = False, version: int | None = None,
              columns: list[str] | None = None) -> DataFrame:
-        """Current (or time-traveled) live rows; tombstones filtered unless
-        ``include_deleted`` (maintenance/inspection). ``columns`` projects
-        early so column pruning reaches the parquet scan (ReadSchema carries
-        only the requested columns + the meta cols the filter needs)."""
+        """Current (or time-traveled) live rows, each key resolved across
+        base files and deltas (:meth:`_resolved`); tombstones filtered
+        unless ``include_deleted`` (maintenance/inspection). ``columns``
+        projects early so column pruning reaches the parquet scan
+        (ReadSchema carries only the requested columns + the keys and meta
+        cols resolution and the filter need)."""
         m = self.manifest(version)
-        df = self._read_files(spark, m.schema(), m.files)
+        sch = m.schema()
+        out = [f.name for f in sch.fields]
         if columns is not None:
             # a caller naming a meta column (e.g. "_seq") must not duplicate
             # it against the META_COLS the filter needs; include_meta governs
             # whether it survives the final drop
-            df = df.select(*[c for c in columns if c not in META_COLS],
-                           *META_COLS)
+            out = [*[c for c in columns if c not in META_COLS], *META_COLS]
+            need = {*out, *m.key_cols}
+            sch = T.StructType([f for f in sch.fields if f.name in need])
+        df = self._resolved(spark, m, m.files, m.deltas, sch).select(*out)
         if not include_deleted:
             df = df.filter(~F.col("_deleted"))
         if not include_meta:
@@ -663,29 +767,34 @@ class LakeTable:
     def count_live(self, spark: SparkSession, *,
                    version: int | None = None) -> int:
         """Exact live-row count, answered from manifest stats wherever
-        possible (Iceberg/Delta's metadata-only COUNT(*)): a file whose
-        footer ``_deleted`` min/max is [false,false] contributes its row
-        count with no I/O; [true,true] (all tombstones) contributes zero;
-        only MIXED files — buckets touched by deletes since their last
-        compaction — are scanned, and the scan reads the one boolean
-        column. At 100 TB steady state the untouched majority of buckets
-        resolves driver-side; cost ∝ tombstone churn, not table size."""
+        possible (Iceberg/Delta's metadata-only COUNT(*)): a base file in a
+        bucket no delta touches, whose footer ``_deleted`` min/max is
+        [false,false], contributes its row count with no I/O; [true,true]
+        (all tombstones) contributes zero. Only the rest — MIXED files
+        (buckets touched by deletes since their last compaction), plus the
+        base files of delta-touched buckets and the deltas themselves — is
+        scanned, reading the keys and meta columns, and resolved
+        (:meth:`_resolved`) only when deltas exist. At 100 TB steady state
+        the untouched majority of buckets resolves driver-side; cost ∝
+        churn since the last fold, not table size."""
         m = self.manifest(version)
+        touched = {b for d in m.deltas for b in d["buckets"]}
         total = 0
         residual = []
         for e in m.files:
             st = e.get("stats") or {}
             nr = st.get("#rows")
             dmm = st.get("_deleted")
-            if nr is not None and dmm == [False, False]:
-                total += int(nr)
-            elif nr is not None and dmm == [True, True]:
-                continue
-            else:
+            if e["bucket"] in touched or nr is None:
                 residual.append(e)
-        if residual:
-            sch = T.StructType([m.schema()["_deleted"]])
-            total += (self._read_files(spark, sch, residual)
+            elif dmm == [False, False]:
+                total += int(nr)
+            elif dmm != [True, True]:
+                residual.append(e)
+        if residual or m.deltas:
+            full = m.schema()
+            sch = T.StructType([full[c] for c in (*m.key_cols, *META_COLS)])
+            total += (self._resolved(spark, m, residual, m.deltas, sch)
                           .filter(~F.col("_deleted")).count())
         return total
 
@@ -703,15 +812,18 @@ class LakeTable:
         across a ``replace()`` resync (which resets seqs) and reports
         nothing for an LWW winner that rewrote identical content.
 
-        Scale shape — cost ∝ churn, not table size: a bucket whose
-        manifest file set is IDENTICAL in both versions cannot contain a
-        difference (COW never mutates a file in place), so only changed
-        buckets are read on either side. At 100 TB / 4096 buckets a
-        10-bucket commit diff scans ~0.25% of the table; both sides of
-        the full-outer join arrive bucket-aligned on the same key hash.
-        Compaction/z-order rewrites re-file unchanged buckets, so those
-        diffs degrade to reading the rewritten buckets (and still emit
-        nothing) — pruning resumes on the next data commit."""
+        Scale shape — cost ∝ churn, not table size: no file is ever
+        mutated in place, so a bucket can differ only if its base file set
+        differs between the versions, or a delta present on one side only
+        touches it. Only those changed buckets are read on either side:
+        their base files plus the deltas touching them, resolved per key
+        (:meth:`_resolved`). At 100 TB / 4096 buckets a 10-bucket commit
+        diff scans ~0.25% of the table. A delta read for a changed bucket
+        may also hold rows of unchanged buckets; it is present on both
+        sides with the same companions, so those rows resolve alike and
+        emit nothing. Folds and compaction/z-order rewrites re-file
+        buckets, so those diffs read the rewritten buckets (and still emit
+        nothing for unchanged content)."""
         m_from = self.manifest(from_version)
         m_to = self.manifest(to_version)
         if m_from.key_cols != m_to.key_cols:
@@ -724,15 +836,21 @@ class LakeTable:
         for e in m_to.files:
             by_bucket.setdefault(e["bucket"], [set(), set()])[1].add(e["path"])
         changed = {b for b, (f, t) in by_bucket.items() if f != t}
+        from_deltas = {d["path"] for d in m_from.deltas}
+        to_deltas = {d["path"] for d in m_to.deltas}
+        changed |= {b for d in m_from.deltas + m_to.deltas
+                    if d["path"] not in from_deltas & to_deltas
+                    for b in d["buckets"]}
 
         sch_to = m_to.schema()
         data_cols = [f.name for f in sch_to.fields
                      if f.name not in META_COLS and f.name not in key_cols]
 
         def side(m, alias):
-            ents = [e for e in m.files if e["bucket"] in changed]
-            df = self._read_files(spark, m.schema(), ents) \
-                     .filter(~F.col("_deleted"))
+            df = self._resolved(
+                spark, m, [e for e in m.files if e["bucket"] in changed],
+                [d for d in m.deltas if changed.intersection(d["buckets"])]
+            ).filter(~F.col("_deleted"))
             # evolved columns null-fill on the narrow side (same
             # convention as every multi-version read here)
             have = set(df.columns)
@@ -762,10 +880,14 @@ class LakeTable:
     def read_key(self, spark: SparkSession, key_values: dict[str, Any], *,
                  include_meta: bool = False) -> DataFrame:
         """Bucket-pruned point lookup: compute the key's hash bucket on the
-        driver (see :meth:`_bucket_of`) and scan ONLY that bucket's files —
-        1/n_buckets of the table instead of a full scan; at 100 TB / 4096
-        buckets a lookup touches ~25 GB of files, further cut by parquet
-        row-group stats on the key columns inside the bucket."""
+        driver (see :meth:`_bucket_of`) and scan ONLY that bucket's base
+        files plus the deltas whose buckets include it — 1/n_buckets of the
+        table and at most ``_MAX_DELTAS`` small deltas instead of a full
+        scan; at 100 TB / 4096 buckets a lookup touches ~25 GB of files,
+        further cut by parquet row-group stats on the key columns. When
+        the kept files can hold two versions of the key, the newest
+        (max ``_seq``, then the earlier commit) is taken with an
+        ``orderBy().limit(1)`` — still one Spark job."""
         m = self.manifest()
         if set(key_values) != set(m.key_cols):
             raise ValueError(f"need exactly keys {m.key_cols}")
@@ -773,18 +895,22 @@ class LakeTable:
         bucket = self._bucket_of(spark, m, key_values)
         lits = {c: _typed_lit(key_values[c], sch[c].dataType)
                 for c in m.key_cols}
-        entries = [e for e in m.files if e["bucket"] == bucket]
         # stats-prune WITHIN the bucket too: hash-scattered keys leave
-        # min/max wide on freshly-merged files (no skip, never wrong), but
-        # a bucket compacted with sort_cols/zorder on the key has tight
-        # per-file ranges — the lookup then opens a single file
-        entries = [e for e in entries
-                   if all(_file_may_match(e.get("stats") or {}, c, "==",
-                                          key_values[c])
-                          for c in m.key_cols)]
-        df = self._read_files(spark, sch, entries)
+        # min/max wide on deltas and freshly-folded files (no skip, never
+        # wrong), but a bucket compacted with sort_cols/zorder on the key has
+        # tight per-file ranges — the lookup then opens a single file
+        may = lambda e: all(  # noqa: E731
+            _file_may_match(e.get("stats") or {}, c, "==", key_values[c])
+            for c in m.key_cols)
+        base = [e for e in m.files if e["bucket"] == bucket and may(e)]
+        deltas = [d for d in m.deltas if bucket in d["buckets"] and may(d)]
+        df = self._read_files(spark, sch, base + deltas)
         for c in m.key_cols:
             df = df.filter(F.col(c) == lits[c])
+        if _may_hold_two_versions(base, deltas):
+            df = (df.withColumn("_rank", _commit_rank())
+                    .orderBy(F.col("_seq").desc(), F.col("_rank").desc())
+                    .limit(1).drop("_rank"))
         df = df.filter(~F.col("_deleted"))
         if not include_meta:
             df = df.drop(*META_COLS)
@@ -811,13 +937,30 @@ class LakeTable:
 
     def pruned_entries(self, predicates: list[tuple[str, str, Any]],
                        version: int | None = None) -> list[dict[str, Any]]:
-        """File entries that MAY satisfy every predicate, judged purely from
-        the manifest's per-file stats — the planning-time skip set for
-        :meth:`scan` (exposed for tests/inspection)."""
-        m = self.manifest(version)
-        return [e for e in m.files
-                if all(_file_may_match(e.get("stats") or {}, c, op, v)
-                       for (c, op, v) in predicates)]
+        """Base file and delta entries that MAY hold a row satisfying every
+        predicate, judged purely from the manifest's per-file stats — the
+        planning-time skip set for :meth:`scan` (exposed for
+        tests/inspection)."""
+        base, deltas = self._pruned(self.manifest(version), predicates)
+        return base + deltas
+
+    @staticmethod
+    def _pruned(m: Manifest, predicates: list[tuple[str, str, Any]]
+                ) -> tuple[list[dict[str, Any]], list[dict[str, Any]]]:
+        """(base files, deltas) of ``m`` that may satisfy ``predicates``.
+        With deltas, only ``_seq`` lower bounds prune: a key's newest
+        version has its max ``_seq``, so a file whose ``_seq`` max fails
+        ``> w`` holds only versions the predicate drops anyway, while a
+        predicate on any other column would skip a newer version and let a
+        stale one through resolution."""
+        if m.deltas:
+            predicates = [p for p in predicates
+                          if p[0] == "_seq" and p[1] in (">", ">=")]
+        may = lambda e: all(  # noqa: E731
+            _file_may_match(e.get("stats") or {}, c, op, v)
+            for (c, op, v) in predicates)
+        return ([e for e in m.files if may(e)],
+                [d for d in m.deltas if may(d)])
 
     def scan(self, spark: SparkSession,
              predicates: list[tuple[str, str, Any]], *,
@@ -830,22 +973,29 @@ class LakeTable:
         no footer reads at query time; at 100 TB a selective range over a
         sorted-ish column (commit seq-no, ingest day) turns a full-table
         scan into a handful of files, on top of parquet row-group pruning
-        inside the survivors. The same predicates are re-applied to the
-        DataFrame, each value cast to its column's type (a 25-digit
-        ``_seq`` watermark compares as the decimal it is), so results are
-        exact (skipping is a superset filter, never wrong).
+        inside the survivors. On a table with deltas only ``_seq`` lower
+        bounds prune (:meth:`_pruned`): a ``_seq > w`` watermark then keeps
+        just the deltas written since ``w``, since base files hold only
+        older versions. The kept files are resolved per key
+        (:meth:`_resolved`) only when they can hold two versions of one
+        key — more than one delta, or a delta plus base files. The
+        predicates are then re-applied to the DataFrame, each value cast to
+        its column's type (a 25-digit ``_seq`` watermark compares as the
+        decimal it is), so results are exact (skipping is a superset
+        filter, never wrong).
 
         When every key column carries an equality predicate, the key's hash
         bucket prunes as well (stats ∩ bucket) — scan() then subsumes
         read_key with extra predicates on top."""
         m = self.manifest(version)
-        entries = self.pruned_entries(predicates, version)
+        base, deltas = self._pruned(m, predicates)
         eq = {c: v for (c, op, v) in predicates if op == "=="}
         if all(k in eq for k in m.key_cols):
             b = self._bucket_of(spark, m, {k: eq[k] for k in m.key_cols})
-            entries = [e for e in entries if e["bucket"] == b]
+            base = [e for e in base if e["bucket"] == b]
+            deltas = [d for d in deltas if b in d["buckets"]]
         sch = m.schema()
-        df = self._read_files(spark, sch, entries)
+        df = self._resolved(spark, m, base, deltas, sch)
         df = df.filter(~F.col("_deleted"))
         for c, op, v in predicates:
             df = df.filter(
@@ -868,10 +1018,20 @@ class LakeTable:
         """Apply a batch of LWW-deduped changes (one row per key, columns:
         keys + payload + op_col + seq_col).
 
-        Physical plan: prune to touched buckets → full-outer hash join on the
-        key (both sides shuffled on the key; AQE splits skewed keys) → winner
-        selection per row → rewrite only touched buckets → atomic manifest
-        commit referencing untouched files unchanged.
+        Physical plan: one write of the batch as this commit's DELTA —
+        shuffled on ``_bucket``, sorted by bucket and key, usually one file
+        — whose ``observe`` yields ``rows_in`` and the touched buckets; then
+        an atomic manifest commit that appends the delta and references
+        every base file unchanged. No target read, no join, no bucket
+        rewrite: stale winners (``_seq`` not above the stored row's) are
+        written too and lose at read time (:meth:`_resolved`). Lineage
+        records ``files_rewritten: 0``.
+
+        When the commit leaves ``_MAX_DELTAS`` or more deltas, the merge
+        then FOLDS them (:meth:`compact` over the buckets they touched) as
+        a commit of its own. A fold that fails raises to the caller but
+        leaves the merge committed and the table readable; the next merge
+        folds.
 
         Exactly-once: if ``batch_id <= committed[source]`` the call is a no-op
         (foreachBatch redelivery after crash).
@@ -892,6 +1052,8 @@ class LakeTable:
         new_m = self._transact(attempt)
         if new_m is None:
             return {"skipped": True, "batch_id": batch_id}
+        if len({d["version"] for d in new_m.deltas}) >= _MAX_DELTAS:
+            self.compact(spark, target_buckets=[])
         e = new_m.lineage[-1]
         return {"skipped": False, "batch_id": batch_id,
                 "version": new_m.version,
@@ -922,12 +1084,12 @@ class LakeTable:
         # (byte<short<int<long, float<double, {byte,short,int}<double)
         # widens the TABLE schema; old files read through Spark's parquet
         # type promotion, exactly like additive columns null-fill. Without
-        # this the full-outer when() would coerce the merged column wider
-        # while the manifest stayed narrow — new files unreadable under the
-        # recorded schema. Narrower update columns are cast UP to the
-        # table's type instead. KEY columns must match exactly: the bucket
-        # hash is type-sensitive (hash(int 5) != hash(bigint 5)), so a
-        # widened key would silently scatter existing keys across buckets.
+        # this the delta would be written wider while the manifest stayed
+        # narrow — new files unreadable under the recorded schema. Narrower
+        # update columns are cast UP to the table's type instead. KEY
+        # columns must match exactly: the bucket hash is type-sensitive
+        # (hash(int 5) != hash(bigint 5)), so a widened key would silently
+        # scatter existing keys across buckets.
         widened: dict[str, T.DataType] = {}
         for f in old_schema.fields:
             uf = upd_fields.get(f.name)
@@ -951,109 +1113,99 @@ class LakeTable:
             + new_fields)
         evolved_names = [f.name for f in evolved.fields]
 
-        upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets)).persist()
+        # align update columns to evolved schema (missing old columns -> null)
+        data_cols = [c for c in evolved_names if c not in META_COLS]
+        for c in data_cols:
+            if c not in upd.columns:
+                upd = upd.withColumn(c, F.lit(None).cast(evolved[c].dataType))
+            elif upd.schema[c].dataType != evolved[c].dataType:
+                # narrower update column -> cast UP to the table type
+                # (or to the just-widened type) — but ONLY when the
+                # table's type is a recognized LOSSLESS widening of the
+                # batch's (the inverse of the evolution rule above). A
+                # blind cast here would silently truncate (double sent
+                # for a long column) or null out (string for numeric)
+                # under non-ANSI Spark — silent data loss (ADVICE r6).
+                if _widened_type(upd.schema[c].dataType,
+                                 evolved[c].dataType) != evolved[c].dataType:
+                    raise ValueError(
+                        f"column {c!r}: update type "
+                        f"{upd.schema[c].dataType.simpleString()} is not a "
+                        f"lossless narrowing of the table type "
+                        f"{evolved[c].dataType.simpleString()}; cast the "
+                        "batch explicitly if the loss is intended")
+                upd = upd.withColumn(c, F.col(c).cast(evolved[c].dataType))
+        upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets))
+        if self.change_feed:
+            upd = upd.persist()          # written twice: delta and feed
         committed = dict(m.committed)
         if batch_id is not None:
             committed[source] = batch_id
         lineage = {"batch_id": batch_id, "source": source, "op": "merge"}
         try:
-            # one partial-agg job yields both the touched-bucket set (pruning)
-            # and the batch row count (metrics) — ≤ n_buckets rows collected
-            bucket_counts = upd.groupBy("_bucket").count().collect()
-            n_upd = sum(r["count"] for r in bucket_counts)
+            delta, n_upd = self._write_delta(
+                upd.select(*data_cols, "_seq", "_deleted", "_bucket"),
+                m.version + 1, keys)
             if n_upd == 0:
                 return self._next(m, {**lineage, "rows_in": 0},
                                   committed=committed)
-
-            # --- bucket pruning: only buckets the batch touches are rewritten
-            touched = sorted(r["_bucket"] for r in bucket_counts)
-            touched_set = set(touched)
-            tgt_entries = [e for e in m.files if e["bucket"] in touched_set]
-            keep_entries = [e for e in m.files if e["bucket"] not in touched_set]
-
-            tgt = self._read_files(spark, evolved, tgt_entries).alias("t")
-            # align update columns to evolved schema (missing old columns -> null)
-            data_cols = [c for c in evolved_names if c not in META_COLS]
-            for c in data_cols:
-                if c not in upd.columns:
-                    upd = upd.withColumn(c, F.lit(None).cast(evolved[c].dataType))
-                elif upd.schema[c].dataType != evolved[c].dataType:
-                    # narrower update column -> cast UP to the table type
-                    # (or to the just-widened type) — but ONLY when the
-                    # table's type is a recognized LOSSLESS widening of the
-                    # batch's (the inverse of the evolution rule above). A
-                    # blind cast here would silently truncate (double sent
-                    # for a long column) or null out (string for numeric)
-                    # under non-ANSI Spark — silent data loss (ADVICE r6).
-                    if _widened_type(upd.schema[c].dataType,
-                                     evolved[c].dataType) != evolved[c].dataType:
-                        raise ValueError(
-                            f"column {c!r}: update type "
-                            f"{upd.schema[c].dataType.simpleString()} is not a "
-                            f"lossless narrowing of the table type "
-                            f"{evolved[c].dataType.simpleString()}; cast the "
-                            "batch explicitly if the loss is intended")
-                    upd = upd.withColumn(c, F.col(c).cast(evolved[c].dataType))
-            s_cols = [*data_cols, "_seq", "_deleted"]
-            if self.change_feed and self.feed_preimages:
-                s_cols.append("_op")     # feed post-rows keep the batch op
-            s = upd.select(*s_cols).alias("s")
-
-            joined = tgt.join(s, on=keys, how="full_outer")
-            take_src = F.col("s._seq").isNotNull() & (
-                F.col("t._seq").isNull() | (F.col("s._seq") > F.col("t._seq")))
-            payload_cols = [c for c in data_cols if c not in keys]
-            merged = joined.select(
-                *keys,
-                *[F.when(take_src, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-                  for c in payload_cols],
-                F.when(take_src, F.col("s._seq")).otherwise(F.col("t._seq")).alias("_seq"),
-                F.when(take_src, F.col("s._deleted")).otherwise(F.col("t._deleted")).alias("_deleted"),
-            ).withColumn("_bucket", bucket_of(keys, m.n_buckets))
-
-            new_entries = self._write_bucketed(merged, m.version + 1)
+            buckets = delta[0]["buckets"]
             feed_df = None
             if self.change_feed:
                 # CDC-OUT: this commit's compacted delta (the LWW winners as
                 # submitted, deletes as _op='d' tombstone rows). Cost is one
                 # extra write of ~|keys| rows — the winners are already
-                # cached by apply_batch, no extra source pass.
+                # cached, no extra source pass.
+                feed_df = upd.drop("_bucket", "_deleted")
                 if self.feed_preimages:
-                    # Delta-CDF-shaped delta: APPLIED winners only, plus the
-                    # pre-image of every live row they overwrote/deleted
-                    # ('pu'/'pd', OLD _seq). Submitted winners that lose the
-                    # seq guard are omitted — replay-neutral, and required
-                    # for additive consumers (a losing 'u' row would add a
-                    # contribution whose pre-image never existed). Costs one
-                    # extra evaluation of the bucket-pruned join.
-                    applied = joined.filter(take_src)
-                    post = applied.select(
-                        *keys,
-                        *[F.col(f"s.{c}").alias(c) for c in payload_cols],
-                        F.col("s._op").alias("_op"),
-                        F.col("s._seq").alias("_seq"))
-                    had_live = (F.col("t._seq").isNotNull()
-                                & ~F.coalesce(F.col("t._deleted"),
-                                              F.lit(False)))
-                    pre = applied.filter(had_live).select(
-                        *keys,
-                        *[F.col(f"t.{c}").alias(c) for c in payload_cols],
-                        F.when(F.col("s._deleted"), F.lit("pd"))
-                         .otherwise(F.lit("pu")).alias("_op"),
-                        F.col("t._seq").alias("_seq"))
-                    feed_df = post.unionByName(pre)
-                else:
-                    feed_df = upd.drop("_bucket", "_deleted")
+                    feed_df = self._feed_with_preimages(
+                        spark, m, evolved, upd, buckets)
             return self._next(
-                m, {**lineage, "rows_in": n_upd, "buckets_touched": len(touched),
-                    "files_rewritten": len(tgt_entries),
-                    "files_written": len(new_entries)},
-                feed=feed_df, files=keep_entries + new_entries,
-                committed=committed,
+                m, {**lineage, "rows_in": n_upd, "buckets_touched": len(buckets),
+                    "files_rewritten": 0, "files_written": len(delta)},
+                feed=feed_df, deltas=m.deltas + delta, committed=committed,
                 schema_json=json.dumps(evolved.jsonValue()) if (
                     new_fields or widened) else m.schema_json)
         finally:
             upd.unpersist()
+
+    def _feed_with_preimages(self, spark: SparkSession, m: Manifest,
+                             schema: T.StructType, upd: DataFrame,
+                             buckets: list[int]) -> DataFrame:
+        """The Delta-CDF-shaped feed delta of a merge on a ``feed_preimages``
+        table: APPLIED winners only, plus the pre-image of every live row
+        they overwrote/deleted ('pu'/'pd', OLD ``_seq``). Submitted winners
+        that lose the seq guard are omitted — replay-neutral, and required
+        for additive consumers (a losing 'u' row would add a contribution
+        whose pre-image never existed). The stored rows come from a
+        bucket-pruned join against the resolved base files and deltas of
+        the touched buckets (the one place a merge still reads its
+        target)."""
+        keys = m.key_cols
+        bset = set(buckets)
+        tgt = self._resolved(
+            spark, m, [e for e in m.files if e["bucket"] in bset],
+            [d for d in m.deltas if bset.intersection(d["buckets"])],
+            schema).alias("t")
+        payload_cols = [c for c in schema.fieldNames()
+                        if c not in keys and c not in META_COLS]
+        s = upd.select(*keys, *payload_cols, "_op", "_seq", "_deleted").alias("s")
+        applied = s.join(tgt, on=keys, how="left").filter(
+            F.col("t._seq").isNull() | (F.col("s._seq") > F.col("t._seq")))
+        post = applied.select(
+            *keys,
+            *[F.col(f"s.{c}").alias(c) for c in payload_cols],
+            F.col("s._op").alias("_op"),
+            F.col("s._seq").alias("_seq"))
+        had_live = (F.col("t._seq").isNotNull()
+                    & ~F.coalesce(F.col("t._deleted"), F.lit(False)))
+        pre = applied.filter(had_live).select(
+            *keys,
+            *[F.col(f"t.{c}").alias(c) for c in payload_cols],
+            F.when(F.col("s._deleted"), F.lit("pd"))
+             .otherwise(F.lit("pu")).alias("_op"),
+            F.col("t._seq").alias("_seq"))
+        return post.unionByName(pre)
 
     # ------------------------------------------------------------ change feed
 
@@ -1159,11 +1311,21 @@ class LakeTable:
     def compact(self, spark: SparkSession, *, drop_tombstones_below_seq: int | None = None,
                 target_buckets: list[int] | None = None,
                 zorder_cols: list[str] | None = None,
-                zorder_files_per_bucket: int = 4) -> Manifest:
-        """Rewrite buckets to one file each; optionally purge tombstones whose
-        _seq is below a watermark (no older event can still arrive).
-        Losing a commit race to a concurrent merge re-reads the new manifest
-        and recompacts (:meth:`_transact`).
+                zorder_files_per_bucket: int = 4) -> Manifest | None:
+        """Rewrite buckets to one file each, FOLDING every delta: the
+        rewritten buckets are ``target_buckets`` (default: every bucket with
+        a base file) plus every bucket a delta touched, written from rows
+        resolved per key across base files and deltas (:meth:`_resolved`);
+        the new manifest holds no delta. ``merge`` calls it with
+        ``target_buckets=[]`` to fold just the delta buckets; that call
+        commits nothing (and returns None) once another writer has folded.
+
+        ``drop_tombstones_below_seq`` purges tombstones whose ``_seq`` is
+        below a watermark (no older event can still arrive) — AFTER
+        resolution, so a late lower-seq delta row never resurrects a
+        purged key. Losing a commit race to a concurrent merge re-reads the
+        new manifest and refolds, its new delta included
+        (:meth:`_transact`).
 
         ``zorder_cols`` switches the rewrite from linear key clustering to
         Z-ORDER layout (``lake/zorder.py``): each bucket is split into
@@ -1175,39 +1337,43 @@ class LakeTable:
         multi-column data-skipping layout (Delta OSS ZORDER BY). One extra
         quantile job at compaction time; read paths are unchanged."""
         def attempt(m: Manifest) -> Manifest:
-            buckets = (sorted({e["bucket"] for e in m.files})
-                       if target_buckets is None else target_buckets)
-            bset = set(buckets)
+            bset = ({e["bucket"] for e in m.files} if target_buckets is None
+                    else set(target_buckets))
+            bset |= {b for d in m.deltas for b in d["buckets"]}
+            if not bset and target_buckets is not None:
+                return m              # a fold with nothing left to fold
             tgt_entries = [e for e in m.files if e["bucket"] in bset]
             keep_entries = [e for e in m.files if e["bucket"] not in bset]
-            df = self._read_files(spark, m.schema(), tgt_entries)
+            df = self._resolved(spark, m, tgt_entries, m.deltas)
             if drop_tombstones_below_seq is not None:
                 df = df.filter(~(F.col("_deleted") &
                                  (F.col("_seq") < F.lit(drop_tombstones_below_seq))))
             df = df.withColumn("_bucket", bucket_of(m.key_cols, m.n_buckets))
-            op = {"batch_id": None, "source": "compact", "op": "compact"}
+            op = {"batch_id": None, "source": "compact", "op": "compact",
+                  "files_rewritten": len(tgt_entries),
+                  "deltas_folded": len({d["version"] for d in m.deltas})}
             if zorder_cols:
                 from .zorder import with_zvalue
                 df = with_zvalue(df, zorder_cols)
                 new_entries = self._write_bucketed(
                     df, m.version + 1, sort_cols=m.key_cols, zval_col="_zval",
-                    n_range_parts=max(1, len(buckets)) * zorder_files_per_bucket)
+                    n_range_parts=max(1, len(bset)) * zorder_files_per_bucket)
                 op["zorder"] = list(zorder_cols)
             else:
                 new_entries = self._write_bucketed(df, m.version + 1,
                                                    sort_cols=m.key_cols)
-            return self._next(m, {**op, "files_rewritten": len(tgt_entries)},
-                              files=keep_entries + new_entries)
+            return self._next(m, op, files=keep_entries + new_entries,
+                              deltas=[])
 
         return self._transact(attempt)
 
     def compact_small_files(self, spark: SparkSession, *,
                             max_files_per_bucket: int = 4) -> Manifest | None:
-        """Compact only the buckets whose file count exceeds the threshold.
+        """Compact only the buckets whose base file count exceeds the
+        threshold (folding every delta on the way, like any compact).
 
-        Note the COW MERGE is already self-compacting for the buckets it
-        touches (it rewrites them whole, one file per bucket per commit), so
-        under a pure tail this is a no-op; it exists for tables populated by
+        A fold writes one file per bucket it rewrites, so under a pure tail
+        this is a no-op; it exists for tables populated by
         external appenders or after raising ``n_buckets``. Returns the new
         manifest, or None if no bucket crossed the threshold."""
         m = self.manifest()
@@ -1257,7 +1423,8 @@ class LakeTable:
     @staticmethod
     def _staging_version(name: str) -> int:
         """Commit version embedded in a staging dir name
-        (``c{v:012d}[-uid]`` / ``.stage-c{v:012d}-uid``); 0 if unparseable
+        (``c{v:012d}[-uid]`` for base files and deltas alike,
+        ``.stage-c{v:012d}-uid`` for feed deltas); 0 if unparseable
         (legacy junk — reclaimable when unreferenced)."""
         s = name[len(".stage-"):] if name.startswith(".stage-") else name
         if s.startswith("c"):
@@ -1267,8 +1434,8 @@ class LakeTable:
         return 0
 
     def vacuum(self, *, grace_s: float = 3600.0) -> int:
-        """Delete data/feed files no RETAINED manifest references. Returns
-        count removed.
+        """Delete data/feed files no RETAINED manifest references (base
+        files, deltas and feed deltas alike). Returns count removed.
 
         Retention coupling (standard lakehouse semantics): the live set is
         the union over every manifest still in the log — a concurrent
@@ -1296,7 +1463,8 @@ class LakeTable:
         live_change_dirs: set[str] = set()
         for v in self._versions():
             m = self.manifest(v)
-            live |= {os.path.join(self.root, e["path"]) for e in m.files}
+            live |= {os.path.join(self.root, e["path"])
+                     for e in m.files + m.deltas}
             # a feed "file" is a parquet dir (part files + _SUCCESS inside)
             live_change_dirs |= {os.path.join(self.root, e["path"])
                                  for e in m.change_files}

@@ -15,7 +15,8 @@ raw events
      NOT |events| — the expensive JSON parse runs post-reduction)
   -> additive schema evolution: discover new attribute names from the
      winners' map keys (tiny agg)
-  -> LakeTable.merge (bucket-pruned COW, idempotent on batch_id)
+  -> LakeTable.merge (one merge-on-read delta per commit, idempotent on
+     batch_id)
 
 Every step is declarative; the whole batch plan is Catalyst-optimized and
 whole-stage-codegen'd. No Python executes per row. Ordering the heavy
@@ -77,7 +78,7 @@ def prepare_winners(df: DataFrame, *,
     """Filters + key-parse + LWW dedup: one row per key, image still raw.
 
     This is the only full-pass-over-events stage; callers persist its result
-    so schema discovery, bucket pruning and the MERGE all reuse one pass.
+    so schema discovery and the MERGE both reuse one pass.
 
     Plan shape (see PLANS.md): pre-agg filters use only CHEAP, parquet-pushable
     predicates (event-name IN, keys IsNotNull). The exact parse-error drop (F5)
@@ -137,7 +138,7 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
     the merge no-ops once committed.
 
     The LWW winners are persisted so the batch makes exactly ONE full pass
-    over the events: schema discovery, bucket pruning and the MERGE join all
+    over the events: schema discovery and the MERGE's delta write both
     read the ~|keys|-row cache, never the raw event stream again.
 
     The F3 danger-zone check rides the same pass as an ``observe`` metric

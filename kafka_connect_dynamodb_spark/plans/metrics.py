@@ -5,7 +5,9 @@ we upgrade to first-class observability).
 Three layers:
 
 * **Per-commit lineage** — every manifest records {commit, batch_id, source,
-  rows_in, buckets_touched, files_rewritten/written} (lake/table.py::_next);
+  rows_in, buckets_touched, files_rewritten/written} (lake/table.py::_next;
+  a merge writes one delta and rewrites no file, a fold records
+  ``deltas_folded``);
   ``lineage_frame`` exposes it as a DataFrame for SQL over commit history.
 * **Streaming progress** — ``TailMetricsListener`` captures per-micro-batch
   input rows, processing rate and durations from the Structured Streaming
@@ -46,8 +48,10 @@ def lineage_frame(spark: SparkSession, table) -> DataFrame:
 
 
 def bucket_histogram(spark: SparkSession, table) -> DataFrame:
-    """Files per bucket in the current manifest — the partition-lineage view
-    (detects bucket skew / small-file buildup that compaction should fix)."""
+    """BASE files per bucket in the current manifest — the partition-lineage
+    view (detects bucket skew / small-file buildup that compaction should
+    fix). Merge-on-read deltas span many buckets each and are not counted:
+    they live until the next fold."""
     m = table.manifest()
     df = spark.createDataFrame(
         [(e["bucket"], e["path"]) for e in m.files], "bucket int, path string")

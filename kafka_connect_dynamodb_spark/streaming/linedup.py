@@ -80,8 +80,8 @@ class LineDedupIngest:
                              (F.coalesce("_old", F.lit(0))
                               + F.coalesce("n_docs", F.lit(0)))
                               .alias("n_docs")))
-        # only hashes the batch touched need upserting; untouched rows
-        # keep their files (bucket-pruned COW merge)
+        # only hashes the batch touched need upserting (the merge appends
+        # them as one delta; untouched rows keep their files)
         touched = merged.join(delta.select("line_hash"), "line_hash")
         updates = touched.withColumn("_op", F.lit("u")) \
                          .withColumn("_seq", F.lit(int(batch_id))

@@ -11,7 +11,7 @@ algebra as ``scd2_apply_increment``, laid out for 100 TB:
 * **Only the open rows live in a mutable table.** ``current`` is a
   :class:`..lake.table.LakeTable` keyed by the dimension keys holding
   exactly one open version per live key. Each batch MERGEs only the
-  touched keys (bucket-pruned COW) and deletes keys whose last event was
+  touched keys (one merge-on-read delta) and deletes keys whose last event was
   a tombstone. Batch cost ∝ churn, never ∝ |history|.
 
 Exactly-once across crashes (same discipline as ``streaming/linedup.py``):

@@ -4,8 +4,9 @@ idempotent commits, compaction, time travel."""
 import pytest
 from pyspark.sql import functions as F
 
+from kafka_connect_dynamodb_spark.lake import table as table_mod
 from kafka_connect_dynamodb_spark.lake.table import (
-    _COMMIT_RETRIES, CommitConflict, LakeTable, Manifest)
+    _COMMIT_RETRIES, _MAX_DELTAS, CommitConflict, LakeTable, Manifest)
 
 
 BASE = [("r1", "p1", "v1"), ("r1", "p2", "v2"), ("r2", "p1", "v3")]
@@ -133,6 +134,7 @@ def test_compact_purges_tombstones(spark, tmp_path):
 def test_vacuum_removes_orphans(spark, tmp_path):
     t = _table(spark, tmp_path)
     t.merge(spark, _upd(spark, [("r1", "p1", "x", "u", 10)]), batch_id=0)
+    t.compact(spark)          # folds the delta: rewrites every bucket
     # retention coupling: while version 1's manifest is retained, its DATA
     # files are not reclaimable (only _SUCCESS/.crc markers are) — a
     # concurrent reader of v1 must never crash
@@ -140,7 +142,7 @@ def test_vacuum_removes_orphans(spark, tmp_path):
     assert t.read(spark, version=1).count() == 3   # time travel intact
     t.expire_versions(keep_last=1)
     removed = t.vacuum(grace_s=0)
-    assert removed > 0  # the rewritten bucket's old file, now unreferenced
+    assert removed > 0  # the rewritten buckets' old files and the delta
     # table still reads fine
     assert t.read(spark).count() == 3
 
@@ -256,10 +258,27 @@ def _check_expire(spark, t, dropped):
     assert t.manifest().change_files == []
 
 
+def _merge_fold(spark, t):
+    """The merge that commits a table's _MAX_DELTAS-th delta, then folds
+    (the setup table holds one delta, so the threshold is lowered to 2)."""
+    from unittest import mock
+    with mock.patch.object(table_mod, "_MAX_DELTAS", 2):
+        return _WRITERS["merge"][0](spark, t)
+
+
+def _check_merge_fold(spark, t, res):
+    _check_merge(spark, t, res)
+    m = t.manifest()
+    assert m.version == 5 and m.deltas == []
+    assert m.lineage[-1]["op"] == "compact"
+    assert m.lineage[-1]["deltas_folded"] == 2
+
+
 _WRITERS = {
     "merge": (lambda spark, t: t.merge(
         spark, _upd(spark, [("r1", "p1", "NEW", "u", 5)]),
         batch_id=0, source="s"), _check_merge),
+    "merge_fold": (_merge_fold, _check_merge_fold),
     "replace": (lambda spark, t: t.replace(spark, spark.createDataFrame(
         [("r1", "p1", "NEW"), ("r9", "p9", "n")], SCHEMA)), _check_replace),
     "update_properties": (lambda spark, t: t.update_properties(
@@ -326,6 +345,84 @@ def test_writer_conflict_exhausts_retries(spark, tmp_path, writer):
     # nothing of the writer's landed: only the racer's commits followed v2
     assert t.current_version() == 2 + _COMMIT_RETRIES + 1
     assert {e["op"] for e in t.manifest().lineage[2:]} == {"props"}
+
+
+def test_fold_keeps_a_delta_committed_during_its_race(spark, tmp_path):
+    """A racer commits a new delta between the fold's manifest read and its
+    put: the fold loses the version, refolds against the new manifest, and
+    the racer's delta survives in the folded base."""
+    import json
+    from unittest import mock
+
+    from kafka_connect_dynamodb_spark.lake.commitio import PosixCommitIO
+
+    t = _table(spark, tmp_path)
+    racer = LakeTable(t.root)
+    for i in range(_MAX_DELTAS - 1):
+        t.merge(spark, _upd(spark, [("r1", "p1", f"v{i}", "u", 10 + i)]),
+                batch_id=i)
+
+    class RaceTheFold(PosixCommitIO):
+        raced = False
+
+        def put_if_absent(self, path, payload):
+            if (not self.raced
+                    and json.loads(payload)["lineage"][-1]["op"] == "compact"):
+                self.raced = True
+                with mock.patch.object(table_mod, "_MAX_DELTAS", 100):
+                    racer.merge(spark, _upd(spark, [("r2", "p1", "RACER", "u", 99)]),
+                                batch_id=0, source="racer")
+            return super().put_if_absent(path, payload)
+
+    t.io = RaceTheFold()
+    res = t.merge(spark, _upd(spark, [("r1", "p1", "last", "u", 50)]),
+                  batch_id=_MAX_DELTAS - 1)
+    assert t.io.raced and res["version"] == 1 + _MAX_DELTAS
+    m = t.manifest()
+    assert m.version == res["version"] + 2 and m.deltas == []
+    assert m.lineage[-1]["deltas_folded"] == _MAX_DELTAS + 1
+    assert m.committed == {"default": _MAX_DELTAS - 1, "racer": 0}
+    assert _content(spark, t) == {("r1", "p1"): "last", ("r1", "p2"): "v2",
+                                  ("r2", "p1"): "RACER"}
+
+
+def test_failed_fold_leaves_a_readable_table_and_the_next_merge_folds(
+        spark, tmp_path, monkeypatch):
+    """An exception inside the fold, after the _MAX_DELTAS-th delta
+    committed, reaches the caller; the merge stays committed, every reader
+    resolves the deltas, a redelivery of the batch is skipped, and the next
+    merge folds."""
+    t = _table(spark, tmp_path)
+
+    def crash(*a, **k):
+        raise RuntimeError("fold crashed")
+
+    for i in range(_MAX_DELTAS):
+        if i == _MAX_DELTAS - 1:
+            monkeypatch.setattr(LakeTable, "_write_bucketed", crash)
+        upd = _upd(spark, [("r1", "p1", f"v{i}", "u", 10 + i)])
+        if i < _MAX_DELTAS - 1:
+            t.merge(spark, upd, batch_id=i)
+            continue
+        with pytest.raises(RuntimeError, match="fold crashed"):
+            t.merge(spark, upd, batch_id=i)
+    monkeypatch.undo()
+    m = t.manifest()
+    assert len(m.deltas) == _MAX_DELTAS
+    assert m.committed["default"] == _MAX_DELTAS - 1
+    last = f"v{_MAX_DELTAS - 1}"
+    assert _content(spark, t)[("r1", "p1")] == last
+    assert [r.content for r in t.read_key(
+        spark, {"repo": "r1", "path": "p1"}).collect()] == [last]
+    assert t.count_live(spark) == 3
+    assert t.merge(spark, upd, batch_id=_MAX_DELTAS - 1)["skipped"]
+
+    t.merge(spark, _upd(spark, [("r2", "p1", "after", "u", 99)]),
+            batch_id=_MAX_DELTAS)
+    m = t.manifest()
+    assert m.deltas == [] and m.lineage[-1]["deltas_folded"] == _MAX_DELTAS + 1
+    assert _content(spark, t) == {("r1", "p1"): last, ("r1", "p2"): "v2",
+                                  ("r2", "p1"): "after"}
 
 
 def test_replace_evaluates_snapshot_once_on_change_feed_table(spark, tmp_path):
@@ -425,6 +522,8 @@ def test_merge_type_widening_evolution(spark, tmp_path):
     assert rows2["3"] == (5_000_000_000, 0.5)
 
     # stats pruning still works across the widened column's old+new files
+    # (a non-_seq predicate prunes base files only: fold the deltas first)
+    table.compact(spark)
     may = table.pruned_entries([("size", ">", 4_000_000_000)])
     assert 0 < len(may) < len(table.manifest().files)
 
@@ -512,7 +611,8 @@ def test_diff_reads_only_changed_buckets(spark, tmp_path, monkeypatch):
     orig = LakeTable._read_files
 
     def spy(self, spark_, schema, entries):
-        seen.append([e["bucket"] for e in entries])
+        # a base file has one bucket, a delta lists the buckets it touches
+        seen.append([b for e in entries for b in e.get("buckets", [e.get("bucket")])])
         return orig(self, spark_, schema, entries)
 
     monkeypatch.setattr(LakeTable, "_read_files", spy)
@@ -569,11 +669,22 @@ def test_count_live_metadata_only_when_clean(spark, tmp_path, monkeypatch):
 
 
 def test_count_live_scans_only_mixed_files(spark, tmp_path, monkeypatch):
-    """After a delete, only files of touched buckets (mixed live/tombstone)
-    are scanned; the count stays exact."""
-    t = _table(spark, tmp_path, n_buckets=4)
-    t.merge(spark, _upd(spark, [("r2", "p1", None, "d", 11),
+    """After a delete, only the delta and the base files of the buckets it
+    touched are scanned; the count stays exact. After a fold, only the
+    files that mix live rows and tombstones are."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [(f"r{i % 3}", f"p{i}", f"v{i}") for i in range(40)], SCHEMA),
+        ["repo", "path"], n_buckets=8)
+    t.merge(spark, _upd(spark, [("r2", "p2", None, "d", 11),
                                 ("r3", "p9", "new", "c", 12)]), batch_id=0)
+    for fold in (False, True):
+        if fold:
+            t.compact(spark)
+        _check_count_live_scans(spark, t, monkeypatch)
+
+
+def _check_count_live_scans(spark, t, monkeypatch):
     expect = t.read(spark).count()
     seen = []
     orig = LakeTable._read_files
@@ -583,12 +694,19 @@ def test_count_live_scans_only_mixed_files(spark, tmp_path, monkeypatch):
         return orig(self, spark_, schema, entries)
 
     monkeypatch.setattr(LakeTable, "_read_files", spy)
-    assert t.count_live(spark) == expect == 3
-    # the residual scan covers strictly fewer files than the manifest
-    assert len(seen) < len(t.manifest().files)
-    # and every scanned file really is stats-ambiguous on _deleted
-    for e in seen:
-        assert (e.get("stats") or {}).get("_deleted") != [False, False]
+    assert t.count_live(spark) == expect == 40
+    monkeypatch.undo()
+    m = t.manifest()
+    touched = {b for d in m.deltas for b in d["buckets"]}
+    base = [e for e in seen if "bucket" in e]
+    # every delta is scanned, and strictly fewer base files than the manifest
+    assert len(seen) - len(base) == len(m.deltas)
+    assert len(base) < len(m.files)
+    # and every scanned base file is in a delta's bucket or really is
+    # stats-ambiguous on _deleted
+    for e in base:
+        assert (e["bucket"] in touched
+                or (e.get("stats") or {}).get("_deleted") != [False, False])
 
 
 def test_count_live_after_tombstone_compaction(spark, tmp_path):

@@ -48,7 +48,9 @@ def test_retained_version_reader_survives_vacuum(spark, tmp_path):
     got = {(r.repo, r.path): r.content for r in old_reader.collect()}
     assert got[("r1", "p1")] == "v1"             # v1 data intact post-vacuum
 
-    # expiry then vacuum: v1 becomes unreadable with a CLEAR retention error
+    # fold the deltas, then expiry and vacuum: v1 becomes unreadable with a
+    # CLEAR retention error
+    t.compact(spark)
     t.expire_versions(keep_last=1)
     assert t.vacuum(grace_s=0) > 0
     with pytest.raises(FileNotFoundError):
@@ -359,6 +361,54 @@ def test_vacuum_spares_inflight_staging_dirs(spark, tmp_path):
     t.vacuum(grace_s=0)
     assert not os.path.exists(os.path.join(inflight, "_bucket=0",
                                            "part-x.parquet"))
+
+
+def test_vacuum_spares_an_uncommitted_delta(spark, tmp_path):
+    """A merge's delta is staged under data/c{next version}-{uid}, ahead of
+    the current version until its commit lands: a vacuum running between
+    the delta write and the manifest put must leave it alone."""
+    other = LakeTable(str(tmp_path / "tbl"))
+
+    class VacuumBeforePut(PosixCommitIO):
+        removed = None
+
+        def put_if_absent(self, path, payload):
+            if self.removed is None:
+                self.removed = other.vacuum(grace_s=0)
+            return super().put_if_absent(path, payload)
+
+    t = _table(spark, tmp_path / "tbl")
+    t.io = VacuumBeforePut()
+    t.merge(spark, _upd(spark, [("r1", "p1", "NEW", "u", 10)]), batch_id=0)
+    assert t.io.removed is not None
+    (delta,) = t.manifest().deltas
+    assert os.path.exists(os.path.join(t.root, delta["path"]))
+    got = {(r.repo, r.path): r.content for r in t.read(spark).collect()}
+    assert got[("r1", "p1")] == "NEW"
+
+
+def test_folded_delta_reclaimed_after_its_last_manifest_expires(spark, tmp_path):
+    """A fold drops deltas from the manifest, but each delta file stays on
+    disk while ANY retained manifest lists it (time travel to those
+    versions keeps working); once they all expire, vacuum reclaims it."""
+    t = _table(spark, tmp_path / "tbl")
+    t.merge(spark, _upd(spark, [("r1", "p1", "a", "u", 10)]), batch_id=0)
+    t.merge(spark, _upd(spark, [("r2", "p1", "b", "u", 11)]), batch_id=1)
+    paths = [os.path.join(t.root, d["path"]) for d in t.manifest().deltas]
+    t.compact(spark)                                    # v4: no deltas
+    assert t.manifest().deltas == []
+    for keep_last in (4, 2):                            # v3 still lists both
+        t.expire_versions(keep_last=keep_last)
+        t.vacuum(grace_s=0)
+        assert all(os.path.exists(p) for p in paths)
+        got = {(r.repo, r.path): r.content
+               for r in t.read(spark, version=3).collect()}
+        assert got[("r1", "p1")] == "a" and got[("r2", "p1")] == "b"
+    t.expire_versions(keep_last=1)
+    assert t.vacuum(grace_s=0) > 0
+    assert not any(os.path.exists(p) for p in paths)
+    got = {(r.repo, r.path): r.content for r in t.read(spark).collect()}
+    assert got == {("r1", "p1"): "a", ("r1", "p2"): "v2", ("r2", "p1"): "b"}
 
 
 def test_history_and_projected_read(spark, tmp_path):

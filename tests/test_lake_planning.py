@@ -138,3 +138,56 @@ def test_manifest_reads_launch_no_listing_job(spark, tmp_path):
     assert _jobs(spark, lambda: rows.extend(
         t.scan(spark, [("_seq", ">", 5)]).collect())) == 1
     assert [r.content for r in rows] == ["new"]
+
+
+def _upd(spark, rows):
+    return spark.createDataFrame(
+        rows, "repo string, path string, content string, _op string, _seq long")
+
+
+def test_merge_writes_one_delta_in_two_jobs(spark, tmp_path):
+    """On a 64-bucket table a merge that does not fold writes its winners
+    once, as one delta file, in at most 2 jobs — no target read, join or
+    bucket-count job — and rewrites no base file."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [(f"r{i % 7}", f"p{i}", f"v{i}") for i in range(2000)],
+        "repo string, path string, content string"), ["repo", "path"],
+        n_buckets=64)
+    base = t.manifest().files
+    upd = _upd(spark, [(f"r{i % 7}", f"p{i}", f"new{i}", "u", 10 + i)
+                       for i in range(0, 2000, 10)])
+    res = {}
+    assert _jobs(spark, lambda: res.update(t.merge(spark, upd, batch_id=0))) <= 2
+    m = t.manifest()
+    assert m.files == base
+    assert [d["version"] for d in m.deltas] == [2]
+    assert m.lineage[-1]["files_written"] == 1
+    assert m.lineage[-1]["files_rewritten"] == 0
+    assert res["rows_in"] == 200
+    assert res["buckets_touched"] == len(m.deltas[0]["buckets"]) > 32
+    assert t.read_key(spark, {"repo": "r0", "path": "p70"}).first().content == "new70"
+
+
+def test_reads_with_deltas_stay_one_job(spark, tmp_path):
+    """read_key on a table with deltas resolves with orderBy().limit(1) in
+    one job; a _seq watermark scan keeping a single delta reads it as it is,
+    in one job."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, spark.createDataFrame(
+        [(f"r{i % 7}", f"p{i}", f"v{i}") for i in range(2000)],
+        "repo string, path string, content string"), ["repo", "path"],
+        n_buckets=64)
+    t.merge(spark, _upd(spark, [("r0", "p0", "a", "u", 10),
+                                ("r1", "p1", "b", "u", 11)]), batch_id=0)
+    t.merge(spark, _upd(spark, [("r0", "p0", "c", "u", 20)]), batch_id=1)
+    assert len(t.manifest().deltas) == 2
+    rows = []
+    assert _jobs(spark, lambda: rows.extend(
+        t.read_key(spark, {"repo": "r0", "path": "p0"}).collect())) == 1
+    assert [r.content for r in rows] == ["c"]
+    rows.clear()
+    assert len(t.pruned_entries([("_seq", ">", 15)])) == 1
+    assert _jobs(spark, lambda: rows.extend(
+        t.scan(spark, [("_seq", ">", 15)]).collect())) == 1
+    assert [r.content for r in rows] == ["c"]

@@ -24,9 +24,9 @@ def _hashes_of(table, spark):
 
 
 def test_cow_merge_is_self_compacting(spark, tmp_path):
-    """The COW MERGE rewrites touched buckets whole, so per-bucket file count
-    stays at 1 over an unbounded micro-batch tail (no small-file buildup —
-    the write-amplification/read-amplification trade the bucket count tunes).
+    """Merges append deltas and every fold rewrites the buckets they touched
+    whole, so the per-bucket BASE file count stays at 1 over an unbounded
+    micro-batch tail (no small-file buildup — 6 batches fold once).
     compact_small_files is therefore a no-op on a pure-tail table."""
     base = source_table(spark, 150)
     ev = change_events(spark, 150, 1200, pre_init_frac=0.0)
@@ -204,8 +204,8 @@ def test_day2_maintenance_soak_compact_vacuum_resync(spark, tmp_path):
     expiry + vacuum fire between appends; mid-soak the T1 protocol runs
     (stop the stream, atomic resync via replace(), re-tail from a fresh
     checkpoint); maintenance then continues over the re-tailed table.
-    Invariants held throughout: per-bucket manifest file count stays at the
-    COW bound (1), expiry+vacuum actually reclaim the pre-resync
+    Invariants held throughout: per-bucket base file count stays at the
+    fold bound (1), expiry+vacuum actually reclaim the pre-resync
     generation (on-disk parquet stays bounded by the retained live set),
     and the final state is exact oracle parity."""
     import glob as _glob
@@ -271,7 +271,7 @@ def test_day2_maintenance_soak_compact_vacuum_resync(spark, tmp_path):
     # the pre-resync generation becomes reclaimable once its versions expire
     reclaimed = maintain()
     assert reclaimed >= 0
-    assert bucket_bound() == 1          # quiesced: exact COW bound
+    assert bucket_bound() == 1          # quiesced: exact fold bound
 
     # ---- phase C: more load + maintenance on the re-synced table ----
     slices[3].coalesce(1).write.mode("append").parquet(log)
@@ -282,7 +282,8 @@ def test_day2_maintenance_soak_compact_vacuum_resync(spark, tmp_path):
 
     # on-disk parquet bounded by what the retained manifests reference
     live = {e["path"] for m_v in table._versions()
-            for e in table.manifest(version=m_v).files}
+            for m in [table.manifest(version=m_v)]
+            for e in m.files + m.deltas}
     on_disk = {os.path.relpath(p, table.root) for p in _glob.glob(
         os.path.join(table.root, "data", "**", "*.parquet"), recursive=True)}
     assert on_disk <= live, sorted(on_disk - live)[:5]
