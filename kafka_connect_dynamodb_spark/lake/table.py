@@ -55,7 +55,7 @@ from pyspark.sql import types as T
 from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, CommitIO, PosixCommitIO)
-from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
+from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
 
 __all__ = ["LakeTable", "Manifest", "CommitConflict"]
 
@@ -463,11 +463,15 @@ class LakeTable:
                     entries.append({"path": rel, "bucket": b})
         return self._with_stats(df.sparkSession, entries)
 
-    def _write_delta(self, df: DataFrame, version: int, keys: list[str]
-                     ) -> tuple[list[dict[str, Any]], int]:
+    def _write_delta(self, df: DataFrame, version: int, keys: list[str],
+                     single: bool) -> tuple[list[dict[str, Any]], int]:
         """Write ``df`` (with ``_bucket``) as the delta of commit
         ``version``: rows sorted by bucket and key, one file unless the
-        batch outgrows AQE's advisory partition size. One ``observe`` on the
+        batch outgrows AQE's advisory partition size. A ``single``
+        (one-partition, :func:`one_partition`) ``df`` is written behind a
+        ``coalesce(1)`` — one single-task job, no shuffle; any other
+        ``df`` is shuffled on ``_bucket`` so each bucket's rows meet in
+        one file. One ``observe`` on the
         write yields the row count and the buckets the delta touches — no
         extra job. Returns the delta entries (each carries the commit's
         bucket set) and the row count; an empty delta leaves no entry and
@@ -476,10 +480,10 @@ class LakeTable:
         staged = os.path.join(self.root, "data",
                               f"c{version:012d}-{uuid.uuid4().hex[:8]}")
         obs = Observation()
-        (df.repartition(F.col("_bucket"))
-           .sortWithinPartitions("_bucket", *keys)
-           # observed ABOVE the shuffle: an input with no partitions then
-           # still reports its zero count
+        out = df.coalesce(1) if single else df.repartition(F.col("_bucket"))
+        (out.sortWithinPartitions("_bucket", *keys)
+           # observed ABOVE the coalesce or shuffle, which never yields zero
+           # partitions: an empty input still reports its zero count
            .observe(obs, F.count(F.lit(1)).alias("rows"),
                     F.collect_set("_bucket").alias("buckets"))
            .drop("_bucket")
@@ -887,7 +891,10 @@ class LakeTable:
         further cut by parquet row-group stats on the key columns. When
         the kept files can hold two versions of the key, the newest
         (max ``_seq``, then the earlier commit) is taken with an
-        ``orderBy().limit(1)`` — still one Spark job."""
+        ``orderBy().limit(1)`` over the kept files read as one partition
+        (at most one base file and ``_MAX_DELTAS`` small deltas): the
+        top-1 then needs no shuffle, so the lookup stays one Spark job of
+        one stage."""
         m = self.manifest()
         if set(key_values) != set(m.key_cols):
             raise ValueError(f"need exactly keys {m.key_cols}")
@@ -908,7 +915,7 @@ class LakeTable:
         for c in m.key_cols:
             df = df.filter(F.col(c) == lits[c])
         if _may_hold_two_versions(base, deltas):
-            df = (df.withColumn("_rank", _commit_rank())
+            df = (df.withColumn("_rank", _commit_rank()).coalesce(1)
                     .orderBy(F.col("_seq").desc(), F.col("_rank").desc())
                     .limit(1).drop("_rank"))
         df = df.filter(~F.col("_deleted"))
@@ -1019,8 +1026,9 @@ class LakeTable:
         keys + payload + op_col + seq_col).
 
         Physical plan: one write of the batch as this commit's DELTA —
-        shuffled on ``_bucket``, sorted by bucket and key, usually one file
-        — whose ``observe`` yields ``rows_in`` and the touched buckets; then
+        sorted by bucket and key, usually one file; shuffled on ``_bucket``
+        unless ``updates`` is one partition (:meth:`_write_delta`) —
+        whose ``observe`` yields ``rows_in`` and the touched buckets; then
         an atomic manifest commit that appends the delta and references
         every base file unchanged. No target read, no join, no bucket
         rewrite: stale winners (``_seq`` not above the stored row's) are
@@ -1136,6 +1144,9 @@ class LakeTable:
                         "batch explicitly if the loss is intended")
                 upd = upd.withColumn(c, F.col(c).cast(evolved[c].dataType))
         upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets))
+        # asked before the persist below: a cache of a frame that reads a
+        # cache declares no partitioning
+        single = one_partition(upd)
         if self.change_feed:
             upd = upd.persist()          # written twice: delta and feed
         committed = dict(m.committed)
@@ -1145,7 +1156,7 @@ class LakeTable:
         try:
             delta, n_upd = self._write_delta(
                 upd.select(*data_cols, "_seq", "_deleted", "_bucket"),
-                m.version + 1, keys)
+                m.version + 1, keys, single)
             if n_upd == 0:
                 return self._next(m, {**lineage, "rows_in": 0},
                                   committed=committed)

@@ -10,13 +10,22 @@ raw events
   -> parse only the small ``keys`` envelope per event (cheap from_json)
   -> F5 parse-error drop
   -> per-key LWW dedup carrying the *raw* image string (max_by partial+final
-     agg — shuffle moves one row per key per mapper, not one per event)
+     agg — on a multi-partition batch the shuffle moves one row per key per
+     mapper, not one per event; a one-partition batch has no shuffle)
   -> decode the winners' image envelope (one from_json over |keys| rows,
      NOT |events| — the expensive JSON parse runs post-reduction)
   -> additive schema evolution: discover new attribute names from the
-     winners' map keys (tiny agg)
+     winners' map keys (one global agg; the action that fills the winners
+     cache)
   -> LakeTable.merge (one merge-on-read delta per commit, idempotent on
      batch_id)
+
+A micro-batch that arrives as ONE input partition (one log file that fits
+one split — the reference's 1,000-record GetRecords page) is applied with no
+exchange at all: the batch is planned behind a ``coalesce(1)``, so the LWW
+reduce, schema discovery and the delta write each run as one single-task
+stage (lww.one_partition). A batch of several partitions keeps the
+shuffled plan.
 
 Every step is declarative; the whole batch plan is Catalyst-optimized and
 whole-stage-codegen'd. No Python executes per row. Ordering the heavy
@@ -35,7 +44,7 @@ from pyspark.sql import functions as F
 from kafka_connect_dynamodb_spark.functions.envelope import KEY_FIELDS, PAYLOAD_FIELDS
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators import filters
-from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
+from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
 
 TAGGED_MAP = "map<string,struct<s:string,n:string,bool:boolean>>"
 
@@ -51,18 +60,28 @@ def decode_events(df: DataFrame, *, col: str = "new_image",
     """Decode an AttributeValue-envelope JSON column into typed columns.
 
     Parses the envelope once into a map column; payload fields project out of
-    it JVM-side. With ``discover_fields`` the map keys are aggregated to
-    detect additive attributes (schema evolution) — one partial-agg job over
-    ``df`` (callers pass post-dedup winners, so this is O(|keys|)).
+    it JVM-side. With ``discover_fields`` the map keys are collected to
+    detect additive attributes (schema evolution) — one global aggregate
+    over ``df`` (callers pass post-dedup winners, so this is O(|keys|)),
+    and the action that fills ``df``'s cache when it is persisted.
+
+    A one-partition ``df`` (lww.one_partition) is decoded behind a
+    ``coalesce(1)``. A scan of a persisted frame runs as an AQE cache stage
+    that reports no partitioning, so an aggregate over it would get an
+    exchange back; above the ``coalesce(1)`` the discovery aggregate needs
+    none, and the decoded frame declares one partition to the merge's
+    delta write.
     """
+    if one_partition(df):
+        df = df.coalesce(1)
     out = df.withColumn("_m", F.from_json(F.col(col), TAGGED_MAP))
 
     fields = list(PAYLOAD_FIELDS)
     if discover_fields:
         known = set(fields)
-        found = (out.select(F.explode(F.map_keys("_m")).alias("k"))
-                    .groupBy("k").count().collect())
-        fields += sorted(r["k"] for r in found if r["k"] not in known)
+        (found,) = out.select(F.array_distinct(F.flatten(
+            F.collect_set(F.map_keys("_m"))))).collect()[0]
+        fields += sorted(k for k in found if k not in known)
 
     for f in fields:
         if f in df.columns:
@@ -80,6 +99,12 @@ def prepare_winners(df: DataFrame, *,
     This is the only full-pass-over-events stage; callers persist its result
     so schema discovery and the MERGE both reuse one pass.
 
+    A one-partition input (lww.one_partition: Spark's split planning put
+    the batch in one partition) is planned behind a ``coalesce(1)`` before
+    the filters, so the plan declares ``SinglePartition`` and the LWW
+    partial+final aggregates run back to back in one task with no exchange.
+    Any other input keeps the shuffled partial+final aggregate.
+
     Plan shape (see PLANS.md): pre-agg filters use only CHEAP, parquet-pushable
     predicates (event-name IN, keys IsNotNull). The exact parse-error drop (F5)
     for unparseable keys runs POST-dedup on the ~|keys|-row winner set — if it
@@ -90,6 +115,8 @@ def prepare_winners(df: DataFrame, *,
     final state is identical to the reference's per-record skip
     (DynamoDBSourceTask.java:363-367).
     """
+    if one_partition(df):
+        df = df.coalesce(1)
     if init_sync_start is not None:
         df = filters.pre_init_sync_filter(df, init_sync_start)
 
@@ -130,8 +157,7 @@ def decode_winners(winners: DataFrame, *,
 def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
                 batch_id: int | None = None, source: str = "stream",
                 init_sync_start: datetime | None = None,
-                now: datetime | None = None,
-                discover_fields: bool = True) -> dict[str, Any]:
+                now: datetime | None = None) -> dict[str, Any]:
     """Full micro-batch apply with exactly-once semantics.
 
     Safe to re-invoke with the same batch_id (foreachBatch redelivery):
@@ -139,12 +165,16 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
 
     The LWW winners are persisted so the batch makes exactly ONE full pass
     over the events: schema discovery and the MERGE's delta write both
-    read the ~|keys|-row cache, never the raw event stream again.
+    read the ~|keys|-row cache, never the raw event stream again. The
+    discovery aggregate is the one action that fills the cache; on a
+    one-partition batch the whole apply is three single-task jobs (fill
+    the cache, discover, write the delta), plus the change feed's writes
+    on a ``change_feed`` table.
 
     The F3 danger-zone check rides the same pass as an ``observe`` metric
     (min ts over the pre-filter events) instead of a separate agg job; the
-    observation resolves when the winners cache materializes, still BEFORE
-    any merge work, so a breach aborts the batch unapplied
+    observation resolves with the action that fills the winners cache,
+    still BEFORE any merge work, so a breach aborts the batch unapplied
     (DynamoDBSourceTask.java:318-331). The CollectMetrics node intentionally
     pins the metric above the scan — the reference's check also sees every
     polled record, including ones later filters drop.
@@ -156,16 +186,12 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
         df = df.observe(obs, F.min("ts").alias("min_ts"))
     winners = prepare_winners(df, init_sync_start=init_sync_start).persist()
     try:
+        deduped = decode_winners(winners, discover_fields=True)
         if obs is not None:
-            # materialize the single events pass so the observation resolves
-            # BEFORE merge work; with no danger check armed, the first
-            # downstream action materializes the cache instead (no extra job)
-            winners.count()
             min_ts = obs.get.get("min_ts")
             if min_ts is not None and min_ts <= filters.danger_cutoff(now):
                 raise DangerZoneError(
                     "batch contains events older than the 20h danger zone")
-        deduped = decode_winners(winners, discover_fields=discover_fields)
         return table.merge(spark, deduped, batch_id=batch_id, source=source)
     finally:
         winners.unpersist()

@@ -8,9 +8,12 @@ amount to.
 Three physical strategies, all producing identical results:
 
 * ``latest_per_key`` (default) — ``groupBy(keys).agg(max_by(struct(*), order))``.
-  Catalyst plans this as partial + final hash aggregation, so the shuffle moves
+  Catalyst plans this as partial + final aggregation, so the shuffle moves
   at most one row per key per map partition (map-side combine). Preferred at
-  scale: shuffle bytes ~ |distinct keys|, not |events|.
+  scale: shuffle bytes ~ |distinct keys|, not |events|. On an input that is
+  one partition (:func:`one_partition`) behind a ``coalesce(1)``, the plan
+  declares ``SinglePartition`` and the planner drops the exchange: the
+  partial and final aggregates run back to back in one task.
 * ``latest_per_key_window`` — ``row_number() over (partition by keys order by
   order desc) = 1``. Requires a full shuffle + sort of every event; kept for
   plan comparison and as the SQL-oracle-shaped formulation.
@@ -24,6 +27,27 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def one_partition(df: DataFrame) -> bool:
+    """Does Spark plan ``df`` as one partition? Answered from planning
+    alone; no Spark job runs.
+
+    * A plan that runs without AQE (with AQE on: no exchange and no cache
+      in it — a file scan, a streaming micro-batch or local rows, under
+      projections, filters and observations) builds its RDD without
+      running it. For a file scan the count is Spark's own split planning:
+      one partition when the files fit one split, ``min(maxPartitionBytes,
+      max(openCostInBytes, bytes / cores))``.
+    * Under AQE, building the RDD would run the plan's query stages (an
+      exchange, or the fill of a cache), so the partitioning the plan
+      declares answers instead: ``SinglePartition`` behind a
+      ``coalesce(1)``, including one inside a persisted frame.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return plan.execute().getNumPartitions() <= 1
+    return plan.inputPlan().outputPartitioning().numPartitions() == 1
 
 
 def _ord(order_cols: list[str]):

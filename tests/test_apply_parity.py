@@ -3,18 +3,20 @@ per-row sha256(content) equality (BASELINE.json input_hint; the analog of the
 reference's init-sync/stream-switchover integration tests,
 DynamoDBSourceConnectorIT.java:41-59)."""
 
-from datetime import timezone
+import threading
+from datetime import timedelta, timezone
 
 import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators.apply import (
-    DangerZoneError, decode_winners, prepare_winners)
+    DangerZoneError, apply_batch, decode_winners, prepare_winners)
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.plans.state import InitSyncStatus
 from kafka_connect_dynamodb_spark.sources.generator import (
-    DEFAULT_BASE_TS, change_events, source_table)
+    DEFAULT_BASE_TS, change_events, events_schema, source_table)
+from kafka_connect_dynamodb_spark.streaming import tail
 from tests.oracle import final_hashes, replay
 
 N_KEYS, N_EVENTS = 400, 3000
@@ -112,3 +114,96 @@ def test_prepare_batch_is_fully_jvm(spark):
     explained = batch._jdf.queryExecution().executedPlan().toString()
     for marker in ("BatchEvalPython", "ArrowEvalPython", "FlatMapGroupsInPandas"):
         assert marker not in explained
+
+
+@pytest.mark.parametrize("one_file", [False, True])
+def test_danger_zone_breach_commits_nothing(spark, tmp_path, one_file):
+    """A breach raises before the merge: the table version stays put, for a
+    multi-partition frame and for a one-file batch alike."""
+    base = source_table(spark, N_KEYS)
+    events = change_events(spark, N_KEYS, 500, danger_event=True, pre_init_frac=0.0)
+    if one_file:
+        events.coalesce(1).write.parquet(str(tmp_path / "log"))
+        events = spark.read.parquet(str(tmp_path / "log"))
+    table = LakeTable(str(tmp_path / "tbl"))
+    pipe = CdcPipeline(spark, table, n_buckets=8, clock=lambda: CLOCK)
+    pipe.init_sync(base)
+    version = table.current_version()
+    with pytest.raises(DangerZoneError):
+        pipe.sync_batch(events, 0, danger_check=True)
+    assert table.current_version() == version
+
+
+NOW = DEFAULT_BASE_TS + timedelta(hours=1)
+
+
+def _in_thread(fn, timeout_s=180):
+    """``fn()`` on a worker thread, failing instead of hanging when it
+    blocks (an Observation that never resolves waits forever)."""
+    out = {}
+
+    def run():
+        try:
+            out["value"] = fn()
+        except BaseException as e:  # noqa: BLE001 — re-raised below
+            out["error"] = e
+
+    worker = threading.Thread(target=run, daemon=True)
+    worker.start()
+    worker.join(timeout_s)
+    assert not worker.is_alive(), f"blocked for {timeout_s} s"
+    if "error" in out:
+        raise out["error"]
+    return out.get("value")
+
+
+def _assert_empty_commit(table, version):
+    m = table.manifest()
+    assert m.version == version + 1
+    assert m.lineage[-1]["rows_in"] == 0
+    assert m.committed["stream"] == 0
+    assert m.deltas == []
+
+
+def _small_table(spark, tmp_path):
+    table = LakeTable(str(tmp_path / "tbl"))
+    table.create(spark, source_table(spark, 50), ["repo", "path"], n_buckets=8)
+    return table
+
+
+@pytest.mark.parametrize("shape", ["no_partitions", "empty_partitions",
+                                   "parquet_file"])
+def test_empty_batch_commits_zero_rows(spark, tmp_path, shape):
+    """An empty batch — a frame of no partitions, local rows with none in
+    them, or one empty parquet file read as one partition — commits
+    ``rows_in: 0`` and advances the batch marker without waiting on an
+    observation."""
+    df = spark.createDataFrame([], events_schema())
+    if shape == "no_partitions":
+        df = spark.createDataFrame(spark.sparkContext.emptyRDD(), events_schema())
+        assert df.rdd.getNumPartitions() == 0
+    elif shape == "parquet_file":
+        df.coalesce(1).write.parquet(str(tmp_path / "log"))
+        df = spark.read.parquet(str(tmp_path / "log"))
+        assert df.rdd.getNumPartitions() == 1
+    table = _small_table(spark, tmp_path)
+    version = table.current_version()
+    res = _in_thread(lambda: apply_batch(spark, table, df, batch_id=0,
+                                         source="stream", now=NOW))
+    assert res["rows_in"] == 0
+    _assert_empty_commit(table, version)
+
+
+def test_tail_over_empty_log_file_commits_zero_rows(spark, tmp_path):
+    log = str(tmp_path / "log")
+    spark.createDataFrame([], events_schema()).coalesce(1).write.parquet(log)
+    table = _small_table(spark, tmp_path)
+    version = table.current_version()
+    q = tail.start_tail(spark, log, table, checkpoint_dir=str(tmp_path / "cp"),
+                        now=NOW)
+    try:
+        _in_thread(q.awaitTermination)
+    finally:
+        if q.isActive:
+            q.stop()
+    _assert_empty_commit(table, version)

@@ -2,6 +2,7 @@
 Spark's layout function, manifest reads launch no listing job, and scan
 predicates compare as the column's type."""
 
+import hashlib
 import random
 import uuid
 from decimal import Decimal
@@ -11,7 +12,10 @@ from pyspark.sql import types as T
 
 from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
-from kafka_connect_dynamodb_spark.sources.generator import SEQ_BASE
+from kafka_connect_dynamodb_spark.operators.apply import apply_batch
+from kafka_connect_dynamodb_spark.sources.generator import (
+    SEQ_BASE, change_events, source_table)
+from tests.oracle import final_hashes, replay
 
 N_BUCKETS = (1, 8, 64, 4096)
 
@@ -105,8 +109,9 @@ def test_scan_casts_wide_int_watermark(spark, tmp_path):
     assert got == {"p0", "p1"}
 
 
-def _jobs(spark, fn):
-    """Spark jobs ``fn`` launches, counted through a job group."""
+def _counts(spark, fn) -> tuple[int, int, int]:
+    """Spark jobs, stages and tasks ``fn`` launches, counted through a job
+    group (every stage a job lists, skipped ones too)."""
     sc = spark.sparkContext
     group = f"plan-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -114,7 +119,17 @@ def _jobs(spark, fn):
         fn()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in st.getJobInfo(j).stageIds]
+    tasks = sum(info.numTasks for info in map(st.getStageInfo, stages)
+                if info is not None)
+    return len(jobs), len(stages), tasks
+
+
+def _jobs(spark, fn):
+    """Spark jobs ``fn`` launches."""
+    return _counts(spark, fn)[0]
 
 
 def test_manifest_reads_launch_no_listing_job(spark, tmp_path):
@@ -183,11 +198,63 @@ def test_reads_with_deltas_stay_one_job(spark, tmp_path):
     t.merge(spark, _upd(spark, [("r0", "p0", "c", "u", 20)]), batch_id=1)
     assert len(t.manifest().deltas) == 2
     rows = []
-    assert _jobs(spark, lambda: rows.extend(
-        t.read_key(spark, {"repo": "r0", "path": "p0"}).collect())) == 1
+    jobs, stages, _ = _counts(spark, lambda: rows.extend(
+        t.read_key(spark, {"repo": "r0", "path": "p0"}).collect()))
+    assert (jobs, stages) == (1, 1)
     assert [r.content for r in rows] == ["c"]
+    # the base file of the key's bucket and both deltas
+    assert len(t.read_key(spark, {"repo": "r0", "path": "p0"})
+               .inputFiles()) == 3
     rows.clear()
     assert len(t.pruned_entries([("_seq", ">", 15)])) == 1
     assert _jobs(spark, lambda: rows.extend(
         t.scan(spark, [("_seq", ">", 15)]).collect())) == 1
     assert [r.content for r in rows] == ["c"]
+
+
+@pytest.fixture(scope="module")
+def tail_batch(spark, tmp_path_factory):
+    """A ~1,000-event generator batch over 2,000 keys: the snapshot, its
+    events, and the same events as one log file and as four."""
+    root = tmp_path_factory.mktemp("batch")
+    base = source_table(spark, 2000)
+    ev = change_events(spark, 2000, 1000, evolve_frac=0.5)
+    ev.coalesce(1).write.parquet(str(root / "one"))
+    ev.repartition(4).write.parquet(str(root / "four"))
+    state = replay([r.asDict() for r in base.collect()],
+                   [r.asDict() for r in ev.collect()])
+    return base, root, final_hashes(state)
+
+
+def _apply_counts(spark, tmp_path, tail_batch, log):
+    base, root, expected = tail_batch
+    t = LakeTable(str(tmp_path / "tbl"))
+    t.create(spark, base, ["repo", "path"], n_buckets=64)
+    df = spark.read.parquet(str(root / log))
+    counts = _counts(spark, lambda: apply_batch(spark, t, df, batch_id=0))
+    got = {(r["repo"], r["path"]):
+           hashlib.sha256((r["content"] or "").encode()).hexdigest()
+           for r in t.read(spark).collect()}
+    assert got == expected
+    return t, df, counts
+
+
+def test_one_file_batch_applies_without_a_shuffle(spark, tmp_path, tail_batch):
+    """A batch read as one partition runs the LWW reduce, schema discovery
+    and the delta write as single-task stages: no exchange anywhere."""
+    t, df, (jobs, stages, tasks) = _apply_counts(
+        spark, tmp_path, tail_batch, "one")
+    assert df.rdd.getNumPartitions() == 1
+    assert jobs <= 3
+    assert jobs == stages == tasks
+    assert len(t.manifest().deltas) == 1
+    assert t.manifest().lineage[-1]["files_written"] == 1
+
+
+def test_four_partition_batch_keeps_the_shuffle(spark, tmp_path, tail_batch):
+    """The same events in four partitions keep the shuffled plan and reach
+    the same state."""
+    _, df, (jobs, stages, tasks) = _apply_counts(
+        spark, tmp_path, tail_batch, "four")
+    assert df.rdd.getNumPartitions() == 4
+    assert stages > jobs
