@@ -97,13 +97,13 @@ class CommitIO:
         raise NotImplementedError
 
     def move_dir(self, src: str, dst: str) -> None:
-        """Publish a staged directory at its final path. Atomic dir rename
-        on POSIX/HDFS/ABFS. On S3 (no rename) implement as copy+delete —
-        safe here because every caller moves a uniquely-named dir whose
-        final path is referenced only by an already-committed manifest and
-        readers tolerate late appearance (see LakeTable._heal_changes).
-        Must raise FileNotFoundError if ``src`` is missing (lost a heal
-        race) — callers treat that as already-published."""
+        """Move a staged directory to a new name (a retried
+        ``LakeTable.replace`` re-homes its uncommitted staging, see
+        LakeTable._restage). Atomic dir rename on POSIX/HDFS/ABFS. On S3
+        (no rename) implement as copy+delete — safe here because both
+        names are unique staging dirs that no manifest references until
+        the commit that follows the move. Must raise FileNotFoundError if
+        ``src`` is missing."""
         raise NotImplementedError
 
     def remove_tree(self, path: str) -> None:
@@ -165,12 +165,7 @@ class PosixCommitIO(CommitIO):
 
     def move_dir(self, src: str, dst: str) -> None:
         os.makedirs(os.path.dirname(dst), exist_ok=True)
-        try:
-            os.rename(src, dst)
-        except OSError:
-            if not os.path.isdir(src) and os.path.isdir(dst):
-                return              # a concurrent healer won; same outcome
-            raise
+        os.rename(src, dst)
 
     def remove_tree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
@@ -244,10 +239,9 @@ class ObjectStoreCommitIO(CommitIO):
       r4 next #3); the kernel-arbitrated CAS is honest across processes and
       is pinned by a multiprocessing race test.
     * ``move_dir`` = CopyObject per key + batched delete of the source
-      prefix (S3 has no rename). Callers only move uniquely-named staged
-      dirs whose final path is already referenced by a committed manifest,
-      and tolerate duplicate concurrent copies (idempotent content), which
-      is what makes copy+delete safe here (see LakeTable._heal_changes).
+      prefix (S3 has no rename). The only caller re-homes a uniquely-named
+      staging dir that no manifest references yet (LakeTable._restage), so
+      no reader can observe a half-copied destination.
     * ``list_dir`` / ``is_dir`` = ListObjectsV2 prefix listing with '/'
       delimiter (strongly consistent since 2020); "directory exists" means
       "prefix is listable", which an object store cannot distinguish from
@@ -311,20 +305,13 @@ class ObjectStoreCommitIO(CommitIO):
 
     def move_dir(self, src: str, dst: str) -> None:
         if not os.path.isdir(src):
-            if os.path.isdir(dst):
-                return                    # a concurrent healer won
             raise FileNotFoundError(src)
-        # CopyObject per key, then delete the source prefix — the S3 shape;
-        # a reader may briefly see a partially-copied destination, which
-        # every caller tolerates (deltas are sealed by _SUCCESS-last order)
+        # CopyObject per key, then delete the source prefix — the S3 shape
         names = []
         for dirpath, _dirs, files in os.walk(src):
             rel = os.path.relpath(dirpath, src)
             for f in files:
                 names.append(os.path.normpath(os.path.join(rel, f)))
-        # data files first, _SUCCESS marker last: a Spark reader of the
-        # destination only considers it complete once the marker lands
-        names.sort(key=lambda n: (os.path.basename(n) == "_SUCCESS", n))
         for rel in names:
             out = os.path.join(dst, rel)
             os.makedirs(os.path.dirname(out), exist_ok=True)

@@ -43,10 +43,11 @@ import dataclasses
 import json
 import operator
 import os
+import re
 import uuid
 from dataclasses import dataclass, field
 from decimal import Decimal
-from typing import Any, Callable
+from typing import Any, Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -72,6 +73,10 @@ _MAX_DELTAS = 5
 
 _MAX_STRING_STAT = 256
 
+# files a commit reads footer stats of on the driver; above it one
+# distributed job reads them (:meth:`LakeTable._with_stats`)
+_STATS_DRIVER_MAX_FILES = 64
+
 
 _INT_WIDEN_ORDER = ("byte", "short", "integer", "long")
 
@@ -88,19 +93,28 @@ def _typed_lit(v, dt: T.DataType):
     return F.lit(v).cast(dt)
 
 
-def _commit_rank() -> Column:
-    """Minus the commit version a row's file was written at, parsed from
-    its ``data/c{v:012d}[-uid]/`` staging dir: the tie-break of the
-    resolution order (max ``_seq``, then the EARLIER commit). Every delta is
-    newer than every base file (a fold or replace leaves no delta behind),
-    and a base file holds one row per key, so ranking base rows by their own
-    version still puts them before every delta. A file in no such dir
-    ranks as version 0, before every delta too. ``input_file_name()``
+# the staging dir every commit writes its files under, data/c{v:012d}-{uid}:
+# the one parse of a file's commit version (reads, the feed and vacuum)
+_COMMIT_DIR = r"c(\d{12})(?:-[0-9a-f]+)?"
+
+
+def _commit_of_file() -> Column:
+    """The commit version a row's file was written at, parsed from its
+    staging dir (null for a file in no such dir). ``input_file_name()``
     rather than ``_metadata.file_path``: the metadata column costs a point
     lookup ~50 ms more (measured on 4 cores)."""
-    v = F.regexp_extract(F.input_file_name(),
-                         r"/c(\d{12})(?:-[0-9a-f]+)?/", 1).try_cast("long")
-    return -F.coalesce(v, F.lit(0))
+    return F.regexp_extract(F.input_file_name(),
+                            f"/{_COMMIT_DIR}/", 1).try_cast("long")
+
+
+def _commit_rank() -> Column:
+    """Minus :func:`_commit_of_file`: the tie-break of the resolution order
+    (max ``_seq``, then the EARLIER commit). Every delta is newer than every
+    base file (a fold or replace leaves no delta behind), and a base file
+    holds one row per key, so ranking base rows by their own version still
+    puts them before every delta. A file in no such dir ranks as version 0,
+    before every delta too."""
+    return -F.coalesce(_commit_of_file(), F.lit(0))
 
 
 def _may_hold_two_versions(base: list[dict[str, Any]],
@@ -228,6 +242,29 @@ def _file_may_match(stats: dict[str, list], col: str, op: str, val) -> bool:
     raise ValueError(f"unsupported op {op!r}")
 
 
+def _feed_batches(path: str, version: int, schema: T.StructType):
+    """Arrow batches of one change-feed file read as ``schema``: columns the
+    file lacks (added by a later schema evolution) are null, narrower types
+    are cast up, and ``_commit`` is ``version``. Runs in the Python worker
+    of :meth:`LakeTable.stream_changes`' source."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(schema)
+    with pq.ParquetFile(path) as pf:
+        have = set(pf.schema_arrow.names)
+        for b in pf.iter_batches(
+                columns=[c for c in target.names if c in have]):
+            n = b.num_rows
+            yield pa.RecordBatch.from_arrays(
+                [pa.repeat(pa.scalar(version, f.type), n)
+                 if f.name == "_commit"
+                 else b.column(f.name).cast(f.type) if f.name in have
+                 else pa.nulls(n, f.type)
+                 for f in target], schema=target)
+
+
 @dataclass
 class Manifest:
     version: int
@@ -239,7 +276,9 @@ class Manifest:
     committed: dict[str, int] = field(default_factory=dict)     # source -> last batch_id
     properties: dict[str, Any] = field(default_factory=dict)    # free-form (state doc etc.)
     lineage: list[dict[str, Any]] = field(default_factory=list) # recent commit metrics
-    change_files: list[dict[str, Any]] = field(default_factory=list)  # {version, path}
+    # change feed, oldest first: {version, path} of files already committed
+    # as data (deltas, a replace's base files) or as a pre-image feed
+    change_files: list[dict[str, Any]] = field(default_factory=list)
     committed_at_ms: int = 0               # wall-clock commit stamp (AS OF reads)
     # merge-on-read deltas, oldest first: {path, version, buckets, stats}
     deltas: list[dict[str, Any]] = field(default_factory=list)
@@ -267,12 +306,13 @@ class LakeTable:
 
     def __init__(self, root: str, io: CommitIO | None = None, *,
                  change_feed: bool = False, feed_preimages: bool = False,
-                 file_stats: bool = True,
-                 stats_driver_max_files: int = 64):
-        """``change_feed=True`` makes every MERGE also publish its compacted
-        per-commit delta (the LWW winners it applied) under ``changes/`` —
+                 file_stats: bool = True):
+        """``change_feed=True`` makes every MERGE publish its compacted
+        per-commit delta (the LWW winners it applied) as the change feed —
         the engine's CDC-OUT surface, mirroring the reference's table->event
-        emission direction; read back with :meth:`changes`.
+        emission direction; read back with :meth:`changes` and
+        :meth:`stream_changes`. The feed IS the data delta, named by
+        reference in ``Manifest.change_files``, so it costs no write.
 
         ``feed_preimages=True`` (requires ``change_feed``) upgrades the
         delta to Delta-CDF-shaped changes: only APPLIED post-image rows are
@@ -291,7 +331,9 @@ class LakeTable:
         DATA as a plain delta, but on a ``feed_preimages`` table it keeps
         the bucket-pruned join to compute the feed, now against the
         touched buckets' base files and deltas resolved per key
-        (:meth:`_feed_with_preimages`). Emitting pre-images at fold time
+        (:meth:`_feed_with_preimages`), and writes that feed as one more
+        file of the commit (pre-images cannot go into the delta: a delta
+        holds one row per key). Emitting pre-images at fold time
         instead would need every delta's winners kept until the fold, and
         the feed of a commit would lag it by up to ``_MAX_DELTAS`` commits.
 
@@ -309,7 +351,6 @@ class LakeTable:
         self.change_feed = change_feed
         self.feed_preimages = feed_preimages
         self.file_stats = file_stats
-        self.stats_driver_max_files = stats_driver_max_files
 
     # ------------------------------------------------------------------ log
 
@@ -359,55 +400,44 @@ class LakeTable:
         protocol): read the manifest ``m``, let ``attempt(m)`` build its
         successor (or return ``m`` itself: nothing to commit, and None is
         returned), then put it if absent. Losing the race to another
-        committer drops the attempt's staged feed delta and reruns
-        ``attempt`` against the new manifest, at most ``_COMMIT_RETRIES``
-        times; orphaned data staging is invisible to readers and reclaimed
-        by :meth:`vacuum`. A won commit that staged a delta publishes it."""
+        committer reruns ``attempt`` against the new manifest, at most
+        ``_COMMIT_RETRIES`` times. A lost or crashed attempt's files are
+        named by no manifest, so no reader (the change feed included) sees
+        them, and :meth:`vacuum` reclaims them."""
         for tries in range(_COMMIT_RETRIES + 1):
             m = self.manifest()
             new_m = attempt(m)
             if new_m is m:
                 return None
-            staged = [e["staged"] for e in new_m.change_files[-1:]
-                      if e["version"] == new_m.version]
             try:
                 self._commit(new_m, parent=m)
+                return new_m
             except CommitConflict:
-                for rel in staged:
-                    self.io.remove_tree(os.path.join(self.root, rel))
                 if tries == _COMMIT_RETRIES:
                     raise
-                continue
-            if staged:
-                self._heal_changes(new_m)
-            return new_m
 
     def _next(self, m: Manifest, lineage_entry: dict[str, Any], *,
-              feed: DataFrame | None = None, **fields) -> Manifest:
+              feed: Sequence[dict[str, Any]] = (), **fields) -> Manifest:
         """The successor of ``m`` with ``fields`` replaced and
         ``lineage_entry`` appended (the last 50 kept). Its stamp is left
-        for :meth:`_commit`. ``feed`` is written as this version's change
-        delta, STAGED under a hidden ``.stage-`` dir: dot-dirs are invisible
-        to :meth:`stream_changes`' file listing, so a lost or crashed commit
-        can never leak a phantom micro-batch; :meth:`_heal_changes`
-        publishes it to its final path once the commit wins."""
+        for :meth:`_commit`. ``feed`` lists the file entries this version
+        publishes as its change feed: files the attempt already wrote,
+        added to ``change_files`` by reference."""
         version = m.version + 1
-        change_files = fields.pop("change_files", m.change_files)
-        if feed is not None:
-            uid = uuid.uuid4().hex[:8]
-            staged = os.path.join("changes", f".stage-c{version:012d}-{uid}")
-            feed.write.mode("errorifexists").parquet(
-                os.path.join(self.root, staged))
-            change_files = change_files + [{
-                "version": version, "staged": staged,
-                "path": os.path.join("changes",
-                                     f"c{version:012d}-{uid}.parquet")}]
+        change_files = fields.pop("change_files", m.change_files) + [
+            {"version": version, "path": e["path"]} for e in feed]
         return dataclasses.replace(
             m, version=version, committed_at_ms=0, change_files=change_files,
             lineage=(m.lineage + [{"commit": version, **lineage_entry}])[-50:],
             **fields)
 
     # ---------------------------------------------------------------- layout
+
+    def _staging_dir(self, version: int) -> str:
+        """A fresh staging dir for files of commit ``version``,
+        ``data/c{version:012d}-{uid}`` (:data:`_COMMIT_DIR`)."""
+        return os.path.join(self.root, "data",
+                            f"c{version:012d}-{uuid.uuid4().hex[:8]}")
 
     def _write_bucketed(self, df: DataFrame, version: int,
                         sort_cols: list[str] | None = None,
@@ -434,8 +464,7 @@ class LakeTable:
         paths, so the suffix is invisible to readers; orphans are
         vacuum-reclaimed.
         """
-        staged = os.path.join(self.root, "data",
-                              f"c{version:012d}-{uuid.uuid4().hex[:8]}")
+        staged = self._staging_dir(version)
         if zval_col is not None:
             out = (df.repartitionByRange(n_range_parts or 8,
                                          F.col("_bucket"), F.col(zval_col))
@@ -477,8 +506,7 @@ class LakeTable:
         bucket set) and the row count; an empty delta leaves no entry and
         no files. The staging dir is named like a base commit's, so
         vacuum's in-flight guard covers it."""
-        staged = os.path.join(self.root, "data",
-                              f"c{version:012d}-{uuid.uuid4().hex[:8]}")
+        staged = self._staging_dir(version)
         obs = Observation()
         out = df.coalesce(1) if single else df.repartition(F.col("_bucket"))
         (out.sortWithinPartitions("_bucket", *keys)
@@ -506,14 +534,14 @@ class LakeTable:
             # touched (VERDICT r3: a 4096-bucket full-table commit = 4096
             # driver-side object-store reads on the commit critical path).
             # Hybrid, A/B-measured (BENCH/BASELINE.md r4): up to
-            # ``stats_driver_max_files`` files the driver reads footers via
+            # ``_STATS_DRIVER_MAX_FILES`` files the driver reads footers via
             # a thread pool (bounded O(1) work wrt table size, ~no
             # latency); above it ONE distributed mapInPandas job reads
             # footers executor-side (~0.5 s job overhead — noise on a big
             # commit, a 10% regression if paid on every small one) and the
             # driver only assembles the returned (path, stats) rows.
             paths = [os.path.join(self.root, e["path"]) for e in entries]
-            if len(paths) <= self.stats_driver_max_files:
+            if len(paths) <= _STATS_DRIVER_MAX_FILES:
                 from concurrent.futures import ThreadPoolExecutor
                 with ThreadPoolExecutor(
                         max_workers=min(16, len(paths))) as pool:
@@ -628,12 +656,14 @@ class LakeTable:
         scratch); the change-feed history is preserved for late consumers.
 
         On a ``change_feed`` table the new snapshot is ALSO published as a
-        feed delta of op-'r' rows — the reference re-publishes INIT_SYNC
+        feed epoch of op-'r' rows — the reference re-publishes INIT_SYNC
         records to the topic on resync (DynamoDBSourceTask.java:246-249,318-331),
         and without it a downstream mirror would silently diverge after a
         danger-zone re-snapshot. ``streaming.feed.mirror_changes`` detects
-        the 'r' epoch and truncates its table to it. The delta is read back
-        from the staged data files, so ``df`` is evaluated once.
+        the 'r' epoch and truncates its table to it. The epoch is the new
+        base files themselves, named in ``change_files``: they carry an
+        ``_op='r'`` column (outside the table schema, so table reads never
+        see it), and ``df`` is written once and evaluated once.
 
         Losing a commit race (a maintenance job landing mid-resync) reruns
         the attempt in :meth:`_transact` with the SAME staged data files,
@@ -648,6 +678,7 @@ class LakeTable:
         n_buckets = n_buckets if n_buckets is not None else m0.n_buckets
         stored, data_schema = self._snapshot_rows(df, seq_col, key_cols,
                                                   n_buckets)
+        stored = stored.withColumn("_op", F.lit("r"))
         entries: list[dict[str, Any]] | None = None
 
         def attempt(m: Manifest) -> Manifest:
@@ -655,12 +686,9 @@ class LakeTable:
             version = m.version + 1
             entries = (self._write_bucketed(stored, version) if entries is None
                        else self._restage(entries, version))
-            feed = None
-            if self.change_feed:
-                feed = (self._read_files(spark, data_schema, entries)
-                            .drop("_deleted").withColumn("_op", F.lit("r")))
             return self._next(
-                m, {"op": "replace", "files": len(entries)}, feed=feed,
+                m, {"op": "replace", "files": len(entries)},
+                feed=entries if self.change_feed else (),
                 key_cols=key_cols, n_buckets=n_buckets,
                 schema_json=json.dumps(data_schema.jsonValue()),
                 files=entries, deltas=[], committed={},
@@ -695,7 +723,7 @@ class LakeTable:
             raise ValueError(
                 f"restage: entries span multiple staging dirs "
                 f"(expected all under {old_rel!r}): {stray[:3]}")
-        new_rel = os.path.join("data", f"c{version:012d}-{uuid.uuid4().hex[:8]}")
+        new_rel = os.path.relpath(self._staging_dir(version), self.root)
         self.io.move_dir(os.path.join(self.root, old_rel),
                          os.path.join(self.root, new_rel))
         return [{**e, "path": new_rel + e["path"][len(old_rel):]}
@@ -1144,54 +1172,47 @@ class LakeTable:
                         "batch explicitly if the loss is intended")
                 upd = upd.withColumn(c, F.col(c).cast(evolved[c].dataType))
         upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets))
-        # asked before the persist below: a cache of a frame that reads a
-        # cache declares no partitioning
-        single = one_partition(upd)
-        if self.change_feed:
-            upd = upd.persist()          # written twice: delta and feed
         committed = dict(m.committed)
         if batch_id is not None:
             committed[source] = batch_id
         lineage = {"batch_id": batch_id, "source": source, "op": "merge"}
-        try:
-            delta, n_upd = self._write_delta(
-                upd.select(*data_cols, "_seq", "_deleted", "_bucket"),
-                m.version + 1, keys, single)
-            if n_upd == 0:
-                return self._next(m, {**lineage, "rows_in": 0},
-                                  committed=committed)
-            buckets = delta[0]["buckets"]
-            feed_df = None
-            if self.change_feed:
-                # CDC-OUT: this commit's compacted delta (the LWW winners as
-                # submitted, deletes as _op='d' tombstone rows). Cost is one
-                # extra write of ~|keys| rows — the winners are already
-                # cached, no extra source pass.
-                feed_df = upd.drop("_bucket", "_deleted")
-                if self.feed_preimages:
-                    feed_df = self._feed_with_preimages(
-                        spark, m, evolved, upd, buckets)
-            return self._next(
-                m, {**lineage, "rows_in": n_upd, "buckets_touched": len(buckets),
-                    "files_rewritten": 0, "files_written": len(delta)},
-                feed=feed_df, deltas=m.deltas + delta, committed=committed,
-                schema_json=json.dumps(evolved.jsonValue()) if (
-                    new_fields or widened) else m.schema_json)
-        finally:
-            upd.unpersist()
+        # the delta carries _op beside _deleted on every table: the change
+        # feed reads it, table reads (manifest schema) and folds drop it
+        delta, n_upd = self._write_delta(
+            upd.select(*data_cols, "_seq", "_deleted", "_op", "_bucket"),
+            m.version + 1, keys, one_partition(upd))
+        if n_upd == 0:
+            return self._next(m, {**lineage, "rows_in": 0},
+                              committed=committed)
+        buckets = delta[0]["buckets"]
+        feed: list[dict[str, Any]] = []
+        if self.feed_preimages:
+            feed = self._feed_with_preimages(spark, m, evolved, delta, buckets)
+        elif self.change_feed:
+            feed = delta
+        return self._next(
+            m, {**lineage, "rows_in": n_upd, "buckets_touched": len(buckets),
+                "files_rewritten": 0, "files_written": len(delta)},
+            feed=feed, deltas=m.deltas + delta, committed=committed,
+            schema_json=json.dumps(evolved.jsonValue()) if (
+                new_fields or widened) else m.schema_json)
 
     def _feed_with_preimages(self, spark: SparkSession, m: Manifest,
-                             schema: T.StructType, upd: DataFrame,
-                             buckets: list[int]) -> DataFrame:
-        """The Delta-CDF-shaped feed delta of a merge on a ``feed_preimages``
-        table: APPLIED winners only, plus the pre-image of every live row
-        they overwrote/deleted ('pu'/'pd', OLD ``_seq``). Submitted winners
-        that lose the seq guard are omitted — replay-neutral, and required
-        for additive consumers (a losing 'u' row would add a contribution
-        whose pre-image never existed). The stored rows come from a
+                             schema: T.StructType,
+                             delta: list[dict[str, Any]],
+                             buckets: list[int]) -> list[dict[str, Any]]:
+        """Write the Delta-CDF-shaped feed of a merge on a ``feed_preimages``
+        table and return its file entries: APPLIED winners only, plus the
+        pre-image of every live row they overwrote/deleted ('pu'/'pd', OLD
+        ``_seq``). Submitted winners that lose the seq guard are omitted —
+        replay-neutral, and required for additive consumers (a losing 'u'
+        row would add a contribution whose pre-image never existed). The
+        winners are read back from the merge's just-written ``delta``
+        files, so the batch is evaluated once; the stored rows come from a
         bucket-pruned join against the resolved base files and deltas of
-        the touched buckets (the one place a merge still reads its
-        target)."""
+        the touched buckets (the one place a merge still reads its target).
+        Written under a staging dir like a delta's, so :meth:`vacuum`
+        reclaims it if the attempt never commits."""
         keys = m.key_cols
         bset = set(buckets)
         tgt = self._resolved(
@@ -1200,7 +1221,9 @@ class LakeTable:
             schema).alias("t")
         payload_cols = [c for c in schema.fieldNames()
                         if c not in keys and c not in META_COLS]
-        s = upd.select(*keys, *payload_cols, "_op", "_seq", "_deleted").alias("s")
+        s = self._read_files(spark, T.StructType(
+            schema.fields + [T.StructField("_op", T.StringType())]),
+            delta).alias("s")
         applied = s.join(tgt, on=keys, how="left").filter(
             F.col("t._seq").isNull() | (F.col("s._seq") > F.col("t._seq")))
         post = applied.select(
@@ -1216,28 +1239,13 @@ class LakeTable:
             F.when(F.col("s._deleted"), F.lit("pd"))
              .otherwise(F.lit("pu")).alias("_op"),
             F.col("t._seq").alias("_seq"))
-        return post.unionByName(pre)
+        staged = self._staging_dir(m.version + 1)
+        post.unionByName(pre).write.mode("errorifexists").parquet(staged)
+        return [{"path": os.path.relpath(os.path.join(staged, f), self.root)}
+                for f in sorted(self.io.list_dir(staged))
+                if f.endswith(".parquet")]
 
     # ------------------------------------------------------------ change feed
-
-    def _heal_changes(self, m: Manifest) -> None:
-        """Publish committed-but-unpublished change deltas. A delta is
-        staged hidden and moved to its final path only after the manifest
-        commit wins; a crash between commit and publish leaves the staged
-        dir, which ANY later reader/writer/vacuum heals idempotently here
-        (losing a concurrent heal race is fine — the move tolerates a
-        missing source / existing destination)."""
-        for e in m.change_files:
-            staged = e.get("staged")
-            if not staged:
-                continue          # pre-staging manifest entry (old layout)
-            final = os.path.join(self.root, e["path"])
-            staged_abs = os.path.join(self.root, staged)
-            if self.io.is_dir(staged_abs) and not self.io.is_dir(final):
-                try:
-                    self.io.move_dir(staged_abs, final)
-                except FileNotFoundError:
-                    pass
 
     def changes(self, spark: SparkSession, *, from_version: int = 1,
                 to_version: int | None = None) -> DataFrame:
@@ -1248,65 +1256,97 @@ class LakeTable:
         ``read()`` exactly (pinned by tests) — the engine's table->event
         direction, mirroring the reference connector's Kafka emission.
 
-        On a ``feed_preimages`` table, deltas additionally carry 'pu'/'pd'
-        pre-image rows (the overwritten/deleted live row, OLD ``_seq``) and
-        post rows are restricted to APPLIED winners — the Delta-CDF shape
-        consumed by operators/incremental.py. Pre-image rows carry old seqs,
-        so LWW replayers (mirror_changes) are unaffected by construction."""
+        The feed reads exactly the files ``change_files`` names: each
+        merge's delta (which carries ``_op``) and a ``replace()``'s base
+        files (op 'r'). Only committed files are named, so a lost or
+        crashed attempt never shows, and a fold leaves its deltas named.
+
+        On a ``feed_preimages`` table each commit's feed is a file of its
+        own that additionally carries 'pu'/'pd' pre-image rows (the
+        overwritten/deleted live row, OLD ``_seq``), with post rows
+        restricted to APPLIED winners — the Delta-CDF shape consumed by
+        operators/incremental.py. Pre-image rows carry old seqs, so LWW
+        replayers (mirror_changes) are unaffected by construction."""
         m = self.manifest(to_version)
-        self._heal_changes(m)
         sel = [e for e in m.change_files if e["version"] >= from_version]
         if not sel:
             return spark.createDataFrame([], self._feed_schema(m))
-        # ONE scan over all selected delta dirs (a per-file union loop would
-        # grow the plan linearly with commit count — a 10k-commit feed must
-        # stay a single FileScan). The commit version is recovered from the
-        # delta dir name (c{version:012d}-{uid}.parquet) via input_file_name;
-        # the explicit CURRENT feed schema null-fills evolved columns in
-        # older files, like every other multi-version read here.
-        schema = self._feed_schema(m, with_commit=False)
-        paths = [os.path.join(self.root, e["path"]) for e in sel]
-        return (spark.read.schema(schema).parquet(*paths)
-                .withColumn("_commit", F.regexp_extract(
-                    F.input_file_name(),
-                    r"/c(\d{12})-[0-9a-f]+\.parquet/", 1).cast("long")))
+        # ONE scan over all selected files (a per-file union loop would grow
+        # the plan linearly with commit count — a 10k-commit feed must stay
+        # a single FileScan). The commit version is recovered from the
+        # files' staging dir name; the explicit CURRENT feed schema
+        # null-fills evolved columns in older files, like every other
+        # multi-version read here.
+        return (self._read_files(spark, self._feed_schema(m, with_commit=False),
+                                 sel)
+                .withColumn("_commit", _commit_of_file()))
 
     def _feed_schema(self, m: Manifest, *, with_commit: bool = True) -> T.StructType:
+        """The feed's columns, all nullable as a file read makes them (a
+        tombstone row carries null payload)."""
         fields = [f for f in m.schema().fields if f.name != "_deleted"]
         fields = fields + [T.StructField("_op", T.StringType(), True)]
         if with_commit:
             fields.append(T.StructField("_commit", T.LongType(), True))
-        return T.StructType(fields)
+        return T.StructType(fields)._as_nullable()
 
-    def stream_changes(self, spark: SparkSession,
-                       **reader_options: str) -> DataFrame:
-        """Subscribe to the change feed as a Structured Streaming source:
-        every future merge commit's delta file becomes a micro-batch for
-        downstream incremental consumers (the subscription analog of the
-        reference's Kafka topic). Schema is the CURRENT evolved feed schema;
-        older files read missing columns as null. Pair with a checkpoint on
-        the consumer side for exactly-once downstream processing.
+    def stream_changes(self, spark: SparkSession) -> DataFrame:
+        """Subscribe to the change feed as a Structured Streaming source
+        (the subscription analog of the reference's Kafka topic), with the
+        columns of :meth:`changes` in the CURRENT evolved feed schema; older
+        files read missing columns as null. Pair with a checkpoint on the
+        consumer side for exactly-once downstream processing.
 
-        Only PUBLISHED deltas are visible: merge stages each delta under a
-        hidden ``.stage-*`` prefix (Spark's file listing skips dot-paths)
-        and publishes it after its manifest commit wins, so the stream never
-        ingests a phantom delta from a lost commit attempt."""
-        cur = self.manifest()
-        self._heal_changes(cur)
-        # a consumer may subscribe BEFORE the first delta is published
-        self.io.ensure_dir(os.path.join(self.root, "changes"))
-        reader = (spark.readStream
-                  .schema(self._feed_schema(cur, with_commit=False))
-                  # each commit's delta is a c{version}.parquet directory
-                  .option("recursiveFileLookup", "true"))
-        for k, v in reader_options.items():
-            reader = reader.option(k, v)
-        # _commit recovered from the delta dir name, as in changes() — lets
-        # consumers order deltas and detect resync ('r') epochs
-        return (reader.parquet(os.path.join(self.root, "changes"))
-                .withColumn("_commit", F.regexp_extract(
-                    F.input_file_name(),
-                    r"/c(\d{12})-[0-9a-f]+\.parquet/", 1).cast("long")))
+        A Python streaming data source whose offsets are manifest versions:
+        the latest offset is the current version, and the micro-batch
+        ``(start, end]`` reads one partition per ``change_files`` entry of a
+        version in that range, with ``_commit`` set from the entry. It
+        reads the manifest log through this table's ``io`` and lists no
+        data directory, so a lost or crashed commit attempt can never leak
+        a phantom micro-batch."""
+        from pyspark.sql.datasource import (
+            DataSource, DataSourceStreamReader, InputPartition)
+
+        table = self
+        schema = self._feed_schema(self.manifest())
+        name = f"lake_changes_{uuid.uuid4().hex}"
+
+        class Reader(DataSourceStreamReader):
+            def initialOffset(self):
+                return {"version": 0}
+
+            def latestOffset(self):
+                return {"version": table.current_version()}
+
+            def partitions(self, start, end):
+                lo, hi = start["version"], end["version"]
+                return [InputPartition(
+                            (os.path.join(table.root, e["path"]), e["version"]))
+                        for e in table.manifest().change_files
+                        if lo < e["version"] <= hi]
+
+            def read(self, partition):
+                return _feed_batches(*partition.value, schema)
+
+        class Source(DataSource):
+            @classmethod
+            def name(cls):
+                return name
+
+            def schema(self):
+                return schema
+
+            def streamReader(self, schema):
+                return Reader()
+
+        spark.dataSource.register(Source)
+        # A Python source has no native Trigger.AvailableNow; without
+        # Spark's wrapper (SPARK-45178) an availableNow query falls back to
+        # ONE batch, and a consumer restarted over an uncommitted batch
+        # would replay just that batch and stop short of the feed's end.
+        spark.conf.set(
+            "spark.sql.streaming.triggerAvailableNowWrapper.enabled", "true")
+        return spark.readStream.format(name).load()
 
     # ------------------------------------------------------------- properties
 
@@ -1378,24 +1418,6 @@ class LakeTable:
 
         return self._transact(attempt)
 
-    def compact_small_files(self, spark: SparkSession, *,
-                            max_files_per_bucket: int = 4) -> Manifest | None:
-        """Compact only the buckets whose base file count exceeds the
-        threshold (folding every delta on the way, like any compact).
-
-        A fold writes one file per bucket it rewrites, so under a pure tail
-        this is a no-op; it exists for tables populated by
-        external appenders or after raising ``n_buckets``. Returns the new
-        manifest, or None if no bucket crossed the threshold."""
-        m = self.manifest()
-        counts: dict[int, int] = {}
-        for e in m.files:
-            counts[e["bucket"]] = counts.get(e["bucket"], 0) + 1
-        targets = sorted(b for b, n in counts.items() if n > max_files_per_bucket)
-        if not targets:
-            return None
-        return self.compact(spark, target_buckets=targets)
-
     def expire_versions(self, *, keep_last: int = 10) -> int:
         """Snapshot expiry: drop manifest files older than the newest
         ``keep_last`` versions (time travel to them stops working — an AS OF
@@ -1413,9 +1435,10 @@ class LakeTable:
     def expire_change_feed(self, *, below_version: int) -> int:
         """Change-feed retention: commit a metadata-only version whose
         ``change_files`` drops entries below ``below_version``. Without this
-        the feed list (and its delta dirs) grows with commit count forever.
-        The dropped deltas stay on disk until every retained manifest that
-        still lists them expires, then :meth:`vacuum` reclaims them —
+        the feed list (and the files it keeps alive, folded deltas
+        included) grows with commit count forever. The dropped files stay
+        on disk until every retained manifest that still lists them
+        expires, then :meth:`vacuum` reclaims them —
         downstream consumers get the full retention window to catch up, and
         a consumer needing older history must re-bootstrap from a snapshot
         (exactly Kafka's compacted-topic contract). Returns entries dropped.
@@ -1431,27 +1454,17 @@ class LakeTable:
         new_m = self._transact(attempt)
         return 0 if new_m is None else new_m.lineage[-1]["dropped"]
 
-    @staticmethod
-    def _staging_version(name: str) -> int:
-        """Commit version embedded in a staging dir name
-        (``c{v:012d}[-uid]`` for base files and deltas alike,
-        ``.stage-c{v:012d}-uid`` for feed deltas); 0 if unparseable
-        (legacy junk — reclaimable when unreferenced)."""
-        s = name[len(".stage-"):] if name.startswith(".stage-") else name
-        if s.startswith("c"):
-            digits = s[1:13]
-            if len(digits) == 12 and digits.isdigit():
-                return int(digits)
-        return 0
-
     def vacuum(self, *, grace_s: float = 3600.0) -> int:
-        """Delete data/feed files no RETAINED manifest references (base
-        files, deltas and feed deltas alike). Returns count removed.
+        """Delete data files no RETAINED manifest references. Returns count
+        removed.
 
         Retention coupling (standard lakehouse semantics): the live set is
-        the union over every manifest still in the log — a concurrent
-        time-travel reader of any retained version never loses a file under
-        it; run :meth:`expire_versions` first to make old files reclaimable.
+        every file a manifest still in the log names as a base file, a
+        delta or a change-feed file — a concurrent time-travel reader of any
+        retained version never loses a file under it, and a delta a fold
+        dropped from ``deltas`` lives on while the feed names it; run
+        :meth:`expire_change_feed` and :meth:`expire_versions` first to make
+        old files reclaimable.
         In-flight protection is TWO independent guards:
 
         * a staging dir whose embedded version is AHEAD of the current
@@ -1469,42 +1482,33 @@ class LakeTable:
         import time as _time
         now = _time.time()
         cur = self.manifest()
-        self._heal_changes(cur)
-        live: set[str] = set()
-        live_change_dirs: set[str] = set()
-        for v in self._versions():
-            m = self.manifest(v)
-            live |= {os.path.join(self.root, e["path"])
-                     for e in m.files + m.deltas}
-            # a feed "file" is a parquet dir (part files + _SUCCESS inside)
-            live_change_dirs |= {os.path.join(self.root, e["path"])
-                                 for e in m.change_files}
+        live = {os.path.join(self.root, e["path"])
+                for m in map(self.manifest, self._versions())
+                for e in m.files + m.deltas + m.change_files}
         removed = 0
-        for sub in ("data", "changes"):
-            root = os.path.join(self.root, sub)
-            if not self.io.is_dir(root):
+        root = os.path.join(self.root, "data")
+        for d in self.io.list_dir(root):
+            top = os.path.join(root, d)
+            if not self.io.is_dir(top):
                 continue
-            for d in self.io.list_dir(root):
-                top = os.path.join(root, d)
-                if not self.io.is_dir(top):
-                    continue
-                if top in live_change_dirs:
-                    continue
-                if self._staging_version(d) > cur.version:
-                    continue                      # possibly in-flight writer
-                for dirpath, files in self.io.walk_files(top):
-                    for f in files:
-                        p = os.path.join(dirpath, f)
-                        if p not in live and (f.endswith(".parquet")
-                                              or f.startswith(".")
-                                              or f.startswith("_")):
-                            if grace_s > 0:
-                                try:
-                                    if now - self.io.file_mtime(p) < grace_s:
-                                        continue
-                                except FileNotFoundError:
+            # a staging dir named for a version ahead of the current one
+            # may be a writer's in flight; an unparseable name is junk
+            hit = re.match(_COMMIT_DIR, d)
+            if hit and int(hit.group(1)) > cur.version:
+                continue
+            for dirpath, files in self.io.walk_files(top):
+                for f in files:
+                    p = os.path.join(dirpath, f)
+                    if p not in live and (f.endswith(".parquet")
+                                          or f.startswith(".")
+                                          or f.startswith("_")):
+                        if grace_s > 0:
+                            try:
+                                if now - self.io.file_mtime(p) < grace_s:
                                     continue
-                            self.io.delete_file(p)
-                            removed += 1
-                    self.io.remove_dir_if_empty(dirpath)
+                            except FileNotFoundError:
+                                continue
+                        self.io.delete_file(p)
+                        removed += 1
+                self.io.remove_dir_if_empty(dirpath)
         return removed

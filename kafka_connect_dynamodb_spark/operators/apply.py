@@ -168,8 +168,8 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
     read the ~|keys|-row cache, never the raw event stream again. The
     discovery aggregate is the one action that fills the cache; on a
     one-partition batch the whole apply is three single-task jobs (fill
-    the cache, discover, write the delta), plus the change feed's writes
-    on a ``change_feed`` table.
+    the cache, discover, write the delta), on a ``change_feed`` table too:
+    the delta is the change feed.
 
     The F3 danger-zone check rides the same pass as an ``observe`` metric
     (min ts over the pre-filter events) instead of a separate agg job; the

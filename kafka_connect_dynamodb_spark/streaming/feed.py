@@ -3,17 +3,18 @@ first-class operator.
 
 The reference's output is a Kafka topic that downstream consumers replay
 into their own stores (README.md:21-27); here the analog is a second
-LakeTable fed solely by the primary's published change feed. Exactly-once
+LakeTable fed solely by the primary's committed change feed. Exactly-once
 end-to-end comes from two idempotence layers composed: the Structured
-Streaming checkpoint WAL pins which feed files belong to each micro-batch,
+Streaming checkpoint WAL pins which primary commit versions belong to each
+micro-batch (``LakeTable.stream_changes``' offsets are manifest versions),
 and ``LakeTable.merge``'s ``committed[source]=batch_id`` guard makes a
 redelivered batch a no-op — so a consumer killed mid-batch and restarted
 converges to sha-parity with the primary (pinned by
 tests/test_change_feed.py::test_downstream_table_exactly_once_via_feed).
 
-Scale note: the feed carries per-commit compacted deltas (LWW winners,
-~|changed keys| rows), so a mirror's work is proportional to churn, not
-table size — the whole point of CDC composition at 100 TB.
+Scale note: the feed is the primary's per-commit merge-on-read deltas
+(LWW winners, ~|changed keys| rows), so a mirror's work is proportional to
+churn, not table size — the whole point of CDC composition at 100 TB.
 """
 
 from __future__ import annotations
@@ -76,7 +77,7 @@ def mirror_changes(spark: SparkSession, primary: LakeTable,
     first (``downstream.create(spark, primary.read(spark), ...)``); the
     feed then keeps it converged incrementally.
 
-    ``available_now=True`` drains the published feed and stops (catch-up
+    ``available_now=True`` drains the committed feed and stops (catch-up
     mode); ``processing_time`` runs a continuous mirror.
 
     Resync epochs: when the primary danger-zone re-snapshots, its

@@ -438,11 +438,13 @@ def quantile_histogram_section(spark, sf_dir: str):
 
 def incremental_view_section(spark):
     """(title, plan, checks) for cdc_incremental_agg_view's refresh path
-    (operators/incremental.py): the delta plan must scan ONLY the change
-    feed's delta files under changes/ (cost ∝ churn), never the table's
-    data/ files, and fold them with one map-side-combined aggregate."""
+    (operators/incremental.py): the delta plan must scan exactly the files
+    the manifest's ``change_files`` names for the selected commits (cost ∝
+    churn), never the table's base files, and fold them with one
+    map-side-combined aggregate."""
     import shutil
     import tempfile
+    from urllib.parse import urlparse
 
     from pyspark.sql import functions as F
 
@@ -466,10 +468,16 @@ def incremental_view_section(spark):
              .alias("_seq"))
         t.merge(spark, upd, batch_id=1)
         feed = t.changes(spark, from_version=2)
-        p = plan_of(feed_agg_delta(feed, ["grp"], ["val"]))
+        delta = feed_agg_delta(feed, ["grp"], ["val"])
+        p = plan_of(delta)
+        m = t.manifest()
+        scanned = {urlparse(f).path for f in delta.inputFiles()}
+        named = {os.path.join(t.root, e["path"])
+                 for e in m.change_files if e["version"] >= 2}
+        base = {os.path.join(t.root, e["path"]) for e in m.files}
         checks = [
-            ("refresh scans only the change-feed delta files",
-             "/changes/" in p and "/data/" not in p),
+            ("refresh scans exactly the selected commits' change-feed files",
+             scanned == named and not scanned & base),
             ("map-side partial aggregate before the per-group shuffle",
              p.count("HashAggregate") >= 2),
             ("no join anywhere in the delta fold", "Join" not in p),

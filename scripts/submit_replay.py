@@ -46,7 +46,7 @@ def main(argv: list[str] | None = None) -> int:
                     help="run INIT_SYNC as N resumable file chunks (a killed "
                          "snapshot restarts from the first unfinished chunk)")
     ap.add_argument("--change-feed", action="store_true",
-                    help="publish per-commit compacted deltas under changes/")
+                    help="publish each commit's delta as the change feed")
     args = ap.parse_args(argv)
 
     from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline

@@ -5,10 +5,14 @@ reference connector's Kafka emission (DynamoDBSourceTask.java:334-361)."""
 from __future__ import annotations
 
 import hashlib
+import os
+from collections import Counter
 
+import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_dynamodb_spark.lake.table import LakeTable
+from kafka_connect_dynamodb_spark.lake.commitio import PosixCommitIO
+from kafka_connect_dynamodb_spark.lake.table import _MAX_DELTAS, LakeTable
 from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.sources.generator import (
@@ -116,7 +120,7 @@ def test_change_feed_carries_evolved_columns(spark, tmp_path):
 
 
 def test_feed_orphan_vacuum_and_crash_redelivery(spark, tmp_path):
-    """Crash window for the feed write: an orphaned delta (staged, never
+    """Crash window for the feed write: an orphaned delta (written, never
     committed) must not block the redelivered batch and IS vacuum-reclaimed,
     while committed feed files survive vacuum."""
     import os
@@ -129,7 +133,7 @@ def test_feed_orphan_vacuum_and_crash_redelivery(spark, tmp_path):
     pipe.init_sync(base)
 
     # leftover from a "crashed" attempt at the next version
-    orphan = os.path.join(table.root, "changes", "c000000000003-deadbeef.parquet")
+    orphan = os.path.join(table.root, "data", "c000000000003-deadbeef")
     os.makedirs(orphan, exist_ok=True)
     with open(os.path.join(orphan, "part-junk.parquet"), "w") as f:
         f.write("junk")
@@ -145,74 +149,167 @@ def test_feed_orphan_vacuum_and_crash_redelivery(spark, tmp_path):
     assert table.changes(spark).count() == n_feed
 
 
-def test_staged_delta_never_leaks_to_stream(spark, tmp_path):
-    """ADVICE r2 #1 (phantom micro-batches): a delta staged by a LOST/crashed
-    commit attempt lives under a hidden ``.stage-*`` prefix that the
-    streaming file listing skips — consumers only ever see published
-    (manifest-committed) deltas; vacuum reclaims the orphan."""
-    import os
+def _feed_pipeline(spark, tmp_path):
+    """A change_feed table behind a CommitIO that records every file vacuum
+    deletes and, while ``crash`` is set, dies in ``put_if_absent``: a
+    writer killed after writing its files and before its manifest lands.
+    (Defined here, not at module level: the feed's stream source ships the
+    table's io to Python workers, which pickle a local class by value.)"""
 
-    base = source_table(spark, 40)
-    ev = change_events(spark, 40, 150, pre_init_frac=0.0)
-    table = LakeTable(str(tmp_path / "tbl"), change_feed=True)
+    class CrashingIO(PosixCommitIO):
+        def __init__(self):
+            self.crash = False
+            self.deleted: set[str] = set()
+
+        def put_if_absent(self, path, payload):
+            if self.crash:
+                raise RuntimeError("killed before the manifest commit")
+            return super().put_if_absent(path, payload)
+
+        def delete_file(self, path):
+            self.deleted.add(path)
+            return super().delete_file(path)
+
+    io = CrashingIO()
+    table = LakeTable(str(tmp_path / "tbl"), io=io, change_feed=True)
     pipe = CdcPipeline(spark, table, n_buckets=4,
                        clock=lambda: DEFAULT_BASE_TS.timestamp())
-    pipe.init_sync(base)
-    pipe.sync_batch(ev, 0)                          # one committed delta
-    committed_rows = table.changes(spark).count()
-
-    # a crashed attempt's staged delta: REAL feed-schema rows that must not leak
-    orphan = os.path.join(table.root, "changes", ".stage-c000000000003-dead")
-    (base.limit(5)
-         .withColumn("_seq", F.lit(999).cast("decimal(38,0)"))
-         .withColumn("_op", F.lit("u"))
-         .write.parquet(orphan))
-
-    out_dir, cp = str(tmp_path / "consumed"), str(tmp_path / "cp")
-    q = (table.stream_changes(spark)
-              .writeStream.format("parquet").option("path", out_dir)
-              .option("checkpointLocation", cp)
-              .trigger(availableNow=True).start())
-    q.awaitTermination()
-    assert spark.read.parquet(out_dir).count() == committed_rows  # no phantom
-    assert table.changes(spark).count() == committed_rows
-
-    assert table.vacuum(grace_s=0) >= 1                      # orphan reclaimed
-    assert not os.path.isdir(orphan)
-
-
-def test_crash_between_commit_and_publish_heals(spark, tmp_path):
-    """Crash window on the OTHER side: manifest committed but the staged
-    delta not yet published. Any later reader heals it idempotently, so the
-    feed is complete — never a missing-file crash."""
-    import os
-
     base = source_table(spark, 40)
-    ev = change_events(spark, 40, 150, pre_init_frac=0.0)
-    table = LakeTable(str(tmp_path / "tbl"), change_feed=True)
-    pipe = CdcPipeline(spark, table, n_buckets=4,
-                       clock=lambda: DEFAULT_BASE_TS.timestamp())
     pipe.init_sync(base)
-    pipe.sync_batch(ev, 0)
-    n = table.changes(spark).count()
-    assert n > 0
+    return io, table, pipe, base
 
-    # simulate the crash by reversing the publish move
-    e = table.manifest().change_files[-1]
-    final = os.path.join(table.root, e["path"])
-    staged = os.path.join(table.root, e["staged"])
-    os.rename(final, staged)
-    assert not os.path.isdir(final)
 
-    healed = table.changes(spark)                   # reader-side heal
-    assert healed.count() == n
-    assert os.path.isdir(final) and not os.path.isdir(staged)
+def _drain(spark, table, tmp_path):
+    """Run an availableNow subscriber of ``table``'s feed (one checkpoint
+    and sink per test, so each call resumes the last) and return every row
+    it has drained so far."""
+    out = str(tmp_path / "consumed")
+    (table.stream_changes(spark).writeStream.format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", str(tmp_path / "cp"))
+          .trigger(availableNow=True).start().awaitTermination())
+    return Counter(spark.read.parquet(out).collect())
+
+
+def test_crash_before_commit_never_shows_and_redelivery_shows_once(
+        spark, tmp_path):
+    """A merge killed between writing its delta and committing its manifest
+    shows none of its rows, in changes() or to a subscriber; its
+    redelivery commits once, and then both show each of its rows exactly
+    once."""
+    io, table, pipe, _ = _feed_pipeline(spark, tmp_path)
+    ev = change_events(spark, 40, 300, pre_init_frac=0.0)
+    first, second = ev.filter(ev.seq_no % 2 == 0), ev.filter(ev.seq_no % 2 == 1)
+    pipe.sync_batch(first, 0)
+    committed = Counter(table.changes(spark).collect())
+    assert committed and _drain(spark, table, tmp_path) == committed
+
+    v = table.current_version()
+    io.crash = True
+    with pytest.raises(RuntimeError, match="killed"):
+        pipe.sync_batch(second, 1)
+    io.crash = False
+    assert table.current_version() == v
+    assert Counter(table.changes(spark).collect()) == committed
+    assert _drain(spark, table, tmp_path) == committed
+
+    res = pipe.sync_batch(second, 1)             # redelivery lands once
+    assert res["version"] == v + 1
+    assert pipe.sync_batch(second, 1)["skipped"]
+    feed = Counter(table.changes(spark).collect())
+    new = feed - committed
+    assert new and {r["_commit"] for r in new} == {v + 1}
+    assert max(feed.values()) == 1
+    assert _drain(spark, table, tmp_path) == feed
+
+
+def test_consumer_restarted_over_an_uncommitted_batch_drains_to_the_end(
+        spark, tmp_path):
+    """A subscriber killed after planning a micro-batch and before
+    committing it restarts over that batch: an availableNow restart
+    replays it and then drains every later commit too."""
+    _, table, pipe, _ = _feed_pipeline(spark, tmp_path)
+    ev = change_events(spark, 40, 300, pre_init_frac=0.0)
+    pipe.sync_batch(ev.filter(ev.seq_no % 2 == 0), 0)
+    _drain(spark, table, tmp_path)
+    for f in ("0", ".0.crc"):                         # the kill
+        os.remove(str(tmp_path / "cp" / "commits" / f))
+    pipe.sync_batch(ev.filter(ev.seq_no % 2 == 1), 1)
+    assert _drain(spark, table, tmp_path) == \
+        Counter(table.changes(spark).collect())
+
+
+def _replayed(spark, base, feed):
+    """Snapshot + feed replayed by max-seq LWW, deletes dropped."""
+    snap = base.select("repo", "path", "content",
+                       F.lit(0).cast("decimal(38,0)").alias("_seq"),
+                       F.lit("r").alias("_op"))
+    replayed = latest_per_key(
+        snap.unionByName(feed.select("repo", "path", "content", "_seq", "_op")),
+        ["repo", "path"], ["_seq"])
+    return replayed.filter(F.col("_op") != "d").select("repo", "path", "content")
+
+
+def test_feed_survives_fold_expiry_and_vacuum(spark, tmp_path):
+    """A fold drops the folded deltas from the table's deltas, but the feed
+    still names them: after _MAX_DELTAS + 1 merges, snapshot expiry and
+    vacuum, changes() returns every commit's winners and its replay over
+    the snapshot still reproduces read()."""
+    io, table, pipe, base = _feed_pipeline(spark, tmp_path)
+    ev = change_events(spark, 40, 600, pre_init_frac=0.0)
+    n = _MAX_DELTAS + 1
+    per_commit = Counter()
+    for k in range(n):
+        v = pipe.sync_batch(ev.filter(ev.seq_no % n == k), k)["version"]
+        per_commit += Counter(
+            table.changes(spark, from_version=v, to_version=v).collect())
+    m = table.manifest()
+    assert any(e["op"] == "compact" for e in m.lineage)
+    assert len(m.deltas) == 1                    # the merge after the fold
+    table.expire_versions(keep_last=1)
+    assert table.vacuum(grace_s=0) > 0
+    feed_paths = {os.path.join(table.root, e["path"]) for e in m.change_files}
+    assert io.deleted and not io.deleted & feed_paths
+
+    feed = table.changes(spark, from_version=2)
+    assert Counter(feed.collect()) == per_commit
+    assert len({r["_commit"] for r in per_commit}) == n
+    assert _sha_state(_replayed(spark, base, feed)) == \
+        _sha_state(table.read(spark))
+
+
+def test_only_feed_expiry_then_version_expiry_reclaims_a_folded_delta(
+        spark, tmp_path):
+    """A folded delta lives while any retained manifest's feed names it:
+    vacuum alone, snapshot expiry alone and feed expiry alone each leave
+    it; feed expiry followed by snapshot expiry lets vacuum reclaim it."""
+    io, table, pipe, _ = _feed_pipeline(spark, tmp_path)
+    ev = change_events(spark, 40, 500, pre_init_frac=0.0)
+    for k in range(_MAX_DELTAS):
+        pipe.sync_batch(ev.filter(ev.seq_no % _MAX_DELTAS == k), k)
+    m = table.manifest()
+    assert m.deltas == [] and m.lineage[-1]["op"] == "compact"
+    first = m.change_files[0]
+    path = os.path.join(table.root, first["path"])
+
+    def reclaimed():
+        table.vacuum(grace_s=0)
+        return not os.path.exists(path)
+
+    assert not reclaimed()
+    table.expire_versions(keep_last=1)
+    assert not reclaimed()                 # the current feed names it
+    table.expire_change_feed(below_version=first["version"] + 1)
+    assert not reclaimed()                 # the retained parent names it
+    table.expire_versions(keep_last=1)
+    assert reclaimed() and path in io.deleted
+    assert table.changes(spark).count() > 0
 
 
 def test_change_feed_retention_expiry(spark, tmp_path):
     """ADVICE r2 #4: expire_change_feed prunes the manifest's feed history;
     once the manifests that still listed the old deltas expire too, vacuum
-    reclaims the delta dirs from disk."""
+    reclaims the delta files from disk."""
     import os
 
     base = source_table(spark, 40)
@@ -235,12 +332,14 @@ def test_change_feed_retention_expiry(spark, tmp_path):
 
     # old manifests still list the old deltas -> still on disk after vacuum
     table.vacuum(grace_s=0)
-    assert os.path.isdir(os.path.join(table.root, all_entries[0]["path"]))
-    # retire those manifests -> vacuum reclaims the expired delta dirs
+    assert os.path.exists(os.path.join(table.root, all_entries[0]["path"]))
+    # the feed's files are the table's deltas: fold them out of the data,
+    # retire those manifests -> vacuum reclaims the expired delta files
+    table.compact(spark, target_buckets=[])
     table.expire_versions(keep_last=1)
     table.vacuum(grace_s=0)
-    assert not os.path.isdir(os.path.join(table.root, all_entries[0]["path"]))
-    assert os.path.isdir(os.path.join(table.root, all_entries[-1]["path"]))
+    assert not os.path.exists(os.path.join(table.root, all_entries[0]["path"]))
+    assert os.path.exists(os.path.join(table.root, all_entries[-1]["path"]))
     assert table.changes(spark).count() > 0
 
 

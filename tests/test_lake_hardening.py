@@ -507,14 +507,17 @@ def test_read_columns_may_name_meta_cols(spark, tmp_path):
     assert t.read(spark, columns=["repo", "_seq"]).columns == ["repo"]
 
 
-def test_executor_side_stats_equal_driver_pyarrow(spark, tmp_path):
+def test_executor_side_stats_equal_driver_pyarrow(spark, tmp_path,
+                                                  monkeypatch):
     """VERDICT r4 #3: above the bounded driver cap, manifest stats come from
-    ONE distributed footer-read job; forced here via
-    stats_driver_max_files=0, and pinned equal to a driver-side pyarrow
+    ONE distributed footer-read job; forced here by lowering
+    _STATS_DRIVER_MAX_FILES to 0, and pinned equal to a driver-side pyarrow
     read of the same files (the ≤cap path uses that exact function)."""
+    from kafka_connect_dynamodb_spark.lake import table as table_mod
     from kafka_connect_dynamodb_spark.lake.table import _footer_stats
 
-    t = LakeTable(str(tmp_path / "tbl"), stats_driver_max_files=0)
+    monkeypatch.setattr(table_mod, "_STATS_DRIVER_MAX_FILES", 0)
+    t = LakeTable(str(tmp_path / "tbl"))
     t.create(spark,
              spark.createDataFrame(BASE, "repo string, path string, content string"),
              ["repo", "path"], n_buckets=4)
@@ -526,6 +529,7 @@ def test_executor_side_stats_equal_driver_pyarrow(spark, tmp_path):
         want = _footer_stats(os.path.join(t.root, e["path"]))
         assert e.get("stats", {}) == want
     # the ≤cap (driver-pool) path produces identical manifests
+    monkeypatch.undo()
     t2 = _table(spark, tmp_path / "tbl2")
     t2.merge(spark, _upd(spark, [("r1", "p1", "zz", "u", 9),
                                  ("r9", "p9", "aa", "c", 9)]), batch_id=0)
@@ -539,7 +543,7 @@ def test_executor_side_stats_equal_driver_pyarrow(spark, tmp_path):
 def test_objectstore_commitio_end_to_end_table(spark, tmp_path):
     """VERDICT r4 #4: the S3-semantics impl (conditional-put, copy+delete
     move_dir, prefix listing, NO rename anywhere) runs the whole lifecycle:
-    create / merge with change feed / staged-delta heal / replace-resync /
+    create / merge with change feed / stream drain / replace-resync /
     compact / expire / vacuum — and a feed mirror reads what it publishes."""
     from pyspark.sql import functions as F
 
@@ -551,14 +555,16 @@ def test_objectstore_commitio_end_to_end_table(spark, tmp_path):
     t.merge(spark, _upd(spark, [("r1", "p1", "v1b", "u", 10),
                                 ("r9", "p9", "new", "c", 11)]), batch_id=0)
     t.merge(spark, _upd(spark, [("r2", "p1", None, "d", 12)]), batch_id=1)
-    # feed published through copy+delete move_dir; _commit recovered
     feed = t.changes(spark)
     assert {r["_commit"] for r in feed.select("_commit").collect()} == {2, 3}
-    # crash-between-commit-and-publish heals through the S3 move path too
-    m = t.manifest()
-    staged = [e for e in m.change_files if e.get("staged")]
-    assert staged and all(
-        not io.is_dir(os.path.join(t.root, e["staged"])) for e in staged)
+    # a subscriber drains the same rows, planned through this table's io
+    q = (t.stream_changes(spark).writeStream.format("memory")
+         .queryName("objectstore_feed")
+         .option("checkpointLocation", str(tmp_path / "cp"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination()
+    drained = spark.table("objectstore_feed")
+    assert sorted(drained.collect()) == sorted(feed.collect())
 
     t.replace(spark, spark.createDataFrame(
         [("r1", "p1", "resynced")], "repo string, path string, content string"))

@@ -3,11 +3,14 @@ Spark's layout function, manifest reads launch no listing job, and scan
 predicates compare as the column's type."""
 
 import hashlib
+import os
 import random
 import uuid
+from collections import Counter
 from decimal import Decimal
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
@@ -226,9 +229,9 @@ def tail_batch(spark, tmp_path_factory):
     return base, root, final_hashes(state)
 
 
-def _apply_counts(spark, tmp_path, tail_batch, log):
+def _apply_counts(spark, tmp_path, tail_batch, log, change_feed=False):
     base, root, expected = tail_batch
-    t = LakeTable(str(tmp_path / "tbl"))
+    t = LakeTable(str(tmp_path / "tbl"), change_feed=change_feed)
     t.create(spark, base, ["repo", "path"], n_buckets=64)
     df = spark.read.parquet(str(root / log))
     counts = _counts(spark, lambda: apply_batch(spark, t, df, batch_id=0))
@@ -239,16 +242,30 @@ def _apply_counts(spark, tmp_path, tail_batch, log):
     return t, df, counts
 
 
-def test_one_file_batch_applies_without_a_shuffle(spark, tmp_path, tail_batch):
+@pytest.mark.parametrize("change_feed", [False, True])
+def test_one_file_batch_applies_without_a_shuffle(spark, tmp_path, tail_batch,
+                                                  change_feed):
     """A batch read as one partition runs the LWW reduce, schema discovery
-    and the delta write as single-task stages: no exchange anywhere."""
+    and the delta write as single-task stages: no exchange anywhere. On a
+    change_feed table the delta is the feed, so the merge costs the same
+    jobs, and the feed of its commit is exactly the delta's rows."""
     t, df, (jobs, stages, tasks) = _apply_counts(
-        spark, tmp_path, tail_batch, "one")
+        spark, tmp_path, tail_batch, "one", change_feed)
     assert df.rdd.getNumPartitions() == 1
     assert jobs <= 3
     assert jobs == stages == tasks
-    assert len(t.manifest().deltas) == 1
-    assert t.manifest().lineage[-1]["files_written"] == 1
+    m = t.manifest()
+    assert len(m.deltas) == 1
+    assert m.lineage[-1]["files_written"] == 1
+    if change_feed:
+        v = m.deltas[0]["version"]
+        cols = [f.name for f in m.schema().fields if f.name != "_deleted"]
+        delta = spark.read.parquet(
+            *[os.path.join(t.root, d["path"]) for d in m.deltas])
+        assert Counter(t.changes(spark, from_version=v)
+                       .select(*cols, "_op", "_commit").collect()) == \
+            Counter(delta.select(*cols, "_op", F.lit(v).alias("_commit"))
+                    .collect())
 
 
 def test_four_partition_batch_keeps_the_shuffle(spark, tmp_path, tail_batch):

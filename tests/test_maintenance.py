@@ -26,8 +26,7 @@ def _hashes_of(table, spark):
 def test_cow_merge_is_self_compacting(spark, tmp_path):
     """Merges append deltas and every fold rewrites the buckets they touched
     whole, so the per-bucket BASE file count stays at 1 over an unbounded
-    micro-batch tail (no small-file buildup — 6 batches fold once).
-    compact_small_files is therefore a no-op on a pure-tail table."""
+    micro-batch tail (no small-file buildup — 6 batches fold once)."""
     base = source_table(spark, 150)
     ev = change_events(spark, 150, 1200, pre_init_frac=0.0)
     log = str(tmp_path / "log")
@@ -46,7 +45,6 @@ def test_cow_merge_is_self_compacting(spark, tmp_path):
         counts[e["bucket"]] = counts.get(e["bucket"], 0) + 1
     assert set(counts) == set(range(4))
     assert max(counts.values()) == 1
-    assert table.compact_small_files(spark, max_files_per_bucket=1) is None
 
 
 def test_danger_zone_resync_through_stream(spark, tmp_path):
@@ -172,7 +170,7 @@ def test_compaction_races_live_tail_to_parity(spark, tmp_path):
             slices[k].coalesce(1).write.mode("append").parquet(log)
             # maintenance fired while batches are in flight
             try:
-                table.compact_small_files(spark, max_files_per_bucket=1)
+                table.compact(spark, target_buckets=[])
                 compactions += 1
             except CommitConflict:
                 conflicts += 1          # lost every retry: acceptable for
@@ -229,7 +227,7 @@ def test_day2_maintenance_soak_compact_vacuum_resync(spark, tmp_path):
 
     def maintain() -> int:
         try:
-            table.compact_small_files(spark, max_files_per_bucket=1)
+            table.compact(spark, target_buckets=[])
         except CommitConflict:
             pass                      # maintenance may lose to the tail
         table.expire_versions(keep_last=3)
