@@ -56,6 +56,8 @@ from pyspark.sql import types as T
 from kafka_connect_dynamodb_spark.functions.hashing import bucket_of, key_bucket
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, CommitIO, PosixCommitIO)
+from kafka_connect_dynamodb_spark.lake.feed_source import (
+    ChangeFeedSource, log_versions, manifest_path, source_options)
 from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
 
 __all__ = ["LakeTable", "Manifest", "CommitConflict"]
@@ -242,29 +244,6 @@ def _file_may_match(stats: dict[str, list], col: str, op: str, val) -> bool:
     raise ValueError(f"unsupported op {op!r}")
 
 
-def _feed_batches(path: str, version: int, schema: T.StructType):
-    """Arrow batches of one change-feed file read as ``schema``: columns the
-    file lacks (added by a later schema evolution) are null, narrower types
-    are cast up, and ``_commit`` is ``version``. Runs in the Python worker
-    of :meth:`LakeTable.stream_changes`' source."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    target = to_arrow_schema(schema)
-    with pq.ParquetFile(path) as pf:
-        have = set(pf.schema_arrow.names)
-        for b in pf.iter_batches(
-                columns=[c for c in target.names if c in have]):
-            n = b.num_rows
-            yield pa.RecordBatch.from_arrays(
-                [pa.repeat(pa.scalar(version, f.type), n)
-                 if f.name == "_commit"
-                 else b.column(f.name).cast(f.type) if f.name in have
-                 else pa.nulls(n, f.type)
-                 for f in target], schema=target)
-
-
 @dataclass
 class Manifest:
     version: int
@@ -358,14 +337,7 @@ class LakeTable:
         return bool(self._versions())
 
     def _versions(self) -> list[int]:
-        out = []
-        for f in self.io.list_dir(self.log_dir):
-            if f.startswith("v") and f.endswith(".json"):
-                try:
-                    out.append(int(f[1:-5]))
-                except ValueError:
-                    pass
-        return sorted(out)
+        return log_versions(self.io, self.log_dir)
 
     def current_version(self) -> int:
         vs = self._versions()
@@ -376,7 +348,7 @@ class LakeTable:
     def manifest(self, version: int | None = None) -> Manifest:
         v = self.current_version() if version is None else version
         return Manifest.from_json(
-            self.io.read_text(os.path.join(self.log_dir, f"v{v:012d}.json")))
+            self.io.read_text(manifest_path(self.log_dir, v)))
 
     def _commit(self, m: Manifest, parent: Manifest | None = None) -> None:
         """Atomic single-winner commit (CommitIO.put_if_absent contract).
@@ -391,8 +363,8 @@ class LakeTable:
             m.committed_at_ms = int(time.time() * 1000)
         if parent is not None:
             m.committed_at_ms = max(m.committed_at_ms, parent.committed_at_ms)
-        self.io.put_if_absent(
-            os.path.join(self.log_dir, f"v{m.version:012d}.json"), m.to_json())
+        self.io.put_if_absent(manifest_path(self.log_dir, m.version),
+                              m.to_json())
 
     def _transact(self, attempt: Callable[[Manifest], Manifest]
                   ) -> Manifest | None:
@@ -1297,56 +1269,24 @@ class LakeTable:
         files read missing columns as null. Pair with a checkpoint on the
         consumer side for exactly-once downstream processing.
 
-        A Python streaming data source whose offsets are manifest versions:
-        the latest offset is the current version, and the micro-batch
-        ``(start, end]`` reads one partition per ``change_files`` entry of a
-        version in that range, with ``_commit`` set from the entry. It
-        reads the manifest log through this table's ``io`` and lists no
-        data directory, so a lost or crashed commit attempt can never leak
-        a phantom micro-batch."""
-        from pyspark.sql.datasource import (
-            DataSource, DataSourceStreamReader, InputPartition)
-
-        table = self
-        schema = self._feed_schema(self.manifest())
-        name = f"lake_changes_{uuid.uuid4().hex}"
-
-        class Reader(DataSourceStreamReader):
-            def initialOffset(self):
-                return {"version": 0}
-
-            def latestOffset(self):
-                return {"version": table.current_version()}
-
-            def partitions(self, start, end):
-                lo, hi = start["version"], end["version"]
-                return [InputPartition(
-                            (os.path.join(table.root, e["path"]), e["version"]))
-                        for e in table.manifest().change_files
-                        if lo < e["version"] <= hi]
-
-            def read(self, partition):
-                return _feed_batches(*partition.value, schema)
-
-        class Source(DataSource):
-            @classmethod
-            def name(cls):
-                return name
-
-            def schema(self):
-                return schema
-
-            def streamReader(self, schema):
-                return Reader()
-
-        spark.dataSource.register(Source)
+        A Python streaming data source (:mod:`lake.feed_source`) whose
+        offsets are manifest versions: the latest offset is the current
+        version, and the micro-batch ``(start, end]`` reads one partition
+        per ``change_files`` entry of a version in that range, with
+        ``_commit`` set from the entry. It reads the manifest log through
+        this table's ``io`` and lists no data directory, so a lost or
+        crashed commit attempt can never leak a phantom micro-batch."""
+        spark.dataSource.register(ChangeFeedSource)
         # A Python source has no native Trigger.AvailableNow; without
         # Spark's wrapper (SPARK-45178) an availableNow query falls back to
         # ONE batch, and a consumer restarted over an uncommitted batch
         # would replay just that batch and stop short of the feed's end.
         spark.conf.set(
             "spark.sql.streaming.triggerAvailableNowWrapper.enabled", "true")
-        return spark.readStream.format(name).load()
+        return (spark.readStream.format(ChangeFeedSource.name())
+                .options(**source_options(self.root, self.log_dir, self.io,
+                                          self._feed_schema(self.manifest())))
+                .load())
 
     # ------------------------------------------------------------- properties
 
@@ -1429,7 +1369,7 @@ class LakeTable:
         vs = self._versions()
         victims = vs[:-keep_last] if keep_last > 0 else vs[:-1]
         for v in victims:
-            self.io.delete_file(os.path.join(self.log_dir, f"v{v:012d}.json"))
+            self.io.delete_file(manifest_path(self.log_dir, v))
         return len(victims)
 
     def expire_change_feed(self, *, below_version: int) -> int:
