@@ -61,6 +61,24 @@ def encode_attr_json(fields: Iterable[str], string_fields: Iterable[str] | None 
     return F.to_json(F.struct(*inner), {"ignoreNullFields": "true"})
 
 
+def attr_value(tag: Column) -> Column:
+    """The value of one AttributeValue tag struct, key or image alike: its
+    ``s``, else its ``n`` (N-typed attributes arrive stringified, like the
+    reference's key handling, RecordConverter.java:118-126); null for any
+    other type. The one place this rule is written."""
+    return F.coalesce(tag["s"], tag["n"])
+
+
+def parse_keys(keys: Column, fields: Iterable[str] = KEY_FIELDS) -> Column:
+    """The keys envelope parsed to one tag struct per key attribute; read
+    each key with :func:`attr_value`. A null key value means the event's
+    keys do not parse: the apply path drops it (F5) and the DLQ files it
+    under ``unparseable_keys``. Give the parse a projection of its own
+    before reading several keys from it: inlined into each key's
+    expression, the optimizer splits it into one JSON parse per key."""
+    return F.from_json(keys, tagged_schema(fields))
+
+
 def decode_payload(df: DataFrame, col: str = "new_image",
                    fields: Iterable[str] = PAYLOAD_FIELDS,
                    prefix: str = "") -> DataFrame:
@@ -68,18 +86,14 @@ def decode_payload(df: DataFrame, col: str = "new_image",
 
     Equivalent of RecordConverter.toSourceRecord's item->document mapping
     (utils/RecordConverter.java:60-116) but columnar: one ``from_json`` over
-    the whole column, then field projection. Catalyst folds the projection
-    into the parse (JsonToStructs with pruned schema).
+    the whole column, then every field projected in one ``select`` (a
+    decoded field replaces a column of its name in place).
     """
     fields = tuple(fields)
-    parsed = F.from_json(F.col(col), tagged_schema(fields))
-    out = df.withColumn("_parsed", parsed)
-    for f in fields:
-        # coalesce(s, n): N-typed attributes arrive stringified like the
-        # reference's key handling (RecordConverter.java:118-126).
-        out = out.withColumn(prefix + f, F.coalesce(F.col(f"_parsed.{f}.s"),
-                                                    F.col(f"_parsed.{f}.n")))
-    return out.drop("_parsed")
+    out = df.withColumn("_parsed", F.from_json(F.col(col), tagged_schema(fields)))
+    new = {prefix + f: attr_value(F.col("_parsed")[f]) for f in fields}
+    cols = [new.pop(c).alias(c) if c in new else F.col(c) for c in df.columns]
+    return out.select(*cols, *[v.alias(c) for c, v in new.items()])
 
 
 def encode_envelope(df: DataFrame, *, table_name: str, op_col: str = "op",

@@ -45,6 +45,7 @@ import operator
 import os
 import re
 import uuid
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from decimal import Decimal
 from typing import Any, Callable, Sequence
@@ -74,10 +75,6 @@ _COMMIT_RETRIES = 4
 _MAX_DELTAS = 5
 
 _MAX_STRING_STAT = 256
-
-# files a commit reads footer stats of on the driver; above it one
-# distributed job reads them (:meth:`LakeTable._with_stats`)
-_STATS_DRIVER_MAX_FILES = 64
 
 
 _INT_WIDEN_ORDER = ("byte", "short", "integer", "long")
@@ -140,6 +137,60 @@ def _widened_type(old_dt, new_dt):
     if b == "double" and a in ("float", "byte", "short", "integer"):
         return new_dt
     return None
+
+
+def _evolved_schema(table: T.StructType, batch: T.StructType,
+                    keys: Sequence[str]) -> T.StructType:
+    """The table schema after a merge of a ``batch`` of this schema.
+
+    * Additive evolution (SURVEY §7.2 stage 7): a batch payload column the
+      table lacks is appended; old files read it as null.
+    * Type widening (Delta "type widening"): a payload column arriving
+      with a LOSSLESSLY wider type (:func:`_widened_type`) widens the
+      table's; old files read through Spark's parquet type promotion.
+      Without this the delta would be written wider while the manifest
+      stayed narrow — new files unreadable under the recorded schema.
+      Narrower batch columns are cast up instead (:func:`_cast_up`).
+    * KEY columns must match exactly: the bucket hash is type-sensitive
+      (hash(int 5) != hash(bigint 5)), so a widened key would silently
+      scatter existing keys across buckets.
+    """
+    by_name = {f.name: f for f in batch.fields}
+    fields = []
+    for f in table.fields:
+        dt, bf = f.dataType, by_name.get(f.name)
+        if bf is not None and f.name in keys and bf.dataType != dt:
+            raise ValueError(
+                f"key column {f.name!r} type change {dt.simpleString()} -> "
+                f"{bf.dataType.simpleString()} is not supported (bucket "
+                "hashing is type-sensitive); cast updates to the table's "
+                "key type")
+        if bf is not None and f.name not in keys and f.name not in META_COLS:
+            dt = _widened_type(dt, bf.dataType) or dt
+        fields.append(T.StructField(f.name, dt, f.nullable, f.metadata))
+    # new payload columns are nullable: tombstones null them out
+    skip = {*table.fieldNames(), *keys, "_op", *META_COLS}
+    fields += [T.StructField(f.name, f.dataType, True) for f in batch.fields
+               if f.name not in skip]
+    return T.StructType(fields)
+
+
+def _cast_up(c: Column, name: str, batch_dt: T.DataType,
+             table_dt: T.DataType) -> Column:
+    """``c`` (a batch column of type ``batch_dt``) as the table's type
+    ``table_dt`` — only when that is a recognized LOSSLESS widening of
+    ``batch_dt`` (the inverse of :func:`_evolved_schema`'s rule). A blind
+    cast would silently truncate (double sent for a long column) or null
+    out (string for numeric) under non-ANSI Spark."""
+    if batch_dt == table_dt:
+        return c
+    if _widened_type(batch_dt, table_dt) != table_dt:
+        raise ValueError(
+            f"column {name!r}: update type {batch_dt.simpleString()} is not "
+            f"a lossless narrowing of the table type "
+            f"{table_dt.simpleString()}; cast the batch explicitly if the "
+            "loss is intended")
+    return c.cast(table_dt)
 
 
 def _json_stat(v):
@@ -207,18 +258,6 @@ def _footer_stats(path: str) -> dict[str, list]:
     if "#rows" not in out:
         out["#rows"] = md.num_rows
     return out
-
-
-def _footer_stats_rows(iterator):
-    """mapInPandas worker for the distributed stats job: each Arrow batch of
-    staged paths yields (path, json-encoded stats) — footer metadata reads
-    run ON THE EXECUTORS, next to the files their tasks just wrote."""
-    import pandas as pd
-    for pdf in iterator:
-        yield pd.DataFrame({
-            "path": pdf["path"],
-            "stats": [json.dumps(_footer_stats(p)) for p in pdf["path"]],
-        })
 
 
 def _file_may_match(stats: dict[str, list], col: str, op: str, val) -> bool:
@@ -462,7 +501,7 @@ class LakeTable:
                     abs_path = os.path.join(staged, d, f)
                     rel = os.path.relpath(abs_path, self.root)
                     entries.append({"path": rel, "bucket": b})
-        return self._with_stats(df.sparkSession, entries)
+        return self._with_stats(entries)
 
     def _write_delta(self, df: DataFrame, version: int, keys: list[str],
                      single: bool) -> tuple[list[dict[str, Any]], int]:
@@ -496,43 +535,20 @@ class LakeTable:
                     "version": version, "buckets": buckets}
                    for f in sorted(self.io.list_dir(staged))
                    if f.endswith(".parquet")]
-        return self._with_stats(df.sparkSession, entries), n
+        return self._with_stats(entries), n
 
-    def _with_stats(self, spark: SparkSession, entries: list[dict[str, Any]]
+    def _with_stats(self, entries: list[dict[str, Any]]
                     ) -> list[dict[str, Any]]:
         """Add each written file's footer stats to its entry."""
         if self.file_stats and entries:
-            # Footer-stats collection must not scale driver I/O with files
-            # touched (VERDICT r3: a 4096-bucket full-table commit = 4096
-            # driver-side object-store reads on the commit critical path).
-            # Hybrid, A/B-measured (BENCH/BASELINE.md r4): up to
-            # ``_STATS_DRIVER_MAX_FILES`` files the driver reads footers via
-            # a thread pool (bounded O(1) work wrt table size, ~no
-            # latency); above it ONE distributed mapInPandas job reads
-            # footers executor-side (~0.5 s job overhead — noise on a big
-            # commit, a 10% regression if paid on every small one) and the
-            # driver only assembles the returned (path, stats) rows.
+            # footers are read on the driver by a thread pool: metadata
+            # reads, no Spark job (at 4,096 one-row files a distributed
+            # footer job measured no faster on 4 cores)
             paths = [os.path.join(self.root, e["path"]) for e in entries]
-            if len(paths) <= _STATS_DRIVER_MAX_FILES:
-                from concurrent.futures import ThreadPoolExecutor
-                with ThreadPoolExecutor(
-                        max_workers=min(16, len(paths))) as pool:
-                    all_stats = list(pool.map(_footer_stats, paths))
-                by_path = dict(zip(paths, all_stats))
-            else:
-                n_tasks = max(1, min(len(paths),
-                                     spark.sparkContext.defaultParallelism))
-                rows = (spark.createDataFrame([(p,) for p in paths],
-                                              "path string")
-                        .repartition(n_tasks)
-                        .mapInPandas(_footer_stats_rows,
-                                     "path string, stats string")
-                        .collect())
-                by_path = {r["path"]: json.loads(r["stats"]) for r in rows}
-            for e in entries:
-                stats = by_path.get(os.path.join(self.root, e["path"]))
-                if stats:
-                    e["stats"] = stats
+            with ThreadPoolExecutor(max_workers=min(16, len(paths))) as pool:
+                for e, stats in zip(entries, pool.map(_footer_stats, paths)):
+                    if stats:
+                        e["stats"] = stats
         return entries
 
     def _read_files(self, spark: SparkSession, schema: T.StructType,
@@ -593,16 +609,16 @@ class LakeTable:
                        key_cols: list[str], n_buckets: int
                        ) -> tuple[DataFrame, T.StructType]:
         """Snapshot rows as stored (``_seq`` from ``seq_col`` or 0,
-        ``_deleted=false``) plus their ``_bucket``, and the stored schema."""
-        if seq_col is None:
-            stored = df.withColumn("_seq", F.lit(0).cast(SEQ_TYPE))
-        else:
-            stored = df.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
-            if seq_col != "_seq":
-                stored = stored.drop(seq_col)
-        stored = stored.withColumn("_deleted", F.lit(False))
-        return (stored.withColumn("_bucket", bucket_of(key_cols, n_buckets)),
-                stored.schema)
+        ``_deleted=false``) plus their ``_bucket``, in one projection, and
+        the stored schema. A meta column ``df`` already has is replaced
+        in place, and ``seq_col`` itself is not stored."""
+        seq = F.lit(0) if seq_col is None else F.col(seq_col)
+        meta = {"_seq": seq.cast(SEQ_TYPE), "_deleted": F.lit(False)}
+        cols = [meta.pop(c).alias(c) if c in meta else F.col(c)
+                for c in df.columns if c != seq_col or c == "_seq"]
+        stored = df.select(*cols, *[v.alias(c) for c, v in meta.items()],
+                           bucket_of(key_cols, n_buckets).alias("_bucket"))
+        return stored, T.StructType(stored.schema.fields[:-1])
 
     def create_empty(self, spark: SparkSession, schema: T.StructType,
                      key_cols: list[str], n_buckets: int = 64,
@@ -1020,10 +1036,16 @@ class LakeTable:
             return -1
 
     def merge(self, spark: SparkSession, updates: DataFrame, *,
-              batch_id: int | None = None, source: str = "default",
-              op_col: str = "_op", seq_col: str = "_seq") -> dict[str, Any]:
-        """Apply a batch of LWW-deduped changes (one row per key, columns:
-        keys + payload + op_col + seq_col).
+              batch_id: int | None = None, source: str = "default"
+              ) -> dict[str, Any]:
+        """Apply a batch of LWW-deduped changes (columns: keys + payload +
+        ``_op`` + ``_seq``).
+
+        Precondition: ONE row per key. A commit's delta must hold one
+        version per key, because readers resolve a delta against older
+        files but never within itself (:func:`_may_hold_two_versions`);
+        callers LWW-reduce first (``operators.apply.prepare_winners``,
+        ``streaming.feed``).
 
         Physical plan: one write of the batch as this commit's DELTA —
         sorted by bucket and key, usually one file; shuffled on ``_bucket``
@@ -1054,8 +1076,7 @@ class LakeTable:
             if batch_id is not None and batch_id <= m.committed.get(source, -1):
                 return m
             return self._merge_attempt(spark, updates, m, batch_id=batch_id,
-                                       source=source, op_col=op_col,
-                                       seq_col=seq_col)
+                                       source=source)
 
         new_m = self._transact(attempt)
         if new_m is None:
@@ -1068,91 +1089,38 @@ class LakeTable:
                 **{k: e[k] for k in ("rows_in", "buckets_touched") if k in e}}
 
     def _merge_attempt(self, spark: SparkSession, updates: DataFrame,
-                       m: Manifest, *, batch_id: int | None, source: str,
-                       op_col: str, seq_col: str) -> Manifest:
+                       m: Manifest, *, batch_id: int | None,
+                       source: str) -> Manifest:
         keys = m.key_cols
-        upd = updates.withColumn("_seq", F.col(seq_col).cast(SEQ_TYPE))
-        if op_col != "_op":
-            upd = upd.withColumnRenamed(op_col, "_op")
-        upd = upd.withColumn("_deleted", F.col("_op") == F.lit("d"))
-        # payload columns of the incoming batch (may carry evolved columns)
-        upd_payload = [c for c in upd.columns if c not in keys
-                       and c not in ("_op", "_seq", "_deleted")]
-        # null-out payload on tombstones (keys + _seq survive)
-        for c in upd_payload:
-            upd = upd.withColumn(c, F.when(F.col("_deleted"), F.lit(None)).otherwise(F.col(c)))
+        schema, batch = m.schema(), updates.schema
+        evolved = _evolved_schema(schema, batch, keys)
+        data_cols = [c for c in evolved.fieldNames() if c not in META_COLS]
+        deleted = F.col("_op") == F.lit("d")
 
-        # --- additive schema evolution (SURVEY §7.2 stage 7)
-        old_schema = m.schema()
-        old_names = [f.name for f in old_schema.fields]
-        upd_fields = {f.name: f for f in upd.schema.fields}
-        new_fields = [upd_fields[c] for c in upd_payload if c not in old_names]
-        # --- type-widening evolution (Delta "type widening"): an update
-        # column arriving with a LOSSLESSLY wider type than the table's
-        # (byte<short<int<long, float<double, {byte,short,int}<double)
-        # widens the TABLE schema; old files read through Spark's parquet
-        # type promotion, exactly like additive columns null-fill. Without
-        # this the delta would be written wider while the manifest stayed
-        # narrow — new files unreadable under the recorded schema. Narrower
-        # update columns are cast UP to the table's type instead. KEY
-        # columns must match exactly: the bucket hash is type-sensitive
-        # (hash(int 5) != hash(bigint 5)), so a widened key would silently
-        # scatter existing keys across buckets.
-        widened: dict[str, T.DataType] = {}
-        for f in old_schema.fields:
-            uf = upd_fields.get(f.name)
-            if uf is None or f.name in META_COLS:
-                continue
-            if f.name in keys:
-                if uf.dataType != f.dataType:
-                    raise ValueError(
-                        f"key column {f.name!r} type change "
-                        f"{f.dataType.simpleString()} -> "
-                        f"{uf.dataType.simpleString()} is not supported "
-                        "(bucket hashing is type-sensitive); cast updates "
-                        "to the table's key type")
-                continue
-            w = _widened_type(f.dataType, uf.dataType)
-            if w is not None:
-                widened[f.name] = w
-        evolved = T.StructType(
-            [T.StructField(f.name, widened.get(f.name, f.dataType),
-                           f.nullable) for f in old_schema.fields]
-            + new_fields)
-        evolved_names = [f.name for f in evolved.fields]
+        def stored(c: str) -> Column:
+            # missing old column -> null; narrower column -> cast up
+            # (:func:`_cast_up`); tombstone payload -> null (keys survive)
+            dt = evolved[c].dataType
+            if c not in batch.names:
+                return F.lit(None).cast(dt).alias(c)
+            v = _cast_up(F.col(c), c, batch[c].dataType, dt)
+            if c not in keys:
+                v = F.when(deleted, F.lit(None)).otherwise(v)
+            return v.alias(c)
 
-        # align update columns to evolved schema (missing old columns -> null)
-        data_cols = [c for c in evolved_names if c not in META_COLS]
-        for c in data_cols:
-            if c not in upd.columns:
-                upd = upd.withColumn(c, F.lit(None).cast(evolved[c].dataType))
-            elif upd.schema[c].dataType != evolved[c].dataType:
-                # narrower update column -> cast UP to the table type
-                # (or to the just-widened type) — but ONLY when the
-                # table's type is a recognized LOSSLESS widening of the
-                # batch's (the inverse of the evolution rule above). A
-                # blind cast here would silently truncate (double sent
-                # for a long column) or null out (string for numeric)
-                # under non-ANSI Spark — silent data loss (ADVICE r6).
-                if _widened_type(upd.schema[c].dataType,
-                                 evolved[c].dataType) != evolved[c].dataType:
-                    raise ValueError(
-                        f"column {c!r}: update type "
-                        f"{upd.schema[c].dataType.simpleString()} is not a "
-                        f"lossless narrowing of the table type "
-                        f"{evolved[c].dataType.simpleString()}; cast the "
-                        "batch explicitly if the loss is intended")
-                upd = upd.withColumn(c, F.col(c).cast(evolved[c].dataType))
-        upd = upd.withColumn("_bucket", bucket_of(keys, m.n_buckets))
+        # the stored row in one projection; the delta carries _op beside
+        # _deleted on every table: the change feed reads it, table reads
+        # (manifest schema) and folds drop it
+        upd = updates.select(*map(stored, data_cols),
+                             F.col("_seq").cast(SEQ_TYPE).alias("_seq"),
+                             deleted.alias("_deleted"), "_op",
+                             bucket_of(keys, m.n_buckets).alias("_bucket"))
         committed = dict(m.committed)
         if batch_id is not None:
             committed[source] = batch_id
         lineage = {"batch_id": batch_id, "source": source, "op": "merge"}
-        # the delta carries _op beside _deleted on every table: the change
-        # feed reads it, table reads (manifest schema) and folds drop it
-        delta, n_upd = self._write_delta(
-            upd.select(*data_cols, "_seq", "_deleted", "_op", "_bucket"),
-            m.version + 1, keys, one_partition(upd))
+        delta, n_upd = self._write_delta(upd, m.version + 1, keys,
+                                         one_partition(upd))
         if n_upd == 0:
             return self._next(m, {**lineage, "rows_in": 0},
                               committed=committed)
@@ -1166,8 +1134,8 @@ class LakeTable:
             m, {**lineage, "rows_in": n_upd, "buckets_touched": len(buckets),
                 "files_rewritten": 0, "files_written": len(delta)},
             feed=feed, deltas=m.deltas + delta, committed=committed,
-            schema_json=json.dumps(evolved.jsonValue()) if (
-                new_fields or widened) else m.schema_json)
+            schema_json=m.schema_json if evolved == schema
+            else json.dumps(evolved.jsonValue()))
 
     def _feed_with_preimages(self, spark: SparkSession, m: Manifest,
                              schema: T.StructType,

@@ -4,21 +4,26 @@ This is the engine's hot path, the set-oriented replacement for the
 reference's per-record ``sync()`` loop (DynamoDBSourceTask.java:276-371):
 
 raw events
+  -> F3 danger-zone guard (min-ts observe metric over every polled event)
   -> F2 pre-init-sync drop (filters.pre_init_sync_filter)
-  -> F3 danger-zone guard (min-ts observe metric on the same events pass)
-  -> F6 op decode + F1 image projection (JVM CASE/coalesce)
-  -> parse only the small ``keys`` envelope per event (cheap from_json)
-  -> F5 parse-error drop
+  -> F5/F6 cheap half: event name IN (...) and keys IS NOT NULL, pushed
+     into the scan
+  -> key parse (envelope.parse_keys: the small ``keys`` envelope, one
+     from_json per event) + F6 op decode + F1 image projection
   -> per-key LWW dedup carrying the *raw* image string (max_by partial+final
      agg — on a multi-partition batch the shuffle moves one row per key per
      mapper, not one per event; a one-partition batch has no shuffle)
-  -> decode the winners' image envelope (one from_json over |keys| rows,
-     NOT |events| — the expensive JSON parse runs post-reduction)
-  -> additive schema evolution: discover new attribute names from the
-     winners' map keys (one global agg; the action that fills the winners
-     cache)
+  -> F5 exact half: drop winners whose keys did not parse
+  -> decode_winners: parse each winner's image once into a map (|keys|
+     rows, NOT |events| — the expensive JSON parse runs post-reduction),
+     collect its keys to discover new attributes (one global agg; the
+     action that fills the winners cache), and project every payload
+     field in one select
   -> LakeTable.merge (one merge-on-read delta per commit, idempotent on
      batch_id)
+
+Keys and images go through one rule, envelope.attr_value, so the apply
+path and the DLQ (operators.quarantine) agree on which keys parse.
 
 A micro-batch that arrives as ONE input partition (one log file that fits
 one split — the reference's 1,000-record GetRecords page) is applied with no
@@ -41,7 +46,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kafka_connect_dynamodb_spark.functions.envelope import KEY_FIELDS, PAYLOAD_FIELDS
+from kafka_connect_dynamodb_spark.functions.envelope import (
+    KEY_FIELDS, PAYLOAD_FIELDS, attr_value, parse_keys)
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators import filters
 from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
@@ -53,43 +59,6 @@ class DangerZoneError(RuntimeError):
     """Raised when a batch contains events older than the danger-zone cutoff;
     the pipeline must abandon the stream and re-run INIT_SYNC
     (DynamoDBSourceTask.java:318-331)."""
-
-
-def decode_events(df: DataFrame, *, col: str = "new_image",
-                  discover_fields: bool = False) -> tuple[DataFrame, list[str]]:
-    """Decode an AttributeValue-envelope JSON column into typed columns.
-
-    Parses the envelope once into a map column; payload fields project out of
-    it JVM-side. With ``discover_fields`` the map keys are collected to
-    detect additive attributes (schema evolution) — one global aggregate
-    over ``df`` (callers pass post-dedup winners, so this is O(|keys|)),
-    and the action that fills ``df``'s cache when it is persisted.
-
-    A one-partition ``df`` (lww.one_partition) is decoded behind a
-    ``coalesce(1)``. A scan of a persisted frame runs as an AQE cache stage
-    that reports no partitioning, so an aggregate over it would get an
-    exchange back; above the ``coalesce(1)`` the discovery aggregate needs
-    none, and the decoded frame declares one partition to the merge's
-    delta write.
-    """
-    if one_partition(df):
-        df = df.coalesce(1)
-    out = df.withColumn("_m", F.from_json(F.col(col), TAGGED_MAP))
-
-    fields = list(PAYLOAD_FIELDS)
-    if discover_fields:
-        known = set(fields)
-        (found,) = out.select(F.array_distinct(F.flatten(
-            F.collect_set(F.map_keys("_m"))))).collect()[0]
-        fields += sorted(k for k in found if k not in known)
-
-    for f in fields:
-        if f in df.columns:
-            continue  # already-materialized columns (e.g. keys) win: a
-                      # malformed image must not null-out a valid parsed key
-        tag = F.element_at(F.col("_m"), f)
-        out = out.withColumn(f, F.coalesce(tag["s"], tag["n"]))
-    return out.drop(col, "_m"), fields
 
 
 def prepare_winners(df: DataFrame, *,
@@ -120,15 +89,13 @@ def prepare_winners(df: DataFrame, *,
     if init_sync_start is not None:
         df = filters.pre_init_sync_filter(df, init_sync_start)
 
-    from kafka_connect_dynamodb_spark.functions.envelope import tagged_schema
     # F5/F6 cheap half: unknown event names & null keys envelopes drop here
     # (pushable IN / IsNotNull filters reach the parquet scan).
-    ev = df.filter(F.col("event_name").isin("INSERT", "MODIFY", "REMOVE")
-                   & F.col("keys").isNotNull())
-    ev = ev.withColumn("_k", F.from_json(F.col("keys"), tagged_schema(KEY_FIELDS)))
+    ev = (df.filter(F.col("event_name").isin("INSERT", "MODIFY", "REMOVE")
+                    & F.col("keys").isNotNull())
+            .withColumn("_k", parse_keys(F.col("keys"))))
     change = ev.select(
-        *[F.coalesce(F.col(f"_k.{k}.s"), F.col(f"_k.{k}.n")).alias(k)
-          for k in KEY_FIELDS],
+        *[attr_value(F.col("_k")[k]).alias(k) for k in KEY_FIELDS],
         filters.project_image().alias("_img"),
         filters.decode_op(strict=False).alias("_op"),
         F.col("seq_no").cast("decimal(38,0)").alias("_seq"))
@@ -145,13 +112,39 @@ def prepare_winners(df: DataFrame, *,
 
 def decode_winners(winners: DataFrame, *,
                    discover_fields: bool = False) -> DataFrame:
-    """Decode the post-dedup winners' image envelope: O(|keys|) JSON work,
-    not O(|events|) (SURVEY §3.3 hot-path note). Returns one merge-ready
-    row per key (columns: repo, path, payload..., _op, _seq)."""
-    decoded, fields = decode_events(winners, col="_img",
-                                    discover_fields=discover_fields)
-    payload = [f for f in fields if f not in KEY_FIELDS]
-    return decoded.select(*KEY_FIELDS, *payload, "_op", "_seq")
+    """Decode the post-dedup winners' ``_img`` envelope: O(|keys|) JSON
+    work, not O(|events|) (SURVEY §3.3 hot-path note). Returns one
+    merge-ready row per key (columns: repo, path, payload..., _op, _seq).
+
+    The image is parsed once into a map column, and every payload field
+    is projected out of it in one ``select`` (``element_at``, so an
+    absent attribute reads as null). With ``discover_fields`` the map keys
+    are collected to find additive attributes (schema evolution): one
+    global aggregate over the winners, and the action that fills their
+    cache when they are persisted.
+
+    A one-partition ``winners`` (lww.one_partition) is decoded behind a
+    ``coalesce(1)``. A scan of a persisted frame runs as an AQE cache stage
+    that reports no partitioning, so an aggregate over it would get an
+    exchange back; above the ``coalesce(1)`` the discovery aggregate needs
+    none, and the decoded frame declares one partition to the merge's
+    delta write.
+    """
+    if one_partition(winners):
+        winners = winners.coalesce(1)
+    out = winners.withColumn("_m", F.from_json(F.col("_img"), TAGGED_MAP))
+    fields = list(PAYLOAD_FIELDS)
+    if discover_fields:
+        (found,) = out.select(F.array_distinct(F.flatten(
+            F.collect_set(F.map_keys("_m"))))).collect()[0]
+        fields += sorted(k for k in found if k not in PAYLOAD_FIELDS)
+    # the winners' own columns (the parsed keys) win: a malformed image
+    # must not null out a valid parsed key
+    payload = [f for f in fields if f not in winners.columns]
+    return out.select(
+        *KEY_FIELDS,
+        *[attr_value(F.element_at(F.col("_m"), f)).alias(f) for f in payload],
+        "_op", "_seq")
 
 
 def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
@@ -164,12 +157,12 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
     the merge no-ops once committed.
 
     The LWW winners are persisted so the batch makes exactly ONE full pass
-    over the events: schema discovery and the MERGE's delta write both
-    read the ~|keys|-row cache, never the raw event stream again. The
-    discovery aggregate is the one action that fills the cache; on a
-    one-partition batch the whole apply is three single-task jobs (fill
-    the cache, discover, write the delta), on a ``change_feed`` table too:
-    the delta is the change feed.
+    over the events: schema discovery (:func:`decode_winners`) and the
+    MERGE's delta write both read the ~|keys|-row cache, never the raw
+    event stream again. The discovery aggregate is the one action that
+    fills the cache; on a one-partition batch the whole apply is three
+    single-task jobs (fill the cache, discover, write the delta), on a
+    ``change_feed`` table too: the delta is the change feed.
 
     The F3 danger-zone check rides the same pass as an ``observe`` metric
     (min ts over the pre-filter events) instead of a separate agg job; the

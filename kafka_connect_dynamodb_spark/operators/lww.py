@@ -5,7 +5,7 @@ Generalizes the reference's per-shard monotonic max-sequence-number register
 what LWW replay + downstream Kafka log-compaction semantics (docs/data.md:47-52)
 amount to.
 
-Three physical strategies, all producing identical results:
+Two physical strategies, both producing identical results:
 
 * ``latest_per_key`` (default) — ``groupBy(keys).agg(max_by(struct(*), order))``.
   Catalyst plans this as partial + final aggregation, so the shuffle moves
@@ -17,10 +17,9 @@ Three physical strategies, all producing identical results:
 * ``latest_per_key_window`` — ``row_number() over (partition by keys order by
   order desc) = 1``. Requires a full shuffle + sort of every event; kept for
   plan comparison and as the SQL-oracle-shaped formulation.
-* ``latest_per_key_salted`` — two-phase max for pathological key skew: reduce
-  on (keys, salt) first, then on keys. With map-side combine the plain agg is
-  already skew-resistant (the hot key collapses to S rows per mapper), so this
-  is for the extreme case of one key dominating entire map partitions.
+
+With map-side combine the plain agg is already skew-resistant: a hot key
+collapses to one row per mapper before the shuffle.
 """
 
 from __future__ import annotations
@@ -76,24 +75,6 @@ def latest_per_key_window(df: DataFrame, keys: list[str], order_cols: list[str])
     return (df.withColumn("_rn", F.row_number().over(w))
               .filter(F.col("_rn") == 1)
               .drop("_rn"))
-
-
-def latest_per_key_salted(df: DataFrame, keys: list[str], order_cols: list[str],
-                          salt_buckets: int = 16) -> DataFrame:
-    """Two-phase LWW for hot-key skew (SURVEY §7.4.5).
-
-    Phase 1 reduces on (keys + salt) — the hot key's events spread over
-    ``salt_buckets`` reducers; phase 2 reduces the ≤salt_buckets survivors per
-    key. Salt is derived from the order column (not random) so the job stays
-    deterministic and resumable.
-    """
-    payload = [c for c in df.columns if c not in keys]
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(salt_buckets)))
-    phase1 = salted.groupBy(*keys, "_salt").agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), _ord(order_cols)).alias("_top"))
-    phase1 = phase1.select(*keys, *[F.col(f"_top.{c}").alias(c) for c in payload])
-    return latest_per_key(phase1, keys, order_cols)
 
 
 def shard_max_seq(df: DataFrame, shard_col: str = "shard_id",

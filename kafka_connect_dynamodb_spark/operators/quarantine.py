@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.functions.envelope import (
-    KEY_FIELDS, tagged_schema)
+    KEY_FIELDS, attr_value, parse_keys)
 
 VALID_EVENT_NAMES: tuple[str, ...] = ("INSERT", "MODIFY", "REMOVE")
 
@@ -57,10 +57,10 @@ def reject_reason(*, event_name: str = "event_name", keys: str = "keys",
     gets exactly one reason even when several conditions hold.
     """
     key_fields = tuple(key_fields)
-    parsed = F.from_json(F.col(keys), tagged_schema(key_fields))
+    parsed = parse_keys(F.col(keys), key_fields)
     key_ok = None
     for k in key_fields:
-        p = F.coalesce(parsed[k]["s"], parsed[k]["n"]).isNotNull()
+        p = attr_value(parsed[k]).isNotNull()
         key_ok = p if key_ok is None else (key_ok & p)
     return (F.when(~F.col(event_name).isin(*VALID_EVENT_NAMES)
                    | F.col(event_name).isNull(),

@@ -7,11 +7,11 @@ the pandas-UDF envelope path, UTC session timezone so results compare exactly
 against the DuckDB oracle.
 
 The parallel partition-discovery threshold is raised above any lake table's
-file count. Every lake read (merge's target read, read, scan, read_key,
-count_live, diff, compact) names its files from the manifest; past 32 paths
-Spark's InMemoryFileIndex would otherwise launch a distributed listing job
-(one task per path: 64 tasks at 64 buckets) that only re-stats files the
-manifest already names. The trade: the driver now stats the paths serially,
+file count. Every lake read (read, scan, read_key, count_live, diff,
+compact, the pre-image feed's target read) names its files from the
+manifest; past 32 paths Spark's InMemoryFileIndex would otherwise launch a
+distributed listing job (one task per path: 64 tasks at 64 buckets) that
+only re-stats files the manifest already names. The trade: the driver now stats the paths serially,
 which is cheap on a local filesystem; a manifest-backed file index would
 skip the stats altogether but needs JVM code, so it is out of scope. The
 conf is set once per session, never around a read, because the session

@@ -58,11 +58,11 @@ def apply_feed_batch(batch_df, batch_id: int, *, downstream: LakeTable,
             return
     else:
         rest = batch_df
-    # LakeTable.merge requires ONE row per key (its full-outer join emits
-    # one output row per update row), but a micro-batch spanning several
-    # commits — availableNow catch-up, a lagging mirror — carries one row
-    # per key PER COMMIT. LWW-reduce first, exactly as apply_batch does;
-    # ties on _seq (a redelivered winner) break toward the later commit.
+    # LakeTable.merge requires ONE row per key (a commit's delta holds one
+    # version per key), but a micro-batch spanning several commits —
+    # availableNow catch-up, a lagging mirror — carries one row per key PER
+    # COMMIT. LWW-reduce first, exactly as apply_batch does; ties on _seq
+    # (a redelivered winner) break toward the later commit.
     rest = latest_per_key(rest, key_cols, ["_seq", "_commit"]).drop("_commit")
     downstream.merge(sp, rest, batch_id=batch_id, source=source)
 

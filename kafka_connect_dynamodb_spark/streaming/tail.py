@@ -41,7 +41,6 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
                schema=None,
                metrics: list[dict[str, Any]] | None = None,
                log_format: str = "parquet",
-               reader_options: dict[str, str] | None = None,
                dlq_dir: str | None = None) -> StreamingQuery:
     """Tail a change-event log directory into the lake table.
 
@@ -74,8 +73,6 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
     reader = spark.readStream.schema(schema or events_schema())
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    for k, v in (reader_options or {}).items():
-        reader = reader.option(k, v)
     src = reader.format(log_format).load(log_dir)
 
     def _apply(batch_df, batch_id: int):

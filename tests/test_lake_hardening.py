@@ -507,39 +507,6 @@ def test_read_columns_may_name_meta_cols(spark, tmp_path):
     assert t.read(spark, columns=["repo", "_seq"]).columns == ["repo"]
 
 
-def test_executor_side_stats_equal_driver_pyarrow(spark, tmp_path,
-                                                  monkeypatch):
-    """VERDICT r4 #3: above the bounded driver cap, manifest stats come from
-    ONE distributed footer-read job; forced here by lowering
-    _STATS_DRIVER_MAX_FILES to 0, and pinned equal to a driver-side pyarrow
-    read of the same files (the ≤cap path uses that exact function)."""
-    from kafka_connect_dynamodb_spark.lake import table as table_mod
-    from kafka_connect_dynamodb_spark.lake.table import _footer_stats
-
-    monkeypatch.setattr(table_mod, "_STATS_DRIVER_MAX_FILES", 0)
-    t = LakeTable(str(tmp_path / "tbl"))
-    t.create(spark,
-             spark.createDataFrame(BASE, "repo string, path string, content string"),
-             ["repo", "path"], n_buckets=4)
-    t.merge(spark, _upd(spark, [("r1", "p1", "zz", "u", 9),
-                                ("r9", "p9", "aa", "c", 9)]), batch_id=0)
-    m = t.manifest()
-    assert any("stats" in e for e in m.files)
-    for e in m.files:
-        want = _footer_stats(os.path.join(t.root, e["path"]))
-        assert e.get("stats", {}) == want
-    # the ≤cap (driver-pool) path produces identical manifests
-    monkeypatch.undo()
-    t2 = _table(spark, tmp_path / "tbl2")
-    t2.merge(spark, _upd(spark, [("r1", "p1", "zz", "u", 9),
-                                 ("r9", "p9", "aa", "c", 9)]), batch_id=0)
-    s1 = sorted(json.dumps(e.get("stats", {}), sort_keys=True)
-                for e in m.files)
-    s2 = sorted(json.dumps(e.get("stats", {}), sort_keys=True)
-                for e in t2.manifest().files)
-    assert s1 == s2
-
-
 def test_objectstore_commitio_end_to_end_table(spark, tmp_path):
     """VERDICT r4 #4: the S3-semantics impl (conditional-put, copy+delete
     move_dir, prefix listing, NO rename anywhere) runs the whole lifecycle:

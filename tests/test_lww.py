@@ -3,7 +3,7 @@
 from decimal import Decimal
 
 from kafka_connect_dynamodb_spark.operators.lww import (
-    latest_per_key, latest_per_key_salted, latest_per_key_window, shard_max_seq)
+    latest_per_key, latest_per_key_window, shard_max_seq)
 
 
 def _df(spark):
@@ -17,24 +17,21 @@ def _df(spark):
 def test_latest_variants_agree(spark):
     df = _df(spark)
     expected = {("r1", "p1"): "c", ("r2", "p1"): "x", ("r2", "p2"): "y"}
-    for fn in (latest_per_key, latest_per_key_window,
-               lambda d, k, o: latest_per_key_salted(d, k, o, salt_buckets=4)):
+    for fn in (latest_per_key, latest_per_key_window):
         out = {(r.repo, r.path): r.v for r in fn(df, ["repo", "path"], ["seq"]).collect()}
         assert out == expected, fn
 
 
 def test_skewed_key(spark):
-    # one hot key with 10k events + cold keys; all strategies agree
+    # one hot key with 10k events + cold keys
     hot = spark.range(10000).selectExpr(
         "'hot' as repo", "'p' as path", "id as seq", "cast(id as string) as v")
     cold = _df(spark).selectExpr("repo", "path", "cast(seq as long) seq", "v")
     df = hot.union(cold)
     a = latest_per_key(df, ["repo", "path"], ["seq"])
-    b = latest_per_key_salted(df, ["repo", "path"], ["seq"], salt_buckets=8)
     ra = {(r.repo, r.path): r.v for r in a.collect()}
-    rb = {(r.repo, r.path): r.v for r in b.collect()}
-    assert ra == rb
-    assert ra[("hot", "p")] == "9999"
+    assert ra == {("hot", "p"): "9999", ("r1", "p1"): "c", ("r2", "p1"): "x",
+                  ("r2", "p2"): "y"}
 
 
 def test_shard_max_seq_numeric_compare(spark):

@@ -9,9 +9,13 @@ turning the DLQ on changes nothing about the applied state.
 
 from __future__ import annotations
 
+from datetime import datetime, timedelta
+from decimal import Decimal
+
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
+from kafka_connect_dynamodb_spark.operators.apply import prepare_winners
 from kafka_connect_dynamodb_spark.operators.quarantine import (
     REASON_BAD_KEYS, REASON_NULL_KEYS, REASON_UNKNOWN_EVENT,
     classify_rejects, split_quarantine)
@@ -20,21 +24,30 @@ from kafka_connect_dynamodb_spark.sources.generator import (
     DEFAULT_BASE_TS, change_events, source_table)
 from kafka_connect_dynamodb_spark.streaming import tail
 
-ROWS = [
-    # (event_id, event_name, keys) — keys envelope uses the engine's
-    # (repo, path) key fields
-    (0, "INSERT", '{"repo":{"s":"r1"},"path":{"s":"a"}}'),          # clean
-    (1, "MODIFY", '{"repo":{"s":"r1"},"path":{"n":"7"}}'),          # clean (N key)
-    (2, "REMOVE", '{"repo":{"s":"r1"},"path":{"s":"b"}}'),          # clean
-    (3, "TRIM_HORIZON", '{"repo":{"s":"r1"},"path":{"s":"c"}}'),    # unknown name
-    (4, None, '{"repo":{"s":"r1"},"path":{"s":"c"}}'),              # null name
-    (5, "INSERT", None),                                            # null keys
-    (6, "INSERT", '{"repo":{"s":"r1"},"path":{"s":'),               # broken JSON
-    (7, "INSERT", '{"repo":{"s":"r1"}}'),                           # missing path
-    (8, "INSERT", '{"repo":{"s":"r1"},"path":{"bool":true}}'),      # untyped key
+_TS = datetime(2024, 6, 1, 12, 0)
+
+
+def _img(key: str) -> str:
+    return f'{{"repo":{{"s":"r1"}},"path":{key},"content":{{"s":"x"}}}}'
+
+
+# (event_id, event_name, keys, new_image, seq_no, ts) — keys envelopes use
+# the engine's (repo, path) key fields; every event has its own seq_no
+_EVENTS = [
+    (0, "INSERT", '{"repo":{"s":"r1"},"path":{"s":"a"}}', _img('{"s":"a"}')),  # clean
+    (1, "MODIFY", '{"repo":{"s":"r1"},"path":{"n":"7"}}', _img('{"n":"7"}')),  # clean (N key)
+    (2, "REMOVE", '{"repo":{"s":"r1"},"path":{"s":"b"}}', None),               # clean
+    (3, "TRIM_HORIZON", '{"repo":{"s":"r1"},"path":{"s":"c"}}', _img('{"s":"c"}')),  # unknown name
+    (4, None, '{"repo":{"s":"r1"},"path":{"s":"c"}}', _img('{"s":"c"}')),     # null name
+    (5, "INSERT", None, _img('{"s":"d"}')),                                  # null keys
+    (6, "INSERT", '{"repo":{"s":"r1"},"path":{"s":', _img('{"s":"e"}')),      # broken JSON
+    (7, "INSERT", '{"repo":{"s":"r1"}}', _img('{"s":"f"}')),                  # missing path
+    (8, "INSERT", '{"repo":{"s":"r1"},"path":{"bool":true}}', _img('{"s":"g"}')),  # untyped key
     # unknown name wins over bad keys (checked in apply-pipeline order)
-    (9, "LATEST", None),
+    (9, "LATEST", None, None),
 ]
+ROWS = [(i, name, keys, image, Decimal(100 + i), _TS + timedelta(seconds=i))
+        for i, name, keys, image in _EVENTS]
 
 EXPECTED = {3: REASON_UNKNOWN_EVENT, 4: REASON_UNKNOWN_EVENT,
             5: REASON_NULL_KEYS, 6: REASON_BAD_KEYS, 7: REASON_BAD_KEYS,
@@ -42,7 +55,9 @@ EXPECTED = {3: REASON_UNKNOWN_EVENT, 4: REASON_UNKNOWN_EVENT,
 
 
 def _frame(spark):
-    return spark.createDataFrame(ROWS, "event_id long, event_name string, keys string")
+    return spark.createDataFrame(
+        ROWS, "event_id long, event_name string, keys string, "
+              "new_image string, seq_no decimal(38,0), ts timestamp")
 
 
 def test_reject_reasons_exact(spark):
@@ -60,6 +75,22 @@ def test_split_partitions_exactly(spark):
     assert bad_ids == set(EXPECTED)
     assert good_ids | bad_ids == {r[0] for r in ROWS}
     assert "reject_reason" not in good.columns
+
+
+def test_apply_and_quarantine_agree_row_by_row(spark):
+    """Every event either applies (its key survives prepare_winners) or has
+    a classify_rejects reason: none in both sets, none in neither. Each
+    event has its own seq_no, so a winner's _seq names its event."""
+    df = _frame(spark)
+    event_of = {Decimal(100 + r[0]): r[0] for r in ROWS}
+    winners = prepare_winners(df).collect()
+    applied = {event_of[r["_seq"]] for r in winners}
+    assert applied == {0, 1, 2}
+    assert ({(r["repo"], r["path"]) for r in winners}
+            == {("r1", "a"), ("r1", "7"), ("r1", "b")})
+    rejected = {r["event_id"] for r in classify_rejects(df).collect()}
+    assert applied.isdisjoint(rejected)
+    assert applied | rejected == {r[0] for r in ROWS}
 
 
 def _corrupt(events):
