@@ -75,7 +75,9 @@ def parse_keys(keys: Column, fields: Iterable[str] = KEY_FIELDS) -> Column:
     keys do not parse: the apply path drops it (F5) and the DLQ files it
     under ``unparseable_keys``. Give the parse a projection of its own
     before reading several keys from it: inlined into each key's
-    expression, the optimizer splits it into one JSON parse per key."""
+    expression, the optimizer splits it into one JSON parse per key. A
+    filter pushed below that projection inlines it again, so a parse that
+    a filter reads sits behind a generator (``classify_rejects``)."""
     return F.from_json(keys, tagged_schema(fields))
 
 

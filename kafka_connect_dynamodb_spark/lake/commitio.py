@@ -30,6 +30,11 @@ Implementations and their atomic-publish contract:
   ListObjectsV2 over the ``_log/`` prefix — S3 listings are strongly
   consistent since 2020, so max-version discovery is safe.
 
+No data file is ever moved: every commit attempt writes its files under a
+fresh staging dir named for the version it tries to commit, and an attempt
+that loses the race writes again, so the manifest publish is the only
+atomic step a store must offer.
+
 The reference connector needs none of this because Kafka Connect owns its
 offsets/commits; here the manifest log IS the source of truth, so the
 protocol is load-bearing (VERDICT r01 "What's missing" #3).
@@ -94,16 +99,6 @@ class CommitIO:
         return float("inf")
 
     def remove_dir_if_empty(self, path: str) -> None:
-        raise NotImplementedError
-
-    def move_dir(self, src: str, dst: str) -> None:
-        """Move a staged directory to a new name (a retried
-        ``LakeTable.replace`` re-homes its uncommitted staging, see
-        LakeTable._restage). Atomic dir rename on POSIX/HDFS/ABFS. On S3
-        (no rename) implement as copy+delete — safe here because both
-        names are unique staging dirs that no manifest references until
-        the commit that follows the move. Must raise FileNotFoundError if
-        ``src`` is missing."""
         raise NotImplementedError
 
     def remove_tree(self, path: str) -> None:
@@ -176,10 +171,6 @@ class PosixCommitIO(CommitIO):
         if os.path.isdir(path) and not os.listdir(path):
             shutil.rmtree(path, ignore_errors=True)
 
-    def move_dir(self, src: str, dst: str) -> None:
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-
     def remove_tree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
 
@@ -232,7 +223,7 @@ class ObjectStoreCommitIO(PosixCommitIO):
     """S3-SEMANTICS implementation (VERDICT r3 next #4): every method is
     restricted to exactly the primitives an object store offers, so the
     whole commit protocol — contention, racer-steals-version, lifecycle,
-    vacuum — runs against S3's model with no rename anywhere:
+    vacuum — runs against S3's model with no rename or copy anywhere:
 
     * ``put_if_absent`` = conditional ``PutObject`` with ``If-None-Match: *``
       (atomic full-object publish that fails with 412 if the key exists).
@@ -245,10 +236,6 @@ class ObjectStoreCommitIO(PosixCommitIO):
       serialize two independent driver processes racing a commit (VERDICT
       r4 next #3); the kernel-arbitrated CAS is honest across processes and
       is pinned by a multiprocessing race test.
-    * ``move_dir`` = CopyObject per key + batched delete of the source
-      prefix (S3 has no rename). The only caller re-homes a uniquely-named
-      staging dir that no manifest references yet (LakeTable._restage), so
-      no reader can observe a half-copied destination.
     * ``list_dir`` / ``is_dir`` = ListObjectsV2 prefix listing with '/'
       delimiter (strongly consistent since 2020); "directory exists" means
       "prefix is listable", which an object store cannot distinguish from
@@ -281,21 +268,6 @@ class ObjectStoreCommitIO(PosixCommitIO):
             # the tmp object never outlives the call
             with contextlib.suppress(FileNotFoundError):
                 os.unlink(tmp)
-
-    def move_dir(self, src: str, dst: str) -> None:
-        if not os.path.isdir(src):
-            raise FileNotFoundError(src)
-        # CopyObject per key, then delete the source prefix — the S3 shape
-        names = []
-        for dirpath, _dirs, files in os.walk(src):
-            rel = os.path.relpath(dirpath, src)
-            for f in files:
-                names.append(os.path.normpath(os.path.join(rel, f)))
-        for rel in names:
-            out = os.path.join(dst, rel)
-            os.makedirs(os.path.dirname(out), exist_ok=True)
-            shutil.copyfile(os.path.join(src, rel), out)
-        self.remove_tree(src)
 
     def remove_tree(self, path: str) -> None:
         # list + batched DeleteObjects; no rmdir primitive assumed

@@ -71,13 +71,3 @@ def danger_cutoff(now: datetime,
         cutoff = cutoff.astimezone(timezone.utc).replace(tzinfo=None)
     return cutoff
 
-
-def drop_parse_errors(df: DataFrame, required: list[str]) -> DataFrame:
-    """F5: permissive decode — rows whose decode produced nulls in required
-    fields are dropped (logged via observation) instead of failing the job
-    (DynamoDBSourceTask.java:363-367)."""
-    cond = None
-    for c in required:
-        p = F.col(c).isNotNull()
-        cond = p if cond is None else (cond & p)
-    return df.filter(cond)

@@ -33,7 +33,7 @@ rejects instead of duplicating them — mirroring the merge's batch-id guard.
 
 from __future__ import annotations
 
-from typing import Iterable
+from typing import Iterable, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -48,58 +48,44 @@ REASON_NULL_KEYS = "null_keys"
 REASON_BAD_KEYS = "unparseable_keys"
 
 
-def reject_reason(*, event_name: str = "event_name", keys: str = "keys",
-                  key_fields: Iterable[str] = KEY_FIELDS) -> Column:
+def reject_reason(parsed: Column, key_fields: Sequence[str]) -> Column:
     """Reason the apply path would ignore this event, or NULL if it applies.
+    ``parsed`` is the event's keys envelope as :func:`parse_keys` returns
+    it for ``key_fields``.
 
     Reasons are checked in the order the apply pipeline drops them
     (cheap pushable predicates first, exact key parse last), so each event
     gets exactly one reason even when several conditions hold.
     """
-    key_fields = tuple(key_fields)
-    parsed = parse_keys(F.col(keys), key_fields)
     key_ok = None
     for k in key_fields:
         p = attr_value(parsed[k]).isNotNull()
         key_ok = p if key_ok is None else (key_ok & p)
-    return (F.when(~F.col(event_name).isin(*VALID_EVENT_NAMES)
-                   | F.col(event_name).isNull(),
+    return (F.when(~F.col("event_name").isin(*VALID_EVENT_NAMES)
+                   | F.col("event_name").isNull(),
                    F.lit(REASON_UNKNOWN_EVENT))
-             .when(F.col(keys).isNull(), F.lit(REASON_NULL_KEYS))
+             .when(F.col("keys").isNull(), F.lit(REASON_NULL_KEYS))
              .when(~key_ok, F.lit(REASON_BAD_KEYS)))
 
 
-def classify_rejects(df: DataFrame, *, event_name: str = "event_name",
-                     keys: str = "keys",
+def classify_rejects(df: DataFrame, *,
                      key_fields: Iterable[str] = KEY_FIELDS) -> DataFrame:
     """The events the apply path ignores, each tagged with ``reject_reason``.
 
     Returns the original columns plus ``reject_reason``; rows that would
-    apply cleanly are filtered out. One narrow projection + filter — no
-    shuffle, no Python.
+    apply cleanly are filtered out. No shuffle, no Python. The keys parse
+    sits behind an ``explode`` of a one-element array: the reason filter
+    cannot be pushed below a generator it reads, so the parse runs once per
+    event; in a plain projection the pushed filter would inline it again
+    into every key's expression.
     """
-    reason = reject_reason(event_name=event_name, keys=keys,
-                           key_fields=key_fields)
-    return (df.withColumn("reject_reason", reason)
-              .filter(F.col("reject_reason").isNotNull()))
-
-
-def split_quarantine(df: DataFrame, *, event_name: str = "event_name",
-                     keys: str = "keys",
-                     key_fields: Iterable[str] = KEY_FIELDS,
-                     ) -> tuple[DataFrame, DataFrame]:
-    """(applies_cleanly, rejects_with_reason) from one raw event frame.
-
-    The two sides partition ``df`` exactly: good = reason IS NULL. The good
-    side still goes through the normal apply pipeline (which re-applies the
-    same predicates — Catalyst collapses the duplication into the scan
-    filters); the reject side is DLQ-ready.
-    """
-    tagged = df.withColumn("reject_reason", reject_reason(
-        event_name=event_name, keys=keys, key_fields=key_fields))
-    good = tagged.filter(F.col("reject_reason").isNull()).drop("reject_reason")
-    bad = tagged.filter(F.col("reject_reason").isNotNull())
-    return good, bad
+    key_fields = tuple(key_fields)
+    parsed = F.explode(F.array(parse_keys(F.col("keys"), key_fields)))
+    return (df.select("*", parsed.alias("_keys"))
+              .withColumn("reject_reason",
+                          reject_reason(F.col("_keys"), key_fields))
+              .filter(F.col("reject_reason").isNotNull())
+              .drop("_keys"))
 
 
 def write_dlq(rejects: DataFrame, dlq_dir: str, batch_id: int) -> None:

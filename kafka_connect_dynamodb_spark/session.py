@@ -7,8 +7,8 @@ the pandas-UDF envelope path, UTC session timezone so results compare exactly
 against the DuckDB oracle.
 
 The parallel partition-discovery threshold is raised above any lake table's
-file count. Every lake read (read, scan, read_key, count_live, diff,
-compact, the pre-image feed's target read) names its files from the
+file count. Every lake read (read, scan and the point lookups it serves,
+count_live, diff, compact, the pre-image feed's target read) names its files from the
 manifest; past 32 paths Spark's InMemoryFileIndex would otherwise launch a
 distributed listing job (one task per path: 64 tasks at 64 buckets) that
 only re-stats files the manifest already names. The trade: the driver now stats the paths serially,

@@ -23,6 +23,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
+from kafka_connect_dynamodb_spark.streaming.tail import start_foreach_batch
 
 
 def apply_feed_batch(batch_df, batch_id: int, *, downstream: LakeTable,
@@ -95,11 +96,6 @@ def mirror_changes(spark: SparkSession, primary: LakeTable,
         apply_feed_batch(batch_df, batch_id, downstream=downstream,
                          key_cols=key_cols, source=source)
 
-    writer = (primary.stream_changes(spark)
-              .writeStream.foreachBatch(_apply)
-              .option("checkpointLocation", checkpoint_dir))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif processing_time:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
+    return start_foreach_batch(primary.stream_changes(spark), _apply,
+                               checkpoint_dir, available_now=available_now,
+                               processing_time=processing_time)

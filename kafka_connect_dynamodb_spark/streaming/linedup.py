@@ -33,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
+from .tail import start_foreach_batch
 
 INDEX_SCHEMA = T.StructType([
     T.StructField("line_hash", T.LongType()),
@@ -101,12 +102,8 @@ class LineDedupIngest:
         reader = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", max_files_per_trigger)
                   .parquet(source_dir))
-        writer = (reader.writeStream
-                  .foreachBatch(self.apply_batch)
-                  .option("checkpointLocation", checkpoint_dir))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_foreach_batch(reader, self.apply_batch, checkpoint_dir,
+                                   available_now=available_now)
 
     def cleaned(self, spark: SparkSession) -> DataFrame:
         """Every cleaned document ingested so far (all batch partitions)."""

@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
 from ..operators.scd2 import IS_CURRENT, VALID_FROM, VALID_TO, scd2_history
+from .tail import start_foreach_batch
 
 
 class Scd2Maintainer:
@@ -145,9 +146,5 @@ class Scd2Maintainer:
         reader = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", max_files_per_trigger)
                   .parquet(source_dir))
-        writer = (reader.writeStream
-                  .foreachBatch(self.apply_batch)
-                  .option("checkpointLocation", checkpoint_dir))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_foreach_batch(reader, self.apply_batch, checkpoint_dir,
+                                   available_now=available_now)

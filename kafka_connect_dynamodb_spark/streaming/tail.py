@@ -22,7 +22,7 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Any, Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
@@ -87,7 +87,21 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
         if metrics is not None:
             metrics.append(res)
 
-    writer = src.writeStream.foreachBatch(_apply).option(
+    return start_foreach_batch(src, _apply, checkpoint_dir,
+                               available_now=available_now,
+                               processing_time=processing_time)
+
+
+def start_foreach_batch(src: DataFrame,
+                        fn: Callable[[DataFrame, int], None],
+                        checkpoint_dir: str, *, available_now: bool = True,
+                        processing_time: str | None = None) -> StreamingQuery:
+    """Start the streaming frame ``src`` as a query that hands each
+    micro-batch to ``fn(batch_df, batch_id)``, its progress checkpointed
+    under ``checkpoint_dir``. ``available_now`` drains what the source
+    holds and stops; otherwise ``processing_time`` sets the trigger
+    interval (Spark's default trigger when None)."""
+    writer = src.writeStream.foreachBatch(fn).option(
         "checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)

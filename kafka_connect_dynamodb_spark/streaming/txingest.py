@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..plans.transactions import TxCoordinator
+from .tail import start_foreach_batch
 
 
 class TxIngest:
@@ -153,9 +154,5 @@ class TxIngest:
         reader = (spark.readStream.schema(schema)
                   .option("maxFilesPerTrigger", max_files_per_trigger)
                   .parquet(source_dir))
-        writer = (reader.writeStream
-                  .foreachBatch(self.apply_batch)
-                  .option("checkpointLocation", checkpoint_dir))
-        if available_now:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return start_foreach_batch(reader, self.apply_batch, checkpoint_dir,
+                                   available_now=available_now)

@@ -188,9 +188,10 @@ def test_merge_writes_one_delta_in_two_jobs(spark, tmp_path):
 
 
 def test_reads_with_deltas_stay_one_job(spark, tmp_path):
-    """read_key on a table with deltas resolves with orderBy().limit(1) in
-    one job; a _seq watermark scan keeping a single delta reads it as it is,
-    in one job."""
+    """read_key on a table with deltas, a scan with an equality predicate
+    on every key column, resolves the key with orderBy().limit(1) in one
+    job; a _seq watermark scan keeping a single delta reads it as it is, in
+    one job."""
     t = LakeTable(str(tmp_path / "tbl"))
     t.create(spark, spark.createDataFrame(
         [(f"r{i % 7}", f"p{i}", f"v{i}") for i in range(2000)],

@@ -1,4 +1,4 @@
-"""DLQ quarantine: reject classification, split exactness, DLQ landing
+"""DLQ quarantine: reject classification, one keys parse, DLQ landing
 through the stream tail, and redelivery idempotency.
 
 The reference logs-and-skips unconvertible records
@@ -18,7 +18,7 @@ from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators.apply import prepare_winners
 from kafka_connect_dynamodb_spark.operators.quarantine import (
     REASON_BAD_KEYS, REASON_NULL_KEYS, REASON_UNKNOWN_EVENT,
-    classify_rejects, split_quarantine)
+    classify_rejects)
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.sources.generator import (
     DEFAULT_BASE_TS, change_events, source_table)
@@ -66,15 +66,12 @@ def test_reject_reasons_exact(spark):
     assert got == EXPECTED
 
 
-def test_split_partitions_exactly(spark):
-    df = _frame(spark)
-    good, bad = split_quarantine(df)
-    good_ids = {r["event_id"] for r in good.collect()}
-    bad_ids = {r["event_id"] for r in bad.collect()}
-    assert good_ids == {0, 1, 2}
-    assert bad_ids == set(EXPECTED)
-    assert good_ids | bad_ids == {r[0] for r in ROWS}
-    assert "reject_reason" not in good.columns
+def test_classify_rejects_parses_keys_once(spark):
+    """The keys envelope is parsed once per event, not once per key
+    attribute: the optimized plan holds a single from_json."""
+    plan = classify_rejects(_frame(spark))._jdf.queryExecution() \
+        .optimizedPlan().toString()
+    assert plan.count("from_json(") == 1, plan
 
 
 def test_apply_and_quarantine_agree_row_by_row(spark):
