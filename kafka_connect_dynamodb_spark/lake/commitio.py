@@ -168,8 +168,9 @@ class PosixCommitIO(CommitIO):
         return os.stat(path).st_mtime
 
     def remove_dir_if_empty(self, path: str) -> None:
-        if os.path.isdir(path) and not os.listdir(path):
-            shutil.rmtree(path, ignore_errors=True)
+        # rmdir(2) refuses a non-empty dir
+        with contextlib.suppress(OSError):
+            os.rmdir(path)
 
     def remove_tree(self, path: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
@@ -248,26 +249,11 @@ class ObjectStoreCommitIO(PosixCommitIO):
 
     Data-plane parquet reads/writes still go through Spark's own FileSystem
     layer, as on a real cluster (s3a://); only transactional metadata flows
-    through here. Reads, listings, deletes, the walk, mtimes and
-    ``ensure_dir`` are PosixCommitIO's, over the local stand-in.
+    through here. Everything but ``remove_tree`` is PosixCommitIO's, over
+    the local stand-in: its ``link(2)`` publish is the conditional put,
+    and its ``remove_dir_if_empty`` is an ``rmdir`` that an object store
+    has no need of (an empty prefix does not exist).
     """
-
-    def put_if_absent(self, path: str, payload: str) -> None:
-        # Conditional-put CAS honest ACROSS PROCESSES: the temp object is
-        # fully written + fsync'd first, then published with one link(2) —
-        # the kernel arbitrates concurrent publishers from any number of
-        # driver processes to a single winner (EEXIST ⇔ S3's 412), and a
-        # reader can never observe a torn object because the path only
-        # ever names the complete payload.
-        tmp = _write_temp(path, payload)
-        try:
-            os.link(tmp, path)            # stands in for If-None-Match: *
-        except FileExistsError as e:
-            raise CommitConflict(f"{path} already committed") from e
-        finally:
-            # the tmp object never outlives the call
-            with contextlib.suppress(FileNotFoundError):
-                os.unlink(tmp)
 
     def remove_tree(self, path: str) -> None:
         # list + batched DeleteObjects; no rmdir primitive assumed
@@ -281,12 +267,5 @@ class ObjectStoreCommitIO(PosixCommitIO):
                     pass
             try:
                 os.rmdir(dirpath)         # local cleanup of the empty shell
-            except OSError:
-                pass
-
-    def remove_dir_if_empty(self, path: str) -> None:
-        if os.path.isdir(path) and not os.listdir(path):
-            try:
-                os.rmdir(path)
             except OSError:
                 pass

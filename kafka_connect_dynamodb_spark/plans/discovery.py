@@ -35,7 +35,6 @@ from pyspark.sql import SparkSession
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.plans.state import InitSyncStatus
-from kafka_connect_dynamodb_spark.streaming import tail
 
 
 @dataclass
@@ -93,7 +92,8 @@ class MultiTablePipeline:
     2. for undiscovered->new tables, waits out ``init_sync_delay_s`` (T9)
        from first sighting, then runs INIT_SYNC;
     3. for synced tables, drains their change log incrementally
-       (availableNow tail against the per-table checkpoint).
+       (``CdcPipeline.sync_stream``: an availableNow tail against the
+       per-table checkpoint, resyncing the table on a danger-zone event).
     """
 
     def __init__(self, spark: SparkSession, source_root: str, lake_root: str,
@@ -174,6 +174,9 @@ class MultiTablePipeline:
         return {n: r.status for n, r in self.tables.items()}
 
     def _advance(self, run: _TableRun) -> None:
+        def snapshot():
+            return self.spark.read.parquet(run.spec.snapshot_path)
+
         info = run.pipeline.load_state()
         if info.init_sync_state != InitSyncStatus.FINISHED:
             # T9: hold INIT_SYNC until the start delay has elapsed since
@@ -181,50 +184,14 @@ class MultiTablePipeline:
             if self.clock() - run.discovered_at < self.init_sync_delay_s:
                 run.status = "pending"
                 return
-            run.pipeline.init_sync(
-                self.spark.read.parquet(run.spec.snapshot_path))
-            info = run.pipeline.load_state()
-        if os.path.isdir(run.spec.log_path):
-            from datetime import datetime, timezone
-
-            from kafka_connect_dynamodb_spark.operators.apply import (
-                DangerZoneError)
-
-            def _drain(sync_start_ms: int, *, danger: bool) -> None:
-                start = datetime.fromtimestamp(sync_start_ms / 1000,
-                                               tz=timezone.utc)
-                tail.drain(tail.start_tail(
-                    self.spark, run.spec.log_path, run.pipeline.table,
-                    checkpoint_dir=run.checkpoint_dir, source=run.spec.name,
-                    init_sync_start=start, metrics=run.metrics,
-                    clock=(lambda: datetime.fromtimestamp(
-                        self.clock(), tz=timezone.utc)) if danger else None))
-
-            try:
-                # danger clock armed per micro-batch, the reference's SYNC-
-                # state check (DynamoDBSourceTask.java:318-331, F3)
-                _drain(info.init_sync_start, danger=True)
-            except Exception as e:
-                # a DangerZoneError raised inside foreachBatch surfaces from
-                # awaitTermination wrapped in StreamingQueryException
-                if not (isinstance(e, DangerZoneError)
-                        or "DangerZoneError" in str(e)):
-                    raise
-                # T1 recovery INSIDE the fleet poll: re-snapshot THIS table
-                # (one atomic replace) and re-drain the failed batch against
-                # it. Danger stays disarmed for the recovery drain — the
-                # reference's post-resync catch-up skips events the new
-                # snapshot already covers without re-checking them
-                # (DynamoDBSourceTask.java:373-381); the next poll() cycle
-                # re-arms the clock. Sibling tables are untouched (their
-                # _advance runs concurrently in this same cycle).
-                run.pipeline.resync(
-                    self.spark.read.parquet(run.spec.snapshot_path))
-                _drain(run.pipeline.load_state().init_sync_start,
-                       danger=False)
-                run.status = "resynced"
-                return
-        run.status = "synced"
+            run.pipeline.init_sync(snapshot())
+        # a danger-zone breach resyncs THIS table inside the poll (T1);
+        # sibling tables are untouched (their _advance runs concurrently in
+        # this same cycle), and the next cycle re-arms the check
+        resynced = os.path.isdir(run.spec.log_path) and run.pipeline.sync_stream(
+            run.spec.log_path, snapshot, checkpoint_dir=run.checkpoint_dir,
+            source=run.spec.name, metrics=run.metrics)
+        run.status = "resynced" if resynced else "synced"
 
     def read(self, name: str):
         return self.table_for(name).read(self.spark)

@@ -22,6 +22,7 @@ import time
 from datetime import datetime, timezone
 from typing import Any, Callable
 
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import DataFrame, SparkSession
 
 from kafka_connect_dynamodb_spark.functions.envelope import KEY_FIELDS
@@ -29,6 +30,7 @@ from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators.apply import DangerZoneError, apply_batch
 from kafka_connect_dynamodb_spark.operators.filters import INIT_SYNC_RESTART_HOURS
 from kafka_connect_dynamodb_spark.plans.state import InitSyncStatus, SourceInfo
+from kafka_connect_dynamodb_spark.streaming import tail
 
 STATE_PROP = "source_info"
 
@@ -209,6 +211,19 @@ class CdcPipeline:
 
     # ------------------------------------------------------------------ sync
 
+    def _sync_start(self) -> datetime | None:
+        """The finished INIT_SYNC's start (F2's anchor) as a UTC datetime."""
+        info = self.load_state()
+        if info.init_sync_state != InitSyncStatus.FINISHED:
+            raise RuntimeError("SYNC before INIT_SYNC finished "
+                               f"(state={info.init_sync_state})")
+        return (datetime.fromtimestamp(info.init_sync_start / 1000, tz=timezone.utc)
+                if info.init_sync_start else None)
+
+    def _now(self) -> datetime:
+        """The pipeline clock as a UTC datetime: the danger-zone 'now'."""
+        return datetime.fromtimestamp(self.clock(), tz=timezone.utc)
+
     def sync_batch(self, events_df: DataFrame, batch_id: int, *,
                    source: str = "stream", danger_check: bool = False) -> dict[str, Any]:
         """Phase 2, one micro-batch. Raises DangerZoneError when a resync is
@@ -218,17 +233,48 @@ class CdcPipeline:
         meaningful only for live tailing (the reference's 24h stream retention,
         DynamoDBSourceTask.java:318-331); a historical-log replay disables it.
         """
-        info = self.load_state()
-        if info.init_sync_state != InitSyncStatus.FINISHED:
-            raise RuntimeError("SYNC before INIT_SYNC finished "
-                               f"(state={info.init_sync_state})")
-        start = (datetime.fromtimestamp(info.init_sync_start / 1000, tz=timezone.utc)
-                 if info.init_sync_start else None)
-        now = (datetime.fromtimestamp(self.clock(), tz=timezone.utc)
-               if danger_check else None)
         return apply_batch(self.spark, self.table, events_df,
                            batch_id=batch_id, source=source,
-                           init_sync_start=start, now=now)
+                           init_sync_start=self._sync_start(),
+                           now=self._now() if danger_check else None)
+
+    def sync_stream(self, log_dir: str, snapshot: Callable[[], DataFrame], *,
+                    checkpoint_dir: str, source: str = "stream",
+                    danger_check: bool = True, available_now: bool = True,
+                    processing_time: str | None = None,
+                    max_files_per_trigger: int | None = None,
+                    metrics: list[dict[str, Any]] | None = None) -> bool:
+        """Phase 2 as a stream: tail ``log_dir`` into the table from
+        ``checkpoint_dir`` and wait for the query. Returns True if it
+        resynced.
+
+        ``danger_check`` reads the pipeline clock per micro-batch (F3,
+        DynamoDBSourceTask.java:318-331). A breach fails the batch
+        unapplied; then INIT_SYNC re-runs from ``snapshot()`` (T1) and the
+        same checkpoint drains to the end of the log with the check off, as
+        the reference's post-resync catch-up does
+        (DynamoDBSourceTask.java:373-381): the redelivered batch still
+        holds the stale event, which the check sees before F2 drops it.
+        The next call re-arms the check.
+        """
+        def drain(clock, available_now=True, processing_time=None):
+            tail.drain(tail.start_tail(
+                self.spark, log_dir, self.table, checkpoint_dir=checkpoint_dir,
+                source=source, init_sync_start=self._sync_start(), clock=clock,
+                available_now=available_now, processing_time=processing_time,
+                max_files_per_trigger=max_files_per_trigger, metrics=metrics))
+
+        try:
+            drain(self._now if danger_check else None,
+                  available_now, processing_time)
+        except StreamingQueryException as e:
+            # a DangerZoneError raised inside foreachBatch arrives wrapped
+            if DangerZoneError.__name__ not in str(e):
+                raise
+            self.resync(snapshot())
+            drain(None)
+            return True
+        return False
 
     def resync(self, snapshot_df: DataFrame) -> SourceInfo:
         """Danger-zone recovery: abandon stream state, re-run INIT_SYNC."""
@@ -237,13 +283,9 @@ class CdcPipeline:
     def run(self, snapshot_df: DataFrame, events_df: DataFrame, *,
             batch_id: int = 0) -> dict[str, Any]:
         """One-shot batch replay: snapshot then a single apply of the whole
-        log — the minimum slice (SURVEY §7.1). Streaming path lives in
-        ``streaming.tail``."""
+        log — the minimum slice (SURVEY §7.1), with no danger check (a
+        historical log). The streaming twin is ``sync_stream``."""
         info = self.load_state()
         if info.init_sync_state != InitSyncStatus.FINISHED:
             self.init_sync(snapshot_df)
-        try:
-            return self.sync_batch(events_df, batch_id)
-        except DangerZoneError:
-            self.resync(snapshot_df)
-            return self.sync_batch(events_df, batch_id)
+        return self.sync_batch(events_df, batch_id)

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 
 from ..lake.table import LakeTable
 from ..operators.scd2 import IS_CURRENT, VALID_FROM, VALID_TO, scd2_history
-from .tail import start_foreach_batch
+from .tail import start_file_stream
 
 
 class Scd2Maintainer:
@@ -140,11 +140,7 @@ class Scd2Maintainer:
               schema: T.StructType | None = None,
               max_files_per_trigger: int = 1,
               available_now: bool = True):
-        spark = self.spark
-        if schema is None:
-            schema = spark.read.parquet(source_dir).schema
-        reader = (spark.readStream.schema(schema)
-                  .option("maxFilesPerTrigger", max_files_per_trigger)
-                  .parquet(source_dir))
-        return start_foreach_batch(reader, self.apply_batch, checkpoint_dir,
-                                   available_now=available_now)
+        return start_file_stream(self.spark, source_dir, self.apply_batch,
+                                 checkpoint_dir, schema=schema,
+                                 max_files_per_trigger=max_files_per_trigger,
+                                 available_now=available_now)

@@ -33,7 +33,6 @@ from kafka_connect_dynamodb_spark.sources.generator import events_schema
 def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
                checkpoint_dir: str, source: str = "stream",
                init_sync_start: datetime | None = None,
-               now: datetime | None = None,
                clock: Callable[[], datetime] | None = None,
                max_files_per_trigger: int | None = None,
                available_now: bool = True,
@@ -52,16 +51,13 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
     otherwise runs continuously with ``processing_time`` triggers (the
     reference's 500ms idle poll, Constants.java:7, T8).
 
-    A ``DangerZoneError`` raised inside a batch fails the query; the caller
-    (plans.pipeline) catches it via ``query.awaitTermination`` and re-runs
-    INIT_SYNC — transition T1/F3.
+    A ``DangerZoneError`` raised inside a batch fails the query;
+    ``plans.pipeline.CdcPipeline.sync_stream`` catches it from the wait on
+    the query and re-runs INIT_SYNC — transition T1/F3.
 
-    ``now`` pins a single logical clock for a whole replay (historical-log
-    mode); ``clock`` is evaluated PER MICRO-BATCH, matching the reference's
-    per-poll ``Instant.now()`` danger-zone clock
-    (DynamoDBSourceTask.java:318-331) — use it for long-lived
-    ``processing_time`` tails where a query-start snapshot of the clock
-    would go stale.
+    ``clock`` arms the danger-zone check and is read PER MICRO-BATCH, like
+    the reference's per-poll ``Instant.now()`` (DynamoDBSourceTask.java:
+    318-331); a historical replay passes one that returns a fixed time.
 
     ``dlq_dir`` turns on the dead-letter quarantine: events the apply path
     ignores (unknown eventName, null/unparseable keys — the records the
@@ -70,11 +66,6 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
     column, rewritten idempotently on batch redelivery. Costs one extra
     scan of each micro-batch, nothing table-sized.
     """
-    reader = spark.readStream.schema(schema or events_schema())
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    src = reader.format(log_format).load(log_dir)
-
     def _apply(batch_df, batch_id: int):
         if dlq_dir is not None:
             from kafka_connect_dynamodb_spark.operators.quarantine import (
@@ -83,12 +74,34 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
         res = apply_batch(batch_df.sparkSession, table, batch_df,
                           batch_id=batch_id, source=source,
                           init_sync_start=init_sync_start,
-                          now=clock() if clock is not None else now)
+                          now=clock() if clock is not None else None)
         if metrics is not None:
             metrics.append(res)
 
-    return start_foreach_batch(src, _apply, checkpoint_dir,
-                               available_now=available_now,
+    return start_file_stream(spark, log_dir, _apply, checkpoint_dir,
+                             schema=schema or events_schema(),
+                             file_format=log_format,
+                             max_files_per_trigger=max_files_per_trigger,
+                             available_now=available_now,
+                             processing_time=processing_time)
+
+
+def start_file_stream(spark: SparkSession, source_dir: str,
+                      fn: Callable[[DataFrame, int], None],
+                      checkpoint_dir: str, *, schema=None,
+                      file_format: str = "parquet",
+                      max_files_per_trigger: int | None = None,
+                      available_now: bool = True,
+                      processing_time: str | None = None) -> StreamingQuery:
+    """:func:`start_foreach_batch` over the files of ``source_dir``, read
+    with ``schema`` (by default, the one a batch read infers)."""
+    if schema is None:
+        schema = spark.read.format(file_format).load(source_dir).schema
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return start_foreach_batch(reader.format(file_format).load(source_dir),
+                               fn, checkpoint_dir, available_now=available_now,
                                processing_time=processing_time)
 
 

@@ -10,13 +10,18 @@ On a real cluster:
         --checkpoint s3://bucket/checkpoints/replicated_table/ \
         --buckets 4096 [--follow --trigger "30 seconds"] [--base-ts 2024-06-01]
 
-Locally (what the sandbox runs): the same module with local paths. The session
-inherits master/conf from spark-submit when present; `get_spark` only fills in
-local-mode defaults when no master is configured.
+Locally: the same module with local paths. The session inherits master/conf
+from spark-submit when present; `get_spark` only fills in local-mode defaults
+when no master is configured.
 
 Phases (SURVEY §3): INIT_SYNC snapshot unless the table already exists with
-FINISHED state, then the streaming tail from the checkpoint. DangerZoneError
-triggers a resync (T1/F3) and the tail restarts.
+FINISHED state, then the streaming tail from the checkpoint
+(`CdcPipeline.sync_stream`). The danger-zone check (F3) is armed with
+--base-ts (a logical clock for replaying a historical log) or --follow (the
+wall clock); a plain drain of an old log keeps it off, since every historical
+event would look expired against today's clock. A breach resyncs the table
+(T1) and drains the rest of the log with the check off, so a plain drain ends
+after at most one resync; --follow then re-arms the check and follows again.
 """
 
 from __future__ import annotations
@@ -24,6 +29,7 @@ from __future__ import annotations
 import argparse
 import os
 import sys
+import time
 from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -52,19 +58,16 @@ def main(argv: list[str] | None = None) -> int:
     from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
     from kafka_connect_dynamodb_spark.plans.state import InitSyncStatus
     from kafka_connect_dynamodb_spark.lake.table import LakeTable
-    from kafka_connect_dynamodb_spark.operators.apply import DangerZoneError
     from kafka_connect_dynamodb_spark.session import get_spark
-    from kafka_connect_dynamodb_spark.streaming import tail
 
-    clock = None
+    clock = time.time
     if args.base_ts:
         fixed = datetime.fromisoformat(args.base_ts).replace(tzinfo=timezone.utc)
-        clock = lambda: fixed.timestamp()  # noqa: E731
+        clock = fixed.timestamp
 
     spark = get_spark("cdc-replay")
     table = LakeTable(args.table, change_feed=args.change_feed)
-    pipe = CdcPipeline(spark, table, n_buckets=args.buckets,
-                       **({"clock": clock} if clock else {}))
+    pipe = CdcPipeline(spark, table, n_buckets=args.buckets, clock=clock)
 
     info = pipe.load_state()
     if info.init_sync_state != InitSyncStatus.FINISHED:
@@ -75,39 +78,16 @@ def main(argv: list[str] | None = None) -> int:
             info = pipe.init_sync(spark.read.parquet(args.snapshot))
         print(f"INIT_SYNC done: {info.init_sync_count} rows", flush=True)
 
-    # Danger-zone clock (F3): evaluated per micro-batch. --base-ts pins the
-    # logical clock (historical replay with the reference's resync semantics);
-    # --follow without it uses the wall clock like the reference's per-poll
-    # Instant.now(). A plain drain of an old log keeps the check off — every
-    # historical event would spuriously look expired against today's clock.
-    danger_clock = None
-    if clock is not None:
-        danger_clock = lambda: datetime.fromtimestamp(clock(), tz=timezone.utc)  # noqa: E731
-    elif args.follow:
-        danger_clock = lambda: datetime.now(timezone.utc)  # noqa: E731
-
-    start = datetime.fromtimestamp(info.init_sync_start / 1000, tz=timezone.utc)
     metrics: list[dict] = []
-    while True:
-        q = tail.start_tail(
-            spark, args.log, table, checkpoint_dir=args.checkpoint,
-            init_sync_start=start,
-            clock=danger_clock,
+    while pipe.sync_stream(
+            args.log, lambda: spark.read.parquet(args.snapshot),
+            checkpoint_dir=args.checkpoint,
+            danger_check=bool(args.base_ts) or args.follow,
             available_now=not args.follow,
             processing_time=args.trigger if args.follow else None,
             max_files_per_trigger=args.max_files_per_trigger,
-            metrics=metrics)
-        try:
-            q.awaitTermination()
-            break
-        except Exception as e:  # StreamingQueryException wraps batch errors
-            if "DangerZone" in str(e) or isinstance(e, DangerZoneError):
-                print("danger zone breached -> resync", flush=True)
-                info = pipe.resync(spark.read.parquet(args.snapshot))
-                start = datetime.fromtimestamp(info.init_sync_start / 1000,
-                                               tz=timezone.utc)
-                continue
-            raise
+            metrics=metrics):
+        print("danger zone breached -> resynced", flush=True)
     for mrow in metrics[-5:]:
         print("batch:", mrow, flush=True)
     print("final rows:", table.read(spark).count(), flush=True)

@@ -200,10 +200,109 @@ def test_tail_over_empty_log_file_commits_zero_rows(spark, tmp_path):
     table = _small_table(spark, tmp_path)
     version = table.current_version()
     q = tail.start_tail(spark, log, table, checkpoint_dir=str(tmp_path / "cp"),
-                        now=NOW)
+                        clock=lambda: NOW)
     try:
         _in_thread(q.awaitTermination)
     finally:
         if q.isActive:
             q.stop()
     _assert_empty_commit(table, version)
+
+
+def _danger_log(spark, tmp_path, n_events=300):
+    """A snapshot dir and a one-batch log whose last event is 30 h old."""
+    base = source_table(spark, N_KEYS)
+    events = change_events(spark, N_KEYS, n_events, danger_event=True,
+                           pre_init_frac=0.0)
+    base.write.parquet(str(tmp_path / "snap"))
+    events.coalesce(1).write.parquet(str(tmp_path / "log"))
+    return base, events
+
+
+def _snapshot_counter(df):
+    calls = []
+
+    def snapshot():
+        calls.append(1)
+        return df
+    return snapshot, calls
+
+
+def test_sync_stream_resyncs_once_on_a_danger_event(spark, tmp_path):
+    """A breach resyncs from the snapshot and drains the rest of the log
+    with the check off: one resync, then the oracle's state (the danger
+    event falls before the new F2 cutoff)."""
+    base, events = _danger_log(spark, tmp_path)
+    table = LakeTable(str(tmp_path / "tbl"))
+    pipe = CdcPipeline(spark, table, n_buckets=8, clock=lambda: CLOCK)
+    pipe.init_sync(base)
+    snapshot, calls = _snapshot_counter(base)
+    assert pipe.sync_stream(str(tmp_path / "log"), snapshot,
+                            checkpoint_dir=str(tmp_path / "cp")) is True
+    assert len(calls) == 1
+    assert pipe.load_state().init_sync_state == InitSyncStatus.FINISHED
+    assert engine_hashes(spark, table) == oracle_hashes(
+        spark, base, events, init_sync_start=DEFAULT_BASE_TS)
+
+
+def test_sync_stream_clean_drain_never_snapshots(spark, tmp_path):
+    base = source_table(spark, N_KEYS)
+    events = change_events(spark, N_KEYS, 300, pre_init_frac=0.0)
+    events.coalesce(1).write.parquet(str(tmp_path / "log"))
+    table = LakeTable(str(tmp_path / "tbl"))
+    pipe = CdcPipeline(spark, table, n_buckets=8, clock=lambda: CLOCK)
+    pipe.init_sync(base)
+    snapshot, calls = _snapshot_counter(base)
+    metrics: list[dict] = []
+    assert pipe.sync_stream(str(tmp_path / "log"), snapshot,
+                            checkpoint_dir=str(tmp_path / "cp"),
+                            metrics=metrics) is False
+    assert calls == [] and len(metrics) == 1
+    assert engine_hashes(spark, table) == oracle_hashes(spark, base, events)
+
+
+def test_sync_stream_other_errors_propagate_without_resync(spark, tmp_path):
+    class BrokenSink(list):
+        def append(self, item):
+            raise RuntimeError("metrics sink is down")
+
+    base = source_table(spark, N_KEYS)
+    change_events(spark, N_KEYS, 300, pre_init_frac=0.0) \
+        .coalesce(1).write.parquet(str(tmp_path / "log"))
+    table = LakeTable(str(tmp_path / "tbl"))
+    pipe = CdcPipeline(spark, table, n_buckets=8, clock=lambda: CLOCK)
+    pipe.init_sync(base)
+    snapshot, calls = _snapshot_counter(base)
+    with pytest.raises(Exception, match="metrics sink is down"):
+        pipe.sync_stream(str(tmp_path / "log"), snapshot,
+                         checkpoint_dir=str(tmp_path / "cp"),
+                         metrics=BrokenSink())
+    assert calls == []
+
+
+def test_submit_replay_ends_after_one_resync(spark, tmp_path, capsys):
+    """``scripts/submit_replay.py --base-ts`` over a log holding a danger
+    event: one resync, exit 0, oracle parity. A replay that re-arms the
+    check for the redelivered batch resyncs forever and times out here."""
+    import importlib.util
+    import os
+
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "scripts", "submit_replay.py")
+    spec = importlib.util.spec_from_file_location("submit_replay", path)
+    submit_replay = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(submit_replay)
+
+    base, events = _danger_log(spark, tmp_path)
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        code = _in_thread(lambda: submit_replay.main([
+            "--snapshot", str(tmp_path / "snap"), "--log", str(tmp_path / "log"),
+            "--table", str(tmp_path / "tbl"), "--checkpoint", str(tmp_path / "cp"),
+            "--buckets", "8", "--base-ts", DEFAULT_BASE_TS.date().isoformat()]))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert code == 0
+    assert capsys.readouterr().out.count("danger zone breached") == 1
+    assert engine_hashes(spark, LakeTable(str(tmp_path / "tbl"))) == \
+        oracle_hashes(spark, base, events, init_sync_start=DEFAULT_BASE_TS)

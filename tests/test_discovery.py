@@ -87,7 +87,6 @@ def test_poll_advances_tables_concurrently(spark, tmp_path):
     multiplexes independent per-table jobs on the shared SparkSession)."""
     import threading
 
-    from kafka_connect_dynamodb_spark.plans import discovery as disc
     from kafka_connect_dynamodb_spark.streaming import tail as tail_mod
 
     root = str(tmp_path / "src")
@@ -106,12 +105,11 @@ def test_poll_advances_tables_concurrently(spark, tmp_path):
 
     mt = MultiTablePipeline(spark, root, lake, n_buckets=4,
                             clock=lambda: BASE)
-    orig = disc.tail.drain
-    disc.tail.drain = rendezvous_drain
+    tail_mod.drain = rendezvous_drain
     try:
         statuses = mt.poll()
     finally:
-        disc.tail.drain = orig
+        tail_mod.drain = real_drain
 
     assert statuses == {"t1": "synced", "t2": "synced", "t3": "synced"}
     assert not barrier.broken          # overlapping per-table execution

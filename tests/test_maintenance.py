@@ -63,7 +63,7 @@ def test_danger_zone_resync_through_stream(spark, tmp_path):
     from datetime import timezone
     now = DEFAULT_BASE_TS
     q = tail.start_tail(spark, log, table, checkpoint_dir=str(tmp_path / "cp1"),
-                        init_sync_start=DEFAULT_BASE_TS, now=now)
+                        init_sync_start=DEFAULT_BASE_TS, clock=lambda: now)
     with pytest.raises(Exception, match="[Dd]anger"):
         q.awaitTermination()
 
