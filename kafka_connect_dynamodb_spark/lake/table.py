@@ -430,20 +430,22 @@ class LakeTable:
         protocol): read the manifest ``m``, let ``attempt(m)`` build its
         successor (or return ``m`` itself: nothing to commit, and None is
         returned), then put it if absent. Losing the race to another
-        committer reruns ``attempt`` against the new manifest, at most
-        ``_COMMIT_RETRIES`` times. A lost or crashed attempt's files are
-        named by no manifest, so no reader (the change feed included) sees
-        them, and :meth:`vacuum` reclaims them."""
+        committer — the put conflicts, or any step fails once another
+        commit took the version (vacuum reclaims a loser's staging dir,
+        even mid-write) — reruns ``attempt`` against the new manifest, at
+        most ``_COMMIT_RETRIES`` times. A lost or crashed attempt's files
+        are named by no manifest, so no reader (the change feed included)
+        sees them, and :meth:`vacuum` reclaims them."""
         for tries in range(_COMMIT_RETRIES + 1):
             m = self.manifest()
-            new_m = attempt(m)
-            if new_m is m:
-                return None
             try:
+                new_m = attempt(m)
+                if new_m is m:
+                    return None
                 self._commit(new_m, parent=m)
                 return new_m
-            except CommitConflict:
-                if tries == _COMMIT_RETRIES:
+            except Exception:
+                if tries == _COMMIT_RETRIES or self.current_version() == m.version:
                     raise
 
     def _next(self, m: Manifest, lineage_entry: dict[str, Any], *,

@@ -16,9 +16,8 @@ raw events
   -> F5 exact half: drop winners whose keys did not parse
   -> decode_winners: parse each winner's image once into a map (|keys|
      rows, NOT |events| — the expensive JSON parse runs post-reduction),
-     collect its keys to discover new attributes (one global agg; the
-     action that fills the winners cache), and project every payload
-     field in one select
+     checkpoint them once, observing new attributes (schema evolution)
+     on that job, and project every payload field in one select
   -> LakeTable.merge (one merge-on-read delta per commit, idempotent on
      batch_id)
 
@@ -28,9 +27,9 @@ path and the DLQ (operators.quarantine) agree on which keys parse.
 A micro-batch that arrives as ONE input partition (one log file that fits
 one split — the reference's 1,000-record GetRecords page) is applied with no
 exchange at all: the batch is planned behind a ``coalesce(1)``, so the LWW
-reduce, schema discovery and the delta write each run as one single-task
-stage (lww.one_partition). A batch of several partitions keeps the
-shuffled plan.
+reduce with schema discovery, and the delta write, each run as one
+single-task job (lww.one_partition). A batch of several partitions keeps
+the shuffled plan.
 
 Every step is declarative; the whole batch plan is Catalyst-optimized and
 whole-stage-codegen'd. No Python executes per row. Ordering the heavy
@@ -43,7 +42,7 @@ from __future__ import annotations
 from datetime import datetime
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.functions.envelope import (
@@ -65,8 +64,9 @@ def prepare_winners(df: DataFrame, *,
                     init_sync_start: datetime | None = None) -> DataFrame:
     """Filters + key-parse + LWW dedup: one row per key, image still raw.
 
-    This is the only full-pass-over-events stage; callers persist its result
-    so schema discovery and the MERGE both reuse one pass.
+    This is the only full-pass-over-events stage; :func:`decode_winners`
+    checkpoints its result so schema discovery and the MERGE both reuse
+    one pass.
 
     A one-partition input (lww.one_partition: Spark's split planning put
     the batch in one partition) is planned behind a ``coalesce(1)`` before
@@ -118,26 +118,25 @@ def decode_winners(winners: DataFrame, *,
 
     The image is parsed once into a map column, and every payload field
     is projected out of it in one ``select`` (``element_at``, so an
-    absent attribute reads as null). With ``discover_fields`` the map keys
-    are collected to find additive attributes (schema evolution): one
-    global aggregate over the winners, and the action that fills their
-    cache when they are persisted.
+    absent attribute reads as null). With ``discover_fields`` the parsed
+    winners go into an eager ``localCheckpoint`` that observes their
+    distinct map keys (the additive attributes: schema evolution) on the
+    same job; later reads (the delta write, a commit retry) scan the
+    checkpoint, which keeps the plan's partitioning (one or many).
 
-    A one-partition ``winners`` (lww.one_partition) is decoded behind a
-    ``coalesce(1)``. A scan of a persisted frame runs as an AQE cache stage
-    that reports no partitioning, so an aggregate over it would get an
-    exchange back; above the ``coalesce(1)`` the discovery aggregate needs
-    none, and the decoded frame declares one partition to the merge's
-    delta write.
+    Truncating the lineage is safe: an executor lost between the
+    checkpoint and the delta write fails the batch; foreachBatch
+    redelivers it, :meth:`LakeTable.merge` is idempotent on ``batch_id``,
+    and vacuum reclaims the staged orphans.
     """
-    if one_partition(winners):
-        winners = winners.coalesce(1)
-    out = winners.withColumn("_m", F.from_json(F.col("_img"), TAGGED_MAP))
+    out = (winners.withColumn("_m", F.from_json(F.col("_img"), TAGGED_MAP))
+                  .drop("_img"))
     fields = list(PAYLOAD_FIELDS)
     if discover_fields:
-        (found,) = out.select(F.array_distinct(F.flatten(
-            F.collect_set(F.map_keys("_m"))))).collect()[0]
-        fields += sorted(k for k in found if k not in PAYLOAD_FIELDS)
+        obs = Observation()
+        out = out.observe(obs, F.array_distinct(F.flatten(F.collect_set(
+            F.map_keys("_m")))).alias("found")).localCheckpoint()
+        fields += sorted(k for k in obs.get["found"] if k not in PAYLOAD_FIELDS)
     # the winners' own columns (the parsed keys) win: a malformed image
     # must not null out a valid parsed key
     payload = [f for f in fields if f not in winners.columns]
@@ -156,35 +155,31 @@ def apply_batch(spark: SparkSession, table: LakeTable, df: DataFrame, *,
     Safe to re-invoke with the same batch_id (foreachBatch redelivery):
     the merge no-ops once committed.
 
-    The LWW winners are persisted so the batch makes exactly ONE full pass
-    over the events: schema discovery (:func:`decode_winners`) and the
-    MERGE's delta write both read the ~|keys|-row cache, never the raw
-    event stream again. The discovery aggregate is the one action that
-    fills the cache; on a one-partition batch the whole apply is three
-    single-task jobs (fill the cache, discover, write the delta), on a
-    ``change_feed`` table too: the delta is the change feed.
+    The batch makes exactly ONE full pass over the events: the local
+    checkpoint of :func:`decode_winners` materializes the ~|keys|-row
+    winners and discovers their schema on one job, and the MERGE's delta
+    write reads the checkpoint, never the raw event stream again. On a
+    one-partition batch the whole apply is two single-task jobs (the
+    checkpoint, the delta write), on a ``change_feed`` table too: the
+    delta is the change feed.
 
     The F3 danger-zone check rides the same pass as an ``observe`` metric
     (min ts over the pre-filter events) instead of a separate agg job; the
-    observation resolves with the action that fills the winners cache,
-    still BEFORE any merge work, so a breach aborts the batch unapplied
+    observation resolves with the checkpoint job, still BEFORE any merge
+    work, so a breach aborts the batch unapplied
     (DynamoDBSourceTask.java:318-331). The CollectMetrics node intentionally
     pins the metric above the scan — the reference's check also sees every
     polled record, including ones later filters drop.
     """
     obs = None
     if now is not None:
-        from pyspark.sql import Observation
         obs = Observation()
         df = df.observe(obs, F.min("ts").alias("min_ts"))
-    winners = prepare_winners(df, init_sync_start=init_sync_start).persist()
-    try:
-        deduped = decode_winners(winners, discover_fields=True)
-        if obs is not None:
-            min_ts = obs.get.get("min_ts")
-            if min_ts is not None and min_ts <= filters.danger_cutoff(now):
-                raise DangerZoneError(
-                    "batch contains events older than the 20h danger zone")
-        return table.merge(spark, deduped, batch_id=batch_id, source=source)
-    finally:
-        winners.unpersist()
+    winners = prepare_winners(df, init_sync_start=init_sync_start)
+    deduped = decode_winners(winners, discover_fields=True)
+    if obs is not None:
+        min_ts = obs.get.get("min_ts")
+        if min_ts is not None and min_ts <= filters.danger_cutoff(now):
+            raise DangerZoneError(
+                "batch contains events older than the 20h danger zone")
+    return table.merge(spark, deduped, batch_id=batch_id, source=source)

@@ -32,31 +32,33 @@ def apply_feed_batch(batch_df, batch_id: int, *, downstream: LakeTable,
     idempotent merge. Module-level (not a closure) so the empty-batch
     behavior is directly pinnable by tests.
 
-    ONE probe job per trigger (r4 VERDICT next #5 — previously an idle
-    processing-time tail paid two no-op jobs per trigger): a single
-    aggregate yields both the batch row count (empty → return before any
-    further job) and the latest resync epoch."""
-    from pyspark.sql import functions as F
+    The batch is read ONCE, into a local checkpoint observing its row
+    count (empty → no further job), latest resync epoch and latest delta
+    commit; replace and merge read the checkpoint. A lost executor fails
+    the batch and the stream redelivers it (both writes are idempotent)."""
+    from pyspark.sql import Observation, functions as F
 
     from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
 
     sp = batch_df.sparkSession
-    probe = batch_df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(F.when(F.col("_op") == "r", F.col("_commit"))).alias("epoch"),
-    ).collect()[0]
+    obs = Observation()
+    snapshot_row = F.col("_op") == "r"
+    batch_df = batch_df.observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        F.max(F.when(snapshot_row, F.col("_commit"))).alias("epoch"),
+        F.max(F.when(~snapshot_row, F.col("_commit"))).alias("last"),
+    ).localCheckpoint()
+    probe = obs.get
     if probe["n"] == 0:
         return
     epoch = probe["epoch"]
     if epoch is not None:
-        snap = (batch_df.filter((F.col("_op") == "r")
-                                & (F.col("_commit") == epoch))
+        snap = (batch_df.filter(snapshot_row & (F.col("_commit") == epoch))
                         .drop("_op", "_commit"))
         downstream.replace(sp, snap, seq_col="_seq")
-        rest = batch_df.filter((F.col("_op") != "r")
-                               & (F.col("_commit") > epoch))
-        if rest.isEmpty():              # only the resync path can drain rest
-            return
+        if probe["last"] is None or probe["last"] <= epoch:
+            return                      # no delta after the resync epoch
+        rest = batch_df.filter(~snapshot_row & (F.col("_commit") > epoch))
     else:
         rest = batch_df
     # LakeTable.merge requires ONE row per key (a commit's delta holds one

@@ -63,13 +63,14 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
     ignores (unknown eventName, null/unparseable keys — the records the
     reference merely logs and skips, DynamoDBSourceTask.java:363-367) land
     as parquet under ``<dlq_dir>/batch_id=<n>/`` with a ``reject_reason``
-    column, rewritten idempotently on batch redelivery. Costs one extra
-    scan of each micro-batch, nothing table-sized.
+    column, rewritten idempotently on batch redelivery. The DLQ write and
+    the apply scan one local checkpoint of the micro-batch.
     """
     def _apply(batch_df, batch_id: int):
         if dlq_dir is not None:
             from kafka_connect_dynamodb_spark.operators.quarantine import (
                 classify_rejects, write_dlq)
+            batch_df = batch_df.localCheckpoint()
             write_dlq(classify_rejects(batch_df), dlq_dir, batch_id)
         res = apply_batch(batch_df.sparkSession, table, batch_df,
                           batch_id=batch_id, source=source,

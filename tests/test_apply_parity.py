@@ -7,6 +7,7 @@ import threading
 from datetime import timedelta, timezone
 
 import pytest
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
@@ -139,7 +140,10 @@ NOW = DEFAULT_BASE_TS + timedelta(hours=1)
 
 def _in_thread(fn, timeout_s=180):
     """``fn()`` on a worker thread, failing instead of hanging when it
-    blocks (an Observation that never resolves waits forever)."""
+    blocks (an Observation that never resolves waits forever). On a
+    timeout every streaming query of the session is stopped and every job
+    cancelled first, so a worker that loops ends instead of competing with
+    later tests."""
     out = {}
 
     def run():
@@ -151,7 +155,13 @@ def _in_thread(fn, timeout_s=180):
     worker = threading.Thread(target=run, daemon=True)
     worker.start()
     worker.join(timeout_s)
-    assert not worker.is_alive(), f"blocked for {timeout_s} s"
+    if worker.is_alive():
+        spark = SparkSession.getActiveSession()
+        for q in spark.streams.active:
+            q.stop()
+        spark.sparkContext.cancelAllJobs()
+        worker.join(30)
+        pytest.fail(f"blocked for {timeout_s} s")
     if "error" in out:
         raise out["error"]
     return out.get("value")

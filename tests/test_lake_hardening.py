@@ -252,6 +252,39 @@ def test_merge_conflict_exhausts_retries_either_impl(spark, tmp_path, impl):
     assert t.io.attempts == _COMMIT_RETRIES + 1
 
 
+@pytest.mark.parametrize("racer_commits", [True, False])
+def test_write_failing_after_a_lost_race_retries(spark, tmp_path,
+                                                 racer_commits):
+    """A vacuum may reclaim a losing writer's staging dir while its write
+    still runs, so the write fails instead of the put conflicting. A
+    failure after another commit took the version is a lost race: the
+    merge reruns against the new manifest and lands. With no commit in
+    between, the failure is the writer's own and propagates at once."""
+    t = _table(spark, tmp_path / "tbl")
+    racer = LakeTable(t.root)
+    real, calls = t._write_delta, []
+
+    def write_delta(*a, **kw):
+        calls.append(1)
+        if len(calls) == 1:
+            if racer_commits:
+                racer.update_properties({"racer": "yes"})     # steals v2
+            raise OSError("Mkdirs failed: staging dir reclaimed")
+        return real(*a, **kw)
+
+    t._write_delta = write_delta
+    upd = _upd(spark, [("r1", "p1", "NEW", "u", 5)])
+    if not racer_commits:
+        with pytest.raises(OSError):
+            t.merge(spark, upd, batch_id=0, source="s")
+        assert len(calls) == 1 and t.current_version() == 1
+        return
+    res = t.merge(spark, upd, batch_id=0, source="s")
+    assert len(calls) == 2 and res["version"] == 3
+    got = {(r.repo, r.path): r.content for r in t.read(spark).collect()}
+    assert got[("r1", "p1")] == "NEW"
+
+
 def test_rename_commitio_end_to_end_table(spark, tmp_path):
     """Whole table lifecycle (create/merge/compact/expire/vacuum) on the
     rename-based impl — the contract is usable, not just conflict-correct."""

@@ -246,14 +246,15 @@ def _apply_counts(spark, tmp_path, tail_batch, log, change_feed=False):
 @pytest.mark.parametrize("change_feed", [False, True])
 def test_one_file_batch_applies_without_a_shuffle(spark, tmp_path, tail_batch,
                                                   change_feed):
-    """A batch read as one partition runs the LWW reduce, schema discovery
-    and the delta write as single-task stages: no exchange anywhere. On a
-    change_feed table the delta is the feed, so the merge costs the same
-    jobs, and the feed of its commit is exactly the delta's rows."""
+    """A batch read as one partition runs the LWW reduce with schema
+    discovery (one local checkpoint) and the delta write as single-task
+    jobs: no exchange anywhere. On a change_feed table the delta is the
+    feed, so the merge costs the same jobs, and the feed of its commit is
+    exactly the delta's rows."""
     t, df, (jobs, stages, tasks) = _apply_counts(
         spark, tmp_path, tail_batch, "one", change_feed)
     assert df.rdd.getNumPartitions() == 1
-    assert jobs <= 3
+    assert jobs <= 2
     assert jobs == stages == tasks
     m = t.manifest()
     assert len(m.deltas) == 1

@@ -240,23 +240,20 @@ def test_day2_maintenance_soak_compact_vacuum_resync(spark, tmp_path):
         return max(counts.values())
 
     # ---- phase A: live tail + maintenance between appends ----
-    metrics: list[dict] = []
     q = tail.start_tail(spark, log, table, checkpoint_dir=cp1,
                         init_sync_start=DEFAULT_BASE_TS,
                         available_now=False,
-                        processing_time="300 milliseconds", metrics=metrics)
+                        processing_time="300 milliseconds")
     try:
         for k in (1, 2):
             slices[k].coalesce(1).write.mode("append").parquet(log)
             maintain()
             assert bucket_bound() <= 2   # in-flight commit may add 1 briefly
             _time.sleep(0.5)
-        deadline = _time.time() + 90
-        while _time.time() < deadline:
-            if sum(m.get("rows_in", 0) for m in metrics
-                   if not m.get("skipped")) > 0 and len(metrics) >= 3:
-                break
-            _time.sleep(0.3)
+        q.processAllAvailable()
+        # every event of slices 0-2 went through the live tail, each once
+        assert sum(p.numInputRows for p in q.recentProgress) == \
+            sum(slices[k].count() for k in range(3))
     finally:
         q.stop()
 

@@ -62,7 +62,9 @@ def test_observe_events_counters(spark):
     assert n == 500
 
 
-def test_tail_listener_collects_progress(spark, tmp_path):
+def _drained_progress(spark, tmp_path, **tail_kw):
+    """Drain a 600-event, two-file log through ``start_tail(**tail_kw)``
+    with a ``TailMetricsListener`` attached; returns its progress."""
     base = source_table(spark, 100)
     ev = change_events(spark, 100, 600, pre_init_frac=0.0)
     log = str(tmp_path / "log")
@@ -77,7 +79,8 @@ def test_tail_listener_collects_progress(spark, tmp_path):
     try:
         tail.drain(tail.start_tail(spark, log, table,
                                    checkpoint_dir=str(tmp_path / "cp"),
-                                   init_sync_start=DEFAULT_BASE_TS))
+                                   init_sync_start=DEFAULT_BASE_TS,
+                                   **tail_kw))
         # listener delivery is async on the listener-bus thread
         import time
         deadline = time.time() + 30
@@ -85,6 +88,20 @@ def test_tail_listener_collects_progress(spark, tmp_path):
             time.sleep(0.5)
     finally:
         spark.streams.removeListener(listener)
-    assert listener.progress, "no progress events captured"
-    total_rows = sum(p["num_input_rows"] or 0 for p in listener.progress)
+    return listener.progress
+
+
+def test_tail_listener_collects_progress(spark, tmp_path):
+    progress = _drained_progress(spark, tmp_path)
+    assert progress, "no progress events captured"
+    total_rows = sum(p["num_input_rows"] or 0 for p in progress)
     assert total_rows == 600
+
+
+def test_tail_listener_counts_each_event_once_with_dlq(spark, tmp_path):
+    """The dead-letter queue reads the same one copy of each micro-batch
+    as the apply, so progress still reports every event once."""
+    progress = _drained_progress(spark, tmp_path,
+                                 dlq_dir=str(tmp_path / "dlq"))
+    assert progress, "no progress events captured"
+    assert sum(p["num_input_rows"] or 0 for p in progress) == 600
