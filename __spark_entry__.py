@@ -202,14 +202,15 @@ def q_debezium_roundtrip(spark, sf_dir):
     (field loss, escaping, op mapping, seq decimal) breaks parity with the
     oracle, which computes the expected state directly from the tables.
     Reference: utils/RecordConverter.java:109-115, docs/data.md:16."""
-    from kafka_connect_dynamodb_spark.operators.lww import latest_per_key
+    from kafka_connect_dynamodb_spark.operators.lww import (
+        SEQ_TYPE, latest_per_key)
     from kafka_connect_dynamodb_spark.sources.debezium import (
         debezium_export, debezium_to_events)
     ev = _t(spark, sf_dir, "events").select(
         F.col("user_id").cast("string").alias("uid"),
         F.col("event_type").alias("etype"),
         F.col("props").alias("pv"),
-        F.col("event_id").cast("decimal(38,0)").alias("_seq"),
+        F.col("event_id").cast(SEQ_TYPE).alias("_seq"),
         _op_expr().alias("_op"))
     feed = (latest_per_key(ev, ["uid"], ["_seq"])
             .withColumn("_commit", F.lit(1).cast("long")))

@@ -48,11 +48,12 @@ def tagged_schema(fields: Iterable[str]) -> T.StructType:
     return T.StructType([T.StructField(f, tag, True) for f in fields])
 
 
-def encode_attr_json(fields: Iterable[str], string_fields: Iterable[str] | None = None) -> Column:
+def encode_attr_json(fields: Iterable[str]) -> Column:
     """Build a DynamoDB-JSON envelope string from typed columns.
 
-    Numeric columns become ``{"n": "<str>"}`` (stringified, as the reference
-    does for N keys), strings become ``{"s": ...}``. NON_NULL inclusion mirrors
+    Every column becomes an ``{"s": "<str>"}`` attribute, cast to string
+    (numbers stringified, as the reference does for N keys; the decoder's
+    :func:`attr_value` reads ``s`` first). NON_NULL inclusion mirrors
     Jackson's ``Include.NON_NULL`` (RecordConverter.java:30-34) — ``to_json``
     drops null struct fields by default only at the top level, so we rely on
     struct-of-struct nulls being omitted via ``ignoreNullFields``.

@@ -1,7 +1,4 @@
-"""Hashing helpers: sha256 parity invariant + deterministic pseudo-randoms.
-
-The per-row invariant vs the reference replay is ``sha256(content)`` equality
-(BASELINE.json input_hint) — computed JVM-side with ``sha2``.
+"""Hashing helpers: deterministic pseudo-randoms + the lake's bucket layout.
 
 ``hash_unit`` gives a partition-layout-independent uniform in [0,1): unlike
 ``F.rand(seed)`` (which depends on partition index), ``xxhash64`` of the row id
@@ -24,11 +21,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _M = 1 << 31
-
-
-def content_sha256(col: str | Column = "content") -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)
 
 
 def hash_unit(*cols: Column | str, salt: int = 0) -> Column:

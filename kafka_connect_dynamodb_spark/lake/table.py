@@ -59,12 +59,12 @@ from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, CommitIO, PosixCommitIO)
 from kafka_connect_dynamodb_spark.lake.feed_source import (
     ChangeFeedSource, log_versions, manifest_path, source_options)
-from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
+from kafka_connect_dynamodb_spark.operators.lww import (
+    SEQ_TYPE, latest_per_key, one_partition)
 
 __all__ = ["LakeTable", "Manifest", "CommitConflict"]
 
 META_COLS = ("_seq", "_deleted")
-SEQ_TYPE = "decimal(38,0)"  # 26-digit DynamoDB seq-nos fit (tests use 26 digits)
 
 # commit races a writer absorbs (re-reading the manifest and rebuilding its
 # successor each time) before CommitConflict reaches the caller
@@ -312,7 +312,7 @@ class Manifest:
     files: list[dict[str, Any]] = field(default_factory=list)   # base: {path, bucket}
     committed: dict[str, int] = field(default_factory=dict)     # source -> last batch_id
     properties: dict[str, Any] = field(default_factory=dict)    # free-form (state doc etc.)
-    lineage: list[dict[str, Any]] = field(default_factory=list) # recent commit metrics
+    lineage: list[dict[str, Any]] = field(default_factory=list) # this commit's metrics only
     # change feed, oldest first: {version, path} of files already committed
     # as data (deltas, a replace's base files) or as a pre-image feed
     change_files: list[dict[str, Any]] = field(default_factory=list)
@@ -451,16 +451,16 @@ class LakeTable:
     def _next(self, m: Manifest, lineage_entry: dict[str, Any], *,
               feed: Sequence[dict[str, Any]] = (), **fields) -> Manifest:
         """The successor of ``m`` with ``fields`` replaced and
-        ``lineage_entry`` appended (the last 50 kept). Its stamp is left
-        for :meth:`_commit`. ``feed`` lists the file entries this version
-        publishes as its change feed: files the attempt already wrote,
-        added to ``change_files`` by reference."""
+        ``lineage_entry`` its one lineage entry (:meth:`history` reads the
+        log). Its stamp is left for :meth:`_commit`. ``feed`` lists the file
+        entries this version publishes as its change feed: files the
+        attempt already wrote, added to ``change_files`` by reference."""
         version = m.version + 1
         change_files = fields.pop("change_files", m.change_files) + [
             {"version": version, "path": e["path"]} for e in feed]
         return dataclasses.replace(
             m, version=version, committed_at_ms=0, change_files=change_files,
-            lineage=(m.lineage + [{"commit": version, **lineage_entry}])[-50:],
+            lineage=[{"commit": version, **lineage_entry}],
             **fields)
 
     # ---------------------------------------------------------------- layout
@@ -724,27 +724,24 @@ class LakeTable:
         return df
 
     def history(self, spark: SparkSession) -> DataFrame:
-        """Commit history as a DataFrame (Iceberg ``table.history`` analog):
-        one row per retained version with its stamp, op, source/batch
-        lineage and per-commit metrics — driver-side metadata only, no data
-        files touched."""
+        """Commit history as a DataFrame (Iceberg ``table.history`` analog),
+        the one commit-history view: one row per retained version with its
+        stamp and its own lineage entry (the last, in an older manifest that
+        carried earlier commits' too) — driver-side metadata only."""
         rows = []
         for v in self._versions():
             m = self.manifest(v)
-            last = m.lineage[-1] if m.lineage else {}
-            rows.append({
-                "version": v,
-                "committed_at_ms": m.committed_at_ms,
-                "op": str(last.get("op", "")),
-                "source": str(last.get("source") or ""),
-                "batch_id": last.get("batch_id"),
-                "rows_in": last.get("rows_in"),
-                "buckets_touched": last.get("buckets_touched"),
-                "n_files": len(m.files),
-            })
+            own = m.lineage[-1] if m.lineage else {}
+            # the schema picks the lineage columns out of the entry
+            rows.append({**own, "version": v,
+                         "committed_at_ms": m.committed_at_ms,
+                         "op": str(own.get("op", "")),
+                         "source": str(own.get("source") or ""),
+                         "n_files": len(m.files)})
         schema = ("version long, committed_at_ms long, op string, "
                   "source string, batch_id long, rows_in long, "
-                  "buckets_touched long, n_files long")
+                  "buckets_touched long, files_rewritten long, "
+                  "files_written long, n_files long")
         return spark.createDataFrame(rows, schema)
 
     def version_as_of(self, ts_ms: int) -> int:

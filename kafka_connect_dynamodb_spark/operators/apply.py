@@ -49,7 +49,8 @@ from kafka_connect_dynamodb_spark.functions.envelope import (
     KEY_FIELDS, PAYLOAD_FIELDS, attr_value, parse_keys)
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.operators import filters
-from kafka_connect_dynamodb_spark.operators.lww import latest_per_key, one_partition
+from kafka_connect_dynamodb_spark.operators.lww import (
+    SEQ_TYPE, latest_per_key, one_partition)
 
 TAGGED_MAP = "map<string,struct<s:string,n:string,bool:boolean>>"
 
@@ -91,22 +92,18 @@ def prepare_winners(df: DataFrame, *,
 
     # F5/F6 cheap half: unknown event names & null keys envelopes drop here
     # (pushable IN / IsNotNull filters reach the parquet scan).
-    ev = (df.filter(F.col("event_name").isin("INSERT", "MODIFY", "REMOVE")
-                    & F.col("keys").isNotNull())
+    ev = (df.filter(filters.known_event() & F.col("keys").isNotNull())
             .withColumn("_k", parse_keys(F.col("keys"))))
     change = ev.select(
         *[attr_value(F.col("_k")[k]).alias(k) for k in KEY_FIELDS],
         filters.project_image().alias("_img"),
         filters.decode_op(strict=False).alias("_op"),
-        F.col("seq_no").cast("decimal(38,0)").alias("_seq"))
+        F.col("seq_no").cast(SEQ_TYPE).alias("_seq"))
     winners = latest_per_key(change, list(KEY_FIELDS), ["_seq"])
     # F5 exact half, post-reduce: winners whose keys failed to parse. The
     # inert `| _op.isNull()` disjunct references an aggregated column so the
     # optimizer cannot push the predicate back below the agg into the scan.
-    key_ok = None
-    for k in KEY_FIELDS:
-        p = F.col(k).isNotNull()
-        key_ok = p if key_ok is None else (key_ok & p)
+    key_ok = filters.keys_parsed(*map(F.col, KEY_FIELDS))
     return winners.filter(key_ok | F.col("_op").isNull())
 
 

@@ -7,6 +7,7 @@ optimizer can push, fold, and codegen.
 
 from __future__ import annotations
 
+import functools
 from datetime import datetime, timedelta, timezone
 
 from pyspark.sql import Column, DataFrame
@@ -17,6 +18,10 @@ OP_READ = "r"      # snapshot / init-sync row
 OP_CREATE = "c"    # INSERT
 OP_UPDATE = "u"    # MODIFY
 OP_DELETE = "d"    # REMOVE
+
+# stream eventName -> envelope op (DynamoDBSourceTask.java:383-394): the
+# names the apply keeps and the DLQ passes
+EVENT_OPS = {"INSERT": OP_CREATE, "MODIFY": OP_UPDATE, "REMOVE": OP_DELETE}
 
 # Operating constants (reference: DynamoDBSourceTask.java:214,373-381)
 PRE_INIT_SYNC_WINDOW_HOURS = 1     # duplicates-accepted overlap window
@@ -31,12 +36,22 @@ def decode_op(event_name: Column | str = "event_name", *, strict: bool = True) -
     null for a downstream parse-error drop (F5, DynamoDBSourceTask.java:363-367).
     """
     c = F.col(event_name) if isinstance(event_name, str) else event_name
-    expr = (F.when(c == "INSERT", F.lit(OP_CREATE))
-             .when(c == "MODIFY", F.lit(OP_UPDATE))
-             .when(c == "REMOVE", F.lit(OP_DELETE)))
+    expr = F  # F.when opens the chain, Column.when extends it
+    for name, op in EVENT_OPS.items():
+        expr = expr.when(c == name, F.lit(op))
     if strict:
         return expr.otherwise(F.raise_error(F.concat(F.lit("unsupported event name: "), c)))
     return expr.otherwise(F.lit(None))
+
+
+def known_event() -> Column:
+    """F6's cheap half: a name of ``EVENT_OPS`` (a pushable ``IN``)."""
+    return F.col("event_name").isin(*EVENT_OPS)
+
+
+def keys_parsed(*values: Column) -> Column:
+    """F5's exact half: every key value parsed (DynamoDBSourceTask.java:363-367)."""
+    return functools.reduce(Column.__and__, (v.isNotNull() for v in values))
 
 
 def project_image(new_image: str = "new_image", keys: str = "keys") -> Column:

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+SEQ_TYPE = "decimal(38,0)"  # what seq-nos order rows as; 26-digit ones fit
+
 
 def one_partition(df: DataFrame) -> bool:
     """Does Spark plan ``df`` as one partition? Answered from planning
@@ -81,7 +83,7 @@ def shard_max_seq(df: DataFrame, shard_col: str = "shard_id",
                   seq_col: str = "seq_no") -> DataFrame:
     """A2: per-shard max committed sequence number — the reference's only
     aggregate (RegisterAsProcessed, DynamoDBSourceTask.java:413-430). Numeric
-    (decimal(38,0)) compare, not lexicographic — 26-digit seq-nos per
+    (:data:`SEQ_TYPE`) compare, not lexicographic — 26-digit seq-nos per
     DynamoDBSourceTaskTests.java:821,832."""
     return df.groupBy(shard_col).agg(
-        F.max(F.col(seq_col).cast("decimal(38,0)")).alias("max_seq_no"))
+        F.max(F.col(seq_col).cast(SEQ_TYPE)).alias("max_seq_no"))

@@ -12,12 +12,12 @@ via ``streaming.tail.start_tail(dlq_dir=...)``) lands them in a per-batch
 dead-letter directory:
 
 * ``unknown_event_name`` — eventName outside INSERT/MODIFY/REMOVE
-  (the apply path's pushable ``IN`` filter, operators/apply.py).
+  (the apply path's pushable ``IN`` filter, ``filters.known_event``).
 * ``null_keys``          — no keys envelope at all (pushable IsNotNull).
 * ``unparseable_keys``   — the keys envelope is malformed JSON, or parses
-  but lacks a required key attribute (the post-dedup F5 drop: such rows
-  group under null keys during LWW and are discarded,
-  DynamoDBSourceTask.java:363-367).
+  but lacks a required key attribute (``filters.keys_parsed``, the
+  post-dedup F5 drop: such rows group under null keys during LWW and are
+  discarded, DynamoDBSourceTask.java:363-367).
 
 Classification is pure column expressions over the raw event frame — the
 same cheap predicates plus the same small keys-envelope ``from_json`` the
@@ -40,8 +40,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.functions.envelope import (
     KEY_FIELDS, attr_value, parse_keys)
-
-VALID_EVENT_NAMES: tuple[str, ...] = ("INSERT", "MODIFY", "REMOVE")
+from kafka_connect_dynamodb_spark.operators import filters
 
 REASON_UNKNOWN_EVENT = "unknown_event_name"
 REASON_NULL_KEYS = "null_keys"
@@ -57,12 +56,9 @@ def reject_reason(parsed: Column, key_fields: Sequence[str]) -> Column:
     (cheap pushable predicates first, exact key parse last), so each event
     gets exactly one reason even when several conditions hold.
     """
-    key_ok = None
-    for k in key_fields:
-        p = attr_value(parsed[k]).isNotNull()
-        key_ok = p if key_ok is None else (key_ok & p)
-    return (F.when(~F.col("event_name").isin(*VALID_EVENT_NAMES)
-                   | F.col("event_name").isNull(),
+    key_ok = filters.keys_parsed(
+        *(attr_value(parsed[k]) for k in key_fields))
+    return (F.when(~filters.known_event() | F.col("event_name").isNull(),
                    F.lit(REASON_UNKNOWN_EVENT))
              .when(F.col("keys").isNull(), F.lit(REASON_NULL_KEYS))
              .when(~key_ok, F.lit(REASON_BAD_KEYS)))

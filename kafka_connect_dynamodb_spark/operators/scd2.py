@@ -33,6 +33,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from kafka_connect_dynamodb_spark.operators.lww import SEQ_TYPE
+
 VALID_FROM, VALID_TO, IS_CURRENT = "valid_from", "valid_to", "is_current"
 
 
@@ -88,13 +90,11 @@ def scd2_temporal_join(facts: DataFrame, history: DataFrame,
     if clash:
         raise ValueError(f"dimension columns collide with fact columns: "
                          f"{clash}")
-    # decimal(38,0) holds any integral seq exactly, including the stream's
-    # BigInteger shard sequence numbers (lake/table.py:51 uses the same)
-    seq_t = "decimal(38,0)"
-    lhs = (facts.withColumn("_t", F.col(fact_seq_col).cast(seq_t))
+    # SEQ_TYPE holds any integral seq exactly (the stream's BigInteger ones)
+    lhs = (facts.withColumn("_t", F.col(fact_seq_col).cast(SEQ_TYPE))
                 .withColumn("_is_fact", F.lit(1)))
     rhs = (history.select(*keys,
-                          F.col(VALID_FROM).cast(seq_t).alias("_t"),
+                          F.col(VALID_FROM).cast(SEQ_TYPE).alias("_t"),
                           F.struct(*dpay).alias("_dim"))
                   .withColumn("_is_fact", F.lit(0)))
     u = lhs.unionByName(rhs, allowMissingColumns=True)

@@ -4,11 +4,12 @@ we upgrade to first-class observability).
 
 Three layers:
 
-* **Per-commit lineage** — every manifest records {commit, batch_id, source,
-  rows_in, buckets_touched, files_rewritten/written} (lake/table.py::_next;
-  a merge writes one delta and rewrites no file, a fold records
-  ``deltas_folded``);
-  ``lineage_frame`` exposes it as a DataFrame for SQL over commit history.
+* **Per-commit lineage** — every manifest records its own commit's
+  {commit, batch_id, source, rows_in, buckets_touched,
+  files_rewritten/written} and nothing of earlier commits
+  (lake/table.py::_next; a merge writes one delta and rewrites no file, a
+  fold records ``deltas_folded``); ``LakeTable.history`` reads them, one
+  row per retained version, as a DataFrame for SQL over commit history.
 * **Streaming progress** — ``TailMetricsListener`` captures per-micro-batch
   input rows, processing rate and durations from the Structured Streaming
   progress events (the engine-side replacement for KCL checkpoint lag).
@@ -25,26 +26,6 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
-
-
-# Stable lineage schema: JSON inference over a non-empty history yields a
-# superset of this, but a FRESH table must expose the same columns so
-# downstream selects don't break on the empty case.
-LINEAGE_SCHEMA = ("commit long, op string, batch_id long, source string, "
-                  "rows_in long, buckets_touched long, files_rewritten long, "
-                  "files_written long, files long")
-
-
-def lineage_frame(spark: SparkSession, table) -> DataFrame:
-    """Commit lineage of a LakeTable as a DataFrame (one row per commit)."""
-    rows = [json.dumps(e) for e in table.manifest().lineage]
-    if not rows:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
-    inferred = spark.read.json(spark.sparkContext.parallelize(rows, 1))
-    base = spark.createDataFrame([], LINEAGE_SCHEMA)
-    # union through the pinned schema so every lineage column exists even
-    # when no commit in the window carried it
-    return inferred.unionByName(base, allowMissingColumns=True)
 
 
 def bucket_histogram(spark: SparkSession, table) -> DataFrame:

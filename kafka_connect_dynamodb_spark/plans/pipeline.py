@@ -49,12 +49,13 @@ class CdcPipeline:
 
     def load_state(self) -> SourceInfo:
         """Resume from durable state (setStateFromOffset analog,
-        DynamoDBSourceTask.java:158-168)."""
-        if self.table.exists():
+        DynamoDBSourceTask.java:158-168); no table yet is a fresh state."""
+        try:
             raw = self.table.manifest().properties.get(STATE_PROP)
-            if raw:
-                return SourceInfo.from_json(raw)
-        return SourceInfo(table_name=self.table_name)
+        except FileNotFoundError:
+            raw = None
+        return (SourceInfo.from_json(raw) if raw
+                else SourceInfo(table_name=self.table_name))
 
     def save_state(self, info: SourceInfo) -> None:
         self.table.update_properties({STATE_PROP: info.to_json()})
@@ -175,27 +176,34 @@ class CdcPipeline:
         # same quantity the one-shot path Observes — is the running sum of
         # per-chunk rows_in, persisted with the progress key. A crash
         # between a chunk's commit and its save_state loses at most the
-        # LAST few chunks' counts; those are the newest manifest lineage
-        # entries (never evicted by the 50-entry cap), so heal from there.
+        # LAST few chunks' counts; heal them from the lineage entries of
+        # their merges, walking the log back from the newest version.
         done = 0
         next_chunk = self.table.last_committed("init_sync") + 1
         key = json.loads(info.exclusive_start_key)
         rows_so_far = int(key.get("rows_so_far", 0))
-        recorded_next = int(key.get("next_chunk", 0))
-        if recorded_next < next_chunk:
-            by_batch = {e.get("batch_id"): e
-                        for e in self.table.manifest().lineage
-                        if e.get("source") == "init_sync"
-                        and e.get("op") == "merge"}
-            for i in range(recorded_next, next_chunk):
-                rows_so_far += int(by_batch[i].get("rows_in", 0))
+        lost = set(range(int(key.get("next_chunk", 0)), next_chunk))
+        v = self.table.current_version()
+        while lost:
+            try:
+                e = self.table.manifest(v).lineage[-1]
+            except FileNotFoundError:
+                raise FileNotFoundError(
+                    f"cannot heal the snapshot row count: version {v} expired "
+                    f"before the merges of chunks {sorted(lost)} were read; "
+                    "restart the snapshot") from None
+            if (e.get("source") == "init_sync" and e.get("op") == "merge"
+                    and e.get("batch_id") in lost):
+                lost.remove(e["batch_id"])
+                rows_so_far += int(e.get("rows_in") or 0)
+            v -= 1
         from pyspark.sql import functions as F
         for i in range(next_chunk, n_chunks):
             if max_chunks_this_run is not None and done >= max_chunks_this_run:
                 return info
             chunk_df = (self.spark.read.parquet(*chunks[i])
                         .withColumn("_op", F.lit("r"))
-                        .withColumn("_seq", F.lit(0).cast("decimal(38,0)")))
+                        .withColumn("_seq", F.lit(0)))
             res = self.table.merge(self.spark, chunk_df, batch_id=i,
                                    source="init_sync")
             rows_so_far += int(res.get("rows_in") or 0)

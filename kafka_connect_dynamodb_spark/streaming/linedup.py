@@ -85,8 +85,7 @@ class LineDedupIngest:
         # them as one delta; untouched rows keep their files)
         touched = merged.join(delta.select("line_hash"), "line_hash")
         updates = touched.withColumn("_op", F.lit("u")) \
-                         .withColumn("_seq", F.lit(int(batch_id))
-                                     .cast("decimal(38,0)"))
+                         .withColumn("_seq", F.lit(int(batch_id)))
         self.table.merge(spark, updates, batch_id=batch_id,
                          source=self.source)
 

@@ -97,7 +97,7 @@ class Scd2Maintainer:
                .parquet(os.path.join(self.closed_dir,
                                      f"batch={int(batch_id)}")))
         # (3) open rows upsert + dead keys delete, one atomic MERGE
-        seq = F.lit(int(batch_id)).cast("decimal(38,0)")
+        seq = F.lit(int(batch_id))
         opened = (recomputed.filter(F.col(VALID_TO).isNull())
                   .select(*self.keys, VALID_FROM, *self.payload,
                           F.lit("u").alias("_op"), seq.alias("_seq")))

@@ -45,7 +45,7 @@ def start_tail(spark: SparkSession, log_dir: str, table: LakeTable, *,
 
     ``log_format`` accepts any Spark streaming file source ("parquet" default;
     "json"/"csv" for text-shipped logs — their seq_no arrives as a string and
-    is cast by the decimal(38,0) cast in the apply path).
+    is cast to ``lww.SEQ_TYPE`` in the apply path).
 
     ``available_now=True`` drains the existing log and stops (replay mode);
     otherwise runs continuously with ``processing_time`` triggers (the

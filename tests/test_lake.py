@@ -1,6 +1,8 @@
 """LakeTable: ACID manifest log, COW merge, tombstones, schema evolution,
 idempotent commits, compaction, time travel."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -119,6 +121,60 @@ def test_time_travel_and_props(spark, tmp_path):
     assert old[("r1", "p1")] == "v1"
     t.update_properties({"k": "val"})
     assert t.manifest().properties["k"] == "val"
+
+
+def test_each_manifest_records_only_its_own_commit(spark, tmp_path):
+    """After 60 one-batch merges into a 64-bucket table (and the folds they
+    trigger), every version's lineage is one entry, its own commit; the
+    log of versions is the history. The last manifest is at least 15%
+    smaller than the same manifest carrying a window of the 50 newest
+    commits' entries, as every manifest did before."""
+    t = LakeTable(str(tmp_path / "tbl"))
+    base = [(f"r{i}", f"p{i}", "v0") for i in range(640)]
+    t.create(spark, spark.createDataFrame(base, SCHEMA), ["repo", "path"],
+             n_buckets=64)
+    for b in range(60):
+        t.merge(spark, _upd(spark, [(f"r{i}", f"p{i}", f"v{b + 1}", "u", b + 1)
+                                    for i in range(b * 7, b * 7 + 20)]),
+                batch_id=b, source="stream")
+    m = t.manifest()
+    assert m.version > 60 + 1
+    for v in range(1, m.version + 1):
+        lineage = t.manifest(v).lineage
+        assert len(lineage) == 1 and lineage[0]["commit"] == v
+    window = [t.manifest(v).lineage[0]
+              for v in range(m.version - 49, m.version + 1)]
+    own = len(m.to_json())
+    windowed = len(json.dumps({**m.__dict__, "lineage": window},
+                              sort_keys=True))
+    assert own <= 0.85 * windowed, (own, windowed)
+
+
+def test_history_reads_own_entry_of_an_older_format_manifest(spark, tmp_path):
+    """A manifest of the older format carries the lineage of earlier
+    commits before its own entry: it still loads, and history() reports
+    its own (last) entry, one row per version with every lineage column."""
+    import dataclasses
+    t = _table(spark, tmp_path)
+    t.merge(spark, _upd(spark, [("r1", "p1", "v1b", "u", 10)]), batch_id=0,
+            source="stream")
+    m = t.manifest()
+    old = dataclasses.replace(
+        m, version=m.version + 1, committed_at_ms=0,
+        lineage=[t.manifest(v).lineage[0] for v in (1, 2)]
+        + [{"commit": 3, "op": "props"}])
+    t._commit(old, parent=m)
+    t.update_properties({"k": "v"})
+    assert [len(t.manifest(v).lineage) for v in (1, 2, 3, 4)] == [1, 1, 3, 1]
+    rows = [r.asDict() for r in t.history(spark).orderBy("version").collect()]
+    assert [(r["version"], r["op"]) for r in rows] == \
+        [(1, "create"), (2, "merge"), (3, "props"), (4, "props")]
+    merge = rows[1]
+    assert (merge["source"], merge["batch_id"], merge["rows_in"],
+            merge["buckets_touched"], merge["files_rewritten"],
+            merge["files_written"]) == ("stream", 0, 1, 1, 0, 1)
+    assert rows[0]["n_files"] == t.manifest(1).lineage[0]["files"]
+    assert rows[2]["rows_in"] is None and rows[2]["n_files"] == len(m.files)
 
 
 def test_compact_purges_tombstones(spark, tmp_path):
@@ -341,7 +397,8 @@ def test_writer_conflict_exhausts_retries(spark, tmp_path, writer):
     assert t.changes(spark, from_version=3).count() == 0
     # nothing of the writer's landed: only the racer's commits followed v2
     assert t.current_version() == 2 + _COMMIT_RETRIES + 1
-    assert {e["op"] for e in t.manifest().lineage[2:]} == {"props"}
+    assert {t.manifest(v).lineage[-1]["op"]
+            for v in range(3, t.current_version() + 1)} == {"props"}
 
 
 def test_fold_keeps_a_delta_committed_during_its_race(spark, tmp_path):

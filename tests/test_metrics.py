@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 from kafka_connect_dynamodb_spark.lake.table import LakeTable
 from kafka_connect_dynamodb_spark.plans.metrics import (
-    TailMetricsListener, bucket_histogram, lineage_frame, observe_events)
+    TailMetricsListener, bucket_histogram, observe_events)
 from kafka_connect_dynamodb_spark.plans.pipeline import CdcPipeline
 from kafka_connect_dynamodb_spark.sources.generator import (
     DEFAULT_BASE_TS, change_events, source_table)
@@ -24,24 +24,26 @@ def _replayed(spark, tmp_path, n=150, ev_n=800):
     return table
 
 
-def test_lineage_frame_records_commits(spark, tmp_path):
+def test_history_records_commits(spark, tmp_path):
     table = _replayed(spark, tmp_path)
-    lf = lineage_frame(spark, table)
-    rows = {r["op"] for r in lf.select("op").collect() if r["op"]}
+    h = table.history(spark)
+    rows = {r["op"] for r in h.select("op").collect() if r["op"]}
     assert "create" in rows and "merge" in rows
-    merge = [r for r in lf.collect() if r["op"] == "merge"][0]
+    merge = [r for r in h.collect() if r["op"] == "merge"][0]
     assert merge["rows_in"] > 0 and merge["buckets_touched"] >= 1
+    assert merge["files_rewritten"] == 0 and merge["files_written"] >= 1
+    assert [r["version"] for r in h.collect()] == \
+        list(range(1, table.current_version() + 1))
 
 
-def test_lineage_frame_fresh_table_has_full_schema(spark, tmp_path):
-    """The empty-history fallback exposes the same columns as a populated
+def test_history_fresh_table_has_full_schema(spark, tmp_path):
+    """A table with no version yields the same columns as a populated
     one, so `select('batch_id', 'rows_in', ...)` works on a fresh table."""
-    from types import SimpleNamespace
-    no_history = SimpleNamespace(manifest=lambda: SimpleNamespace(lineage=[]))
-    empty = lineage_frame(spark, no_history)
+    empty = LakeTable(str(tmp_path / "none")).history(spark)
     assert empty.count() == 0
-    for c in ("commit", "op", "batch_id", "source", "rows_in",
-              "buckets_touched", "files_rewritten", "files_written"):
+    for c in ("version", "op", "batch_id", "source", "rows_in",
+              "buckets_touched", "files_rewritten", "files_written",
+              "n_files"):
         assert c in empty.columns
 
 

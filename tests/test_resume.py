@@ -21,6 +21,15 @@ def _rows(table, spark):
             for r in table.read(spark).collect()}
 
 
+def _chunk_merges(table):
+    """The snapshot chunks' merge commits by chunk, one lineage entry per
+    version."""
+    return {e["batch_id"]: e
+            for e in (table.manifest(v).lineage[-1]
+                      for v in range(1, table.current_version() + 1))
+            if e.get("source") == "init_sync" and e.get("op") == "merge"}
+
+
 def test_mid_snapshot_resume_kill_at_half(spark, tmp_path):
     base = source_table(spark, 300)
     snap = str(tmp_path / "snap")
@@ -46,9 +55,8 @@ def test_mid_snapshot_resume_kill_at_half(spark, tmp_path):
 
     # every chunk committed exactly once across both runs
     assert table2.manifest().committed["init_sync"] == 7
-    merges = [e for e in table2.manifest().lineage
-              if e.get("source") == "init_sync" and e.get("op") == "merge"]
-    assert sorted(e["batch_id"] for e in merges) == list(range(8))
+    merges = _chunk_merges(table2)
+    assert sorted(merges) == list(range(8))
 
     # parity with an uninterrupted one-shot snapshot
     oneshot = LakeTable(str(tmp_path / "tbl_oneshot"))
@@ -105,8 +113,7 @@ def test_resumable_count_no_table_scan_and_crash_window_heal(spark, tmp_path):
     rows_01 = None
     # recompute what the state would have held after chunk 1: heal must
     # make up the difference from lineage, so corrupt rows_so_far too
-    merges = {e["batch_id"]: e for e in table.manifest().lineage
-              if e.get("source") == "init_sync" and e.get("op") == "merge"}
+    merges = _chunk_merges(table)
     rows_01 = merges[0]["rows_in"] + merges[1]["rows_in"]
     info.exclusive_start_key = json.dumps(
         {**key, "next_chunk": 2, "rows_so_far": rows_01})
@@ -138,3 +145,28 @@ def test_resumable_count_no_table_scan_and_crash_window_heal(spark, tmp_path):
     assert info3.init_sync_state == InitSyncStatus.FINISHED
     assert info3.init_sync_count == 300
     assert len(jobs) == 0, f"finish launched {len(jobs)} jobs, expected 0"
+
+
+def test_crash_window_heal_fails_loudly_when_its_versions_expired(spark,
+                                                                  tmp_path):
+    """The heal reads the missing chunks' rows_in from the versions their
+    merges committed. Once those versions are expired the running sum
+    cannot be healed: the resume fails with a clear error instead of
+    finishing with a wrong count."""
+    import pytest
+
+    base = source_table(spark, 120)
+    snap = str(tmp_path / "snap")
+    base.repartition(4).write.parquet(snap)
+
+    table = LakeTable(str(tmp_path / "tbl"))
+    pipe = CdcPipeline(spark, table, n_buckets=4, clock=CLOCK)
+    info = pipe.init_sync_resumable(snap, n_chunks=4, max_chunks_this_run=2)
+    key = json.loads(info.exclusive_start_key)
+    info.exclusive_start_key = json.dumps(
+        {**key, "next_chunk": 1, "rows_so_far": 0})
+    pipe.save_state(info)                     # chunk 1's rows are lost
+    table.expire_versions(keep_last=2)        # and so is its merge version
+
+    with pytest.raises(FileNotFoundError, match="restart the snapshot"):
+        pipe.init_sync_resumable(snap, n_chunks=4)
