@@ -81,7 +81,10 @@ class CommitIO:
         raise NotImplementedError
 
     def walk_files(self, root: str) -> Iterator[tuple[str, list[str]]]:
-        """Yield (dirpath, filenames) bottom-up under root (vacuum sweep)."""
+        """Yield (dirpath, filenames) bottom-up under root: ONE listing of
+        the whole prefix, whatever its depth. Vacuum sweeps with it, and
+        ``LakeTable._stage`` discovers the files a write staged (a base
+        write's ``_bucket=N`` dirs included) with one call."""
         raise NotImplementedError
 
     def file_mtime(self, path: str) -> float:
@@ -241,6 +244,10 @@ class ObjectStoreCommitIO(PosixCommitIO):
       delimiter (strongly consistent since 2020); "directory exists" means
       "prefix is listable", which an object store cannot distinguish from
       empty — locally the backing dir stands in for the prefix.
+    * ``walk_files`` = one ListObjectsV2 over the prefix WITHOUT a
+      delimiter (paginated): every object under it at any depth, so a
+      commit's staged files are discovered by one listing, not one per
+      ``_bucket=N`` dir.
     * ``remove_tree`` = list + batched DeleteObjects by prefix.
     * ``ensure_dir`` = no-op on S3 (every prefix always "exists"); locally
       the dir is created so a file-listing reader of the empty prefix

@@ -142,6 +142,20 @@ def _newest(df: DataFrame, key_cols: list[str], point: bool) -> DataFrame:
     return out.select(*df.columns)
 
 
+def _by_bucket(df: DataFrame, keys: Sequence[str],
+               single: bool = False) -> DataFrame:
+    """``df`` (with ``_bucket``) laid out for :meth:`LakeTable._stage`:
+    each bucket's rows in one task, sorted by bucket and key, so a base
+    write emits one file per bucket and a delta one file unless it outgrows
+    AQE's advisory partition size. A ``single`` (one-partition,
+    :func:`one_partition`) ``df`` takes a ``coalesce(1)`` instead of the
+    shuffle: one single-task job. The key sort keeps parquet row-group
+    min/max on the keys tight, so point lookups and range scans inside a
+    bucket skip row groups (Iceberg sort orders)."""
+    out = df.coalesce(1) if single else df.repartition(F.col("_bucket"))
+    return out.sortWithinPartitions("_bucket", *keys)
+
+
 def _widened_type(old_dt, new_dt):
     """The wider type when new_dt is a LOSSLESS widening of old_dt
     (byte<short<int<long, float<double, {byte,short,int}<double — every
@@ -471,97 +485,58 @@ class LakeTable:
         return os.path.join(self.root, "data",
                             f"c{version:012d}-{uuid.uuid4().hex[:8]}")
 
-    def _write_bucketed(self, df: DataFrame, version: int,
-                        sort_cols: list[str] | None = None,
-                        zval_col: str | None = None,
-                        n_range_parts: int | None = None) -> list[dict[str, Any]]:
-        """Write df (with _bucket col) partitioned by bucket; return file entries.
+    def _stage(self, out: DataFrame, version: int, *, base: bool = False
+               ) -> tuple[list[dict[str, Any]], int]:
+        """Write ``out``, laid out by the caller, as files of commit
+        ``version``; return their entries, sorted by path, and the row
+        count. Every file a commit writes is staged here.
 
-        repartition("_bucket") co-locates each bucket in one task so
-        partitionBy emits ~one file per bucket per commit (no small-file
-        explosion); AQE coalesces near-empty partitions.
+        A ``base`` frame is written partitioned by ``_bucket``, and each
+        entry names the bucket of its ``_bucket=N`` dir. Any other frame is
+        written flat: a delta (it carries ``_bucket``, left out of the
+        files), whose entries carry the commit version and its bucket set,
+        or a pre-image feed (no ``_bucket``), whose entries name only their
+        path. Base files and deltas carry footer stats (:func:`_footer_stats`).
 
-        With ``zval_col`` (Z-order compaction) the layout goal inverts:
-        SPLIT each bucket into ``n_range_parts``-ish files, each covering a
-        contiguous z-range, via repartitionByRange(bucket, z) + a within-
-        partition sort — every output file then spans a tight hyper-
-        rectangle of the z-columns and its manifest min/max stats prune on
-        any of them. The z column itself is dropped before writing (layout
-        metadata, not data).
+        One ``observe`` on the write yields the row count and the bucket
+        set, with no extra job. It sits ABOVE the caller's coalesce or
+        shuffle, which never yields zero partitions, so an empty input
+        still reports its zero count. An empty write leaves no entry and no
+        data file: a flat one writes one empty file, removed with its dir;
+        a partitioned one writes none. The staging prefix is then listed
+        ONCE (:meth:`CommitIO.walk_files`), one LIST request on an object
+        store, not one per bucket dir.
 
-        The staging dir carries a unique suffix: a writer that crashed
-        AFTER staging but BEFORE the manifest commit leaves an orphan that
-        must not collide with the redelivered batch's errorifexists write
-        (same next-version number). Manifest entries reference exact file
-        paths, so the suffix is invisible to readers; orphans are
-        vacuum-reclaimed.
-        """
+        The staging dir is fresh per call (:meth:`_staging_dir`): an
+        attempt that crashed after staging but before its manifest commit
+        leaves an orphan that cannot collide with the redelivered batch's
+        errorifexists write, and :meth:`vacuum` reclaims it."""
         staged = self._staging_dir(version)
-        if zval_col is not None:
-            out = (df.repartitionByRange(n_range_parts or 8,
-                                         F.col("_bucket"), F.col(zval_col))
-                     .sortWithinPartitions("_bucket", zval_col)
-                     .drop(zval_col))
-        else:
-            out = df.repartition(F.col("_bucket"))
-            if sort_cols:
-                # cluster rows inside each file (compaction-time sort order):
-                # parquet row-group min/max on the sort keys become tight, so
-                # point lookups and range scans inside a bucket skip row
-                # groups — maintenance-time cost, read-time win (Iceberg
-                # sort orders)
-                out = out.sortWithinPartitions("_bucket", *sort_cols)
-        (out.write.mode("errorifexists").partitionBy("_bucket").parquet(staged))
-        entries = []
-        for d in self.io.list_dir(staged):
-            if not d.startswith("_bucket="):
-                continue
-            b = int(d.split("=")[1])
-            for f in self.io.list_dir(os.path.join(staged, d)):
-                if f.endswith(".parquet"):
-                    abs_path = os.path.join(staged, d, f)
-                    rel = os.path.relpath(abs_path, self.root)
-                    entries.append({"path": rel, "bucket": b})
-        return self._with_stats(entries)
-
-    def _write_delta(self, df: DataFrame, version: int, keys: list[str],
-                     single: bool) -> tuple[list[dict[str, Any]], int]:
-        """Write ``df`` (with ``_bucket``) as the delta of commit
-        ``version``: rows sorted by bucket and key, one file unless the
-        batch outgrows AQE's advisory partition size. A ``single``
-        (one-partition, :func:`one_partition`) ``df`` is written behind a
-        ``coalesce(1)`` — one single-task job, no shuffle; any other
-        ``df`` is shuffled on ``_bucket`` so each bucket's rows meet in
-        one file. One ``observe`` on the
-        write yields the row count and the buckets the delta touches — no
-        extra job. Returns the delta entries (each carries the commit's
-        bucket set) and the row count; an empty delta leaves no entry and
-        no files. The staging dir is named like a base commit's, so
-        vacuum's in-flight guard covers it."""
-        staged = self._staging_dir(version)
+        bucketed = "_bucket" in out.columns
         obs = Observation()
-        out = df.coalesce(1) if single else df.repartition(F.col("_bucket"))
-        (out.sortWithinPartitions("_bucket", *keys)
-           # observed ABOVE the coalesce or shuffle, which never yields zero
-           # partitions: an empty input still reports its zero count
-           .observe(obs, F.count(F.lit(1)).alias("rows"),
-                    F.collect_set("_bucket").alias("buckets"))
-           .drop("_bucket")
-           .write.mode("errorifexists").parquet(staged))
-        n, buckets = obs.get["rows"], sorted(obs.get["buckets"])
-        if n == 0:
-            self.io.remove_tree(staged)
+        metrics = [F.count(F.lit(1)).alias("rows")]
+        if bucketed:
+            metrics.append(F.collect_set("_bucket").alias("buckets"))
+        out = out.observe(obs, *metrics)
+        w = out.write.partitionBy("_bucket") if base else out.drop("_bucket").write
+        w.mode("errorifexists").parquet(staged)
+        got = obs.get
+        if got["rows"] == 0:
+            if not base:
+                self.io.remove_tree(staged)
             return [], 0
-        entries = [{"path": os.path.relpath(os.path.join(staged, f), self.root),
-                    "version": version, "buckets": buckets}
-                   for f in sorted(self.io.list_dir(staged))
-                   if f.endswith(".parquet")]
-        return self._with_stats(entries), n
-
-    def _with_stats(self, entries: list[dict[str, Any]]
-                    ) -> list[dict[str, Any]]:
-        """Add each written file's footer stats to its entry."""
-        if self.file_stats and entries:
+        delta = ({"version": version, "buckets": sorted(got["buckets"])}
+                 if bucketed and not base else {})
+        entries = []
+        for d, files in self.io.walk_files(staged):
+            for f in files:
+                if f.endswith(".parquet"):
+                    entries.append(
+                        {"path": os.path.relpath(os.path.join(d, f), self.root),
+                         **({"bucket": int(d.rsplit("=", 1)[1])} if base
+                            else delta)})
+        entries.sort(key=operator.itemgetter("path"))
+        if bucketed and self.file_stats:
             # footers are read on the driver by a thread pool: metadata
             # reads, no Spark job (at 4,096 one-row files a distributed
             # footer job measured no faster on 4 cores)
@@ -570,7 +545,7 @@ class LakeTable:
                 for e, stats in zip(entries, pool.map(_footer_stats, paths)):
                     if stats:
                         e["stats"] = stats
-        return entries
+        return entries, got["rows"]
 
     def _read_files(self, spark: SparkSession, schema: T.StructType,
                     entries: list[dict[str, Any]]) -> DataFrame:
@@ -613,11 +588,12 @@ class LakeTable:
             raise FileExistsError(f"table already exists at {self.root}")
         stored, data_schema = self._snapshot_rows(df, seq_col, key_cols,
                                                   n_buckets)
-        entries = self._write_bucketed(stored, 1)
+        entries, n = self._stage(stored, 1, base=True)
         m = Manifest(version=1, table=table, key_cols=list(key_cols),
                      n_buckets=n_buckets, schema_json=json.dumps(data_schema.jsonValue()),
                      files=entries, committed={}, properties=properties or {},
-                     lineage=[{"commit": 1, "op": "create", "files": len(entries)}])
+                     lineage=[{"commit": 1, "op": "create", "rows_in": n,
+                               "files_written": len(entries)}])
         self._commit(m)
         return m
 
@@ -626,16 +602,18 @@ class LakeTable:
                        key_cols: list[str], n_buckets: int
                        ) -> tuple[DataFrame, T.StructType]:
         """Snapshot rows as stored (``_seq`` from ``seq_col`` or 0,
-        ``_deleted=false``) plus their ``_bucket``, in one projection, and
-        the stored schema. A meta column ``df`` already has is replaced
-        in place, and ``seq_col`` itself is not stored."""
+        ``_deleted=false``) plus their ``_bucket``, in one projection laid
+        out by :func:`_by_bucket`, and the stored schema. A meta column
+        ``df`` already has is replaced in place, and ``seq_col`` itself is
+        not stored."""
         seq = F.lit(0) if seq_col is None else F.col(seq_col)
         meta = {"_seq": seq.cast(SEQ_TYPE), "_deleted": F.lit(False)}
         cols = [meta.pop(c).alias(c) if c in meta else F.col(c)
                 for c in df.columns if c != seq_col or c == "_seq"]
         stored = df.select(*cols, *[v.alias(c) for c, v in meta.items()],
                            bucket_of(key_cols, n_buckets).alias("_bucket"))
-        return stored, T.StructType(stored.schema.fields[:-1])
+        return (_by_bucket(stored, key_cols),
+                T.StructType(stored.schema.fields[:-1]))
 
     def create_empty(self, spark: SparkSession, schema: T.StructType,
                      key_cols: list[str], n_buckets: int = 64,
@@ -684,9 +662,10 @@ class LakeTable:
         stored = stored.withColumn("_op", F.lit("r"))
 
         def attempt(m: Manifest) -> Manifest:
-            entries = self._write_bucketed(stored, m.version + 1)
+            entries, n = self._stage(stored, m.version + 1, base=True)
             return self._next(
-                m, {"op": "replace", "files": len(entries)},
+                m, {"op": "replace", "rows_in": n,
+                    "files_written": len(entries)},
                 feed=entries if self.change_feed else (),
                 key_cols=key_cols, n_buckets=n_buckets,
                 schema_json=json.dumps(data_schema.jsonValue()),
@@ -1010,8 +989,9 @@ class LakeTable:
 
         Physical plan: one write of the batch as this commit's DELTA —
         sorted by bucket and key, usually one file; shuffled on ``_bucket``
-        unless ``updates`` is one partition (:meth:`_write_delta`) —
-        whose ``observe`` yields ``rows_in`` and the touched buckets; then
+        unless ``updates`` is one partition (:func:`_by_bucket`) — whose
+        ``observe`` yields ``rows_in`` and the touched buckets
+        (:meth:`_stage`); then
         an atomic manifest commit that appends the delta and references
         every base file unchanged. No target read, no join, no bucket
         rewrite: stale winners (``_seq`` not above the stored row's) are
@@ -1080,8 +1060,8 @@ class LakeTable:
         if batch_id is not None:
             committed[source] = batch_id
         lineage = {"batch_id": batch_id, "source": source, "op": "merge"}
-        delta, n_upd = self._write_delta(upd, m.version + 1, keys,
-                                         one_partition(upd))
+        delta, n_upd = self._stage(_by_bucket(upd, keys, one_partition(upd)),
+                                   m.version + 1)
         if n_upd == 0:
             return self._next(m, {**lineage, "rows_in": 0},
                               committed=committed)
@@ -1112,8 +1092,8 @@ class LakeTable:
         files, so the batch is evaluated once; the stored rows come from a
         bucket-pruned join against the resolved base files and deltas of
         the touched buckets (the one place a merge still reads its target).
-        Written under a staging dir like a delta's, so :meth:`vacuum`
-        reclaims it if the attempt never commits."""
+        Staged like a delta (:meth:`_stage`), so :meth:`vacuum` reclaims
+        it if the attempt never commits; a feed of no rows leaves no file."""
         keys = m.key_cols
         bset = set(buckets)
         tgt = self._resolved(
@@ -1140,11 +1120,7 @@ class LakeTable:
             F.when(F.col("s._deleted"), F.lit("pd"))
              .otherwise(F.lit("pu")).alias("_op"),
             F.col("t._seq").alias("_seq"))
-        staged = self._staging_dir(m.version + 1)
-        post.unionByName(pre).write.mode("errorifexists").parquet(staged)
-        return [{"path": os.path.relpath(os.path.join(staged, f), self.root)}
-                for f in sorted(self.io.list_dir(staged))
-                if f.endswith(".parquet")]
+        return self._stage(post.unionByName(pre), m.version + 1)[0]
 
     # ------------------------------------------------------------ change feed
 
@@ -1273,15 +1249,20 @@ class LakeTable:
                   "files_rewritten": len(tgt_entries),
                   "deltas_folded": len({d["version"] for d in m.deltas})}
             if zorder_cols:
+                # each bucket SPLIT into ~zorder_files_per_bucket files of
+                # contiguous z-ranges; the z-value is layout, not data
                 from .zorder import with_zvalue
-                df = with_zvalue(df, zorder_cols)
-                new_entries = self._write_bucketed(
-                    df, m.version + 1, sort_cols=m.key_cols, zval_col="_zval",
-                    n_range_parts=max(1, len(bset)) * zorder_files_per_bucket)
+                parts = max(1, len(bset)) * zorder_files_per_bucket
+                df = (with_zvalue(df, zorder_cols)
+                      .repartitionByRange(parts, F.col("_bucket"),
+                                          F.col("_zval"))
+                      .sortWithinPartitions("_bucket", "_zval")
+                      .drop("_zval"))
                 op["zorder"] = list(zorder_cols)
             else:
-                new_entries = self._write_bucketed(df, m.version + 1,
-                                                   sort_cols=m.key_cols)
+                df = _by_bucket(df, m.key_cols)
+            new_entries, _ = self._stage(df, m.version + 1, base=True)
+            op["files_written"] = len(new_entries)
             return self._next(m, op, files=keep_entries + new_entries,
                               deltas=[])
 

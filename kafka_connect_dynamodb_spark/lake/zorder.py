@@ -1,6 +1,6 @@
 """Z-order (Morton-curve) clustering for compaction-time data layout.
 
-Linear sort_cols clustering (Iceberg sort orders) makes file/row-group
+Linear key clustering (Iceberg sort orders) makes file/row-group
 min-max stats tight on the FIRST sort column only; a range predicate on any
 other column still scans every file. Z-ordering interleaves the bits of
 per-column quantile ranks so every file covers a small hyper-rectangle of

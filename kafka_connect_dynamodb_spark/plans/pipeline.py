@@ -73,24 +73,20 @@ class CdcPipeline:
         info = SourceInfo(table_name=self.table_name)
         info.start_init_sync(now_ms)
 
-        # row count via Observation on the snapshot write itself — INIT_SYNC
-        # is ONE job, not write-then-recount (VERDICT r2 next #8)
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-        obs = Observation()
-        observed = snapshot_df.observe(obs, F.count(F.lit(1)).alias("n"))
-
         if self.table.exists():
             # re-snapshot (danger-zone resync): swap the entire file list in
             # ONE atomic manifest commit — storage-agnostic, no tree
             # deletion (an S3 prefix has no rmtree); old files wait for
             # expire+vacuum (VERDICT r2 next #2)
-            self.table.replace(self.spark, observed, list(KEY_FIELDS),
-                               n_buckets=self.n_buckets)
+            m = self.table.replace(self.spark, snapshot_df, list(KEY_FIELDS),
+                                   n_buckets=self.n_buckets)
         else:
-            self.table.create(self.spark, observed, list(KEY_FIELDS),
-                              n_buckets=self.n_buckets, table=self.table_name)
-        count = int(obs.get["n"])
+            m = self.table.create(self.spark, snapshot_df, list(KEY_FIELDS),
+                                  n_buckets=self.n_buckets,
+                                  table=self.table_name)
+        # the snapshot write counts its own rows (rows_in of the commit):
+        # INIT_SYNC is ONE job, not write-then-recount
+        count = int(m.lineage[-1]["rows_in"])
 
         elapsed_h = (self.clock() * 1000 - now_ms) / 3_600_000
         if elapsed_h > INIT_SYNC_RESTART_HOURS:

@@ -173,8 +173,19 @@ def test_history_reads_own_entry_of_an_older_format_manifest(spark, tmp_path):
     assert (merge["source"], merge["batch_id"], merge["rows_in"],
             merge["buckets_touched"], merge["files_rewritten"],
             merge["files_written"]) == ("stream", 0, 1, 1, 0, 1)
-    assert rows[0]["n_files"] == t.manifest(1).lineage[0]["files"]
+    assert rows[0]["n_files"] == t.manifest(1).lineage[0]["files_written"]
+    assert (rows[0]["rows_in"], rows[0]["files_written"]) == \
+        (len(BASE), rows[0]["n_files"])
     assert rows[2]["rows_in"] is None and rows[2]["n_files"] == len(m.files)
+    # an older create/replace entry counted its files as "files": it still
+    # loads, and its files_written reads null
+    m = t.manifest()
+    t._commit(dataclasses.replace(
+        m, version=m.version + 1, committed_at_ms=0,
+        lineage=[{"commit": m.version + 1, "op": "replace", "files": 3}]),
+        parent=m)
+    last = t.history(spark).orderBy("version").collect()[-1]
+    assert (last["op"], last["files_written"]) == ("replace", None)
 
 
 def test_compact_purges_tombstones(spark, tmp_path):
@@ -448,12 +459,16 @@ def test_failed_fold_leaves_a_readable_table_and_the_next_merge_folds(
     merge folds."""
     t = _table(spark, tmp_path)
 
-    def crash(*a, **k):
-        raise RuntimeError("fold crashed")
+    stage = LakeTable._stage
+
+    def crash(self, df, version, *, base=False):
+        if base:                      # the fold's write, not the delta's
+            raise RuntimeError("fold crashed")
+        return stage(self, df, version, base=base)
 
     for i in range(_MAX_DELTAS):
         if i == _MAX_DELTAS - 1:
-            monkeypatch.setattr(LakeTable, "_write_bucketed", crash)
+            monkeypatch.setattr(LakeTable, "_stage", crash)
         upd = _upd(spark, [("r1", "p1", f"v{i}", "u", 10 + i)])
         if i < _MAX_DELTAS - 1:
             t.merge(spark, upd, batch_id=i)

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from kafka_connect_dynamodb_spark.lake.commitio import (
     CommitConflict, ObjectStoreCommitIO, PosixCommitIO, RenameCommitIO)
 from kafka_connect_dynamodb_spark.lake.table import (
-    _COMMIT_RETRIES, LakeTable, Manifest)
+    _COMMIT_RETRIES, _MAX_DELTAS, LakeTable, Manifest)
 
 BASE = [("r1", "p1", "v1"), ("r1", "p2", "v2"), ("r2", "p1", "v3")]
 
@@ -262,9 +262,9 @@ def test_write_failing_after_a_lost_race_retries(spark, tmp_path,
     between, the failure is the writer's own and propagates at once."""
     t = _table(spark, tmp_path / "tbl")
     racer = LakeTable(t.root)
-    real, calls = t._write_delta, []
+    real, calls = t._stage, []
 
-    def write_delta(*a, **kw):
+    def stage(*a, **kw):
         calls.append(1)
         if len(calls) == 1:
             if racer_commits:
@@ -272,7 +272,7 @@ def test_write_failing_after_a_lost_race_retries(spark, tmp_path,
             raise OSError("Mkdirs failed: staging dir reclaimed")
         return real(*a, **kw)
 
-    t._write_delta = write_delta
+    t._stage = stage
     upd = _upd(spark, [("r1", "p1", "NEW", "u", 5)])
     if not racer_commits:
         with pytest.raises(OSError):
@@ -722,3 +722,207 @@ def test_commitio_base_file_mtime_is_conservative(tmp_path):
     import time
     mt = MinimalIO().file_mtime(str(tmp_path / "nope"))
     assert mt == float("inf") and mt > time.time()
+
+
+# ------------------------------------------------------- commit staging
+
+class CountListings(PosixCommitIO):
+    """Records the path of every listing call (list_dir and walk_files)."""
+
+    def __init__(self):
+        self.listed = []
+
+    def list_dir(self, path):
+        self.listed.append(path)
+        return super().list_dir(path)
+
+    def walk_files(self, root):
+        self.listed.append(root)
+        return super().walk_files(root)
+
+
+def _listings(io, fn):
+    io.listed.clear()
+    fn()
+    return list(io.listed)
+
+
+def _staging_dirs(listed):
+    return [p for p in listed if f"{os.sep}data{os.sep}c" in p]
+
+
+def test_every_staging_dir_is_listed_once(spark, tmp_path):
+    """A commit discovers the files it wrote with ONE listing of its
+    staging dir, however many bucket dirs the write made: a 64-bucket
+    create lists the log and its staging dir, a merge the log and its
+    delta's staging dir, and a merge that folds its deltas into the 64
+    buckets lists each of the two commits' log and staging dir once. On a
+    feed_preimages table the feed file is one more staging dir, listed
+    once, and a z-order fold lists its staging dir once."""
+    snap = spark.createDataFrame(
+        [(f"r{i % 7}", f"p{i}", f"v{i}") for i in range(2000)],
+        "repo string, path string, content string")
+    io = CountListings()
+    t = LakeTable(str(tmp_path / "tbl"), io=io)
+    listed = _listings(io, lambda: t.create(spark, snap, ["repo", "path"],
+                                            n_buckets=64))
+    assert len(t.manifest().files) == 64
+    assert len(listed) == 2 and len(_staging_dirs(listed)) == 1
+
+    def merge(i, table=t):
+        upd = _upd(spark, [(f"r{k % 7}", f"p{k}", f"b{i}", "u", 10 + i)
+                           for k in range(i * 300, i * 300 + 300)])
+        return _listings(table.io, lambda: table.merge(spark, upd, batch_id=i))
+
+    for i in range(_MAX_DELTAS - 1):
+        listed = merge(i)
+        assert len(listed) == 2 and len(_staging_dirs(listed)) == 1
+    listed = merge(_MAX_DELTAS - 1)                 # folds into 64 buckets
+    m = t.manifest()
+    assert m.deltas == [] and m.lineage[-1]["files_written"] == 64
+    assert len(listed) == 4
+    assert len(set(_staging_dirs(listed))) == len(_staging_dirs(listed)) == 2
+
+    listed = _listings(io, lambda: t.compact(
+        spark, zorder_cols=["content"], zorder_files_per_bucket=2))
+    assert t.manifest().lineage[-1]["zorder"] == ["content"]
+    assert len(listed) == 2 and len(_staging_dirs(listed)) == 1
+
+    feed = LakeTable(str(tmp_path / "feed"), io=CountListings(),
+                     change_feed=True, feed_preimages=True)
+    feed.create(spark, snap, ["repo", "path"], n_buckets=64)
+    listed = merge(0, feed)
+    assert feed.manifest().change_files
+    assert len(listed) == 3
+    assert len(set(_staging_dirs(listed))) == len(_staging_dirs(listed)) == 2
+
+
+class CrashAt(PosixCommitIO):
+    """Raises once at the armed step: the ``nth`` staging-dir walk of a
+    call (the write's files are on disk, nothing is put), or the ``nth``
+    put, AFTER the store accepted it (a timeout that lost the reply)."""
+
+    armed = None                                    # (step, nth)
+
+    def arm(self, step, nth):
+        self.armed, self.seen = (step, nth), 0
+
+    def _hit(self, step):
+        if self.armed is None or self.armed[0] != step:
+            return False
+        self.seen += 1
+        if self.seen < self.armed[1]:
+            return False
+        self.armed = None
+        return True
+
+    def walk_files(self, root):
+        if _staging_dirs([root]) and self._hit("walk"):
+            raise OSError(f"crashed listing {root}")
+        return super().walk_files(root)
+
+    def put_if_absent(self, path, payload):
+        super().put_if_absent(path, payload)
+        if self._hit("put"):
+            raise TimeoutError(f"put of {path} accepted, reply lost")
+
+
+@pytest.fixture(scope="module")
+def crash_batches(spark):
+    """A 200-key snapshot, its change events in _MAX_DELTAS batches, and
+    the oracle's final hashes."""
+    from kafka_connect_dynamodb_spark.sources.generator import (
+        change_events, source_table)
+    from tests.oracle import final_hashes, replay
+    base = source_table(spark, 200)
+    ev = change_events(spark, 200, 600)
+    rows = ev.collect()
+    batches = [spark.createDataFrame(rows[i::_MAX_DELTAS], ev.schema)
+               for i in range(_MAX_DELTAS)]
+    base_rows = [r.asDict() for r in base.collect()]
+    expected = final_hashes(replay(base_rows, [r.asDict() for r in rows]))
+    resnap = base.withColumn("content", F.concat(F.col("content"), F.lit("!")))
+    resnap_expected = final_hashes(replay(
+        [r.asDict() for r in resnap.collect()], []))
+    return base, batches, expected, resnap, resnap_expected
+
+
+def _hashes(spark, t):
+    import hashlib
+    return {(r.repo, r.path):
+            hashlib.sha256((r.content or "").encode()).hexdigest()
+            for r in t.read(spark).collect()}
+
+
+def _data_files(t):
+    return {os.path.relpath(os.path.join(d, f), t.root)
+            for d, _, fs in os.walk(os.path.join(t.root, "data"))
+            for f in fs if f.endswith(".parquet")}
+
+
+def _named_files(t):
+    return {e["path"] for v in t._versions() for m in [t.manifest(v)]
+            for e in m.files + m.deltas + m.change_files}
+
+
+@pytest.mark.parametrize("op,step,nth", [
+    ("merge", "walk", 1),       # (a) the delta is written, not yet put
+    ("merge", "put", 1),        # (b) the put landed, its reply was lost
+    ("merge", "walk", 2),       # (c) the fold's files are written
+    ("replace", "walk", 1),     # (a) the new snapshot is written
+], ids=["a-merge", "b-merge", "c-fold", "a-replace"])
+def test_crash_at_each_staging_step_recovers_to_parity(
+        spark, tmp_path, crash_batches, op, step, nth):
+    """A crash at each step of staging a commit, followed by the
+    foreachBatch redelivery (or the rerun replace), ends at the oracle's
+    table; vacuum then reclaims every file no retained manifest names
+    and spares every file one does. The merge under test is the one that
+    folds the table's deltas."""
+    from kafka_connect_dynamodb_spark.operators.apply import apply_batch
+    base, batches, expected, resnap, resnap_expected = crash_batches
+    io = CrashAt()
+    t = LakeTable(str(tmp_path / "tbl"), io=io)
+    t.create(spark, base, ["repo", "path"], n_buckets=8)
+    last = _MAX_DELTAS - 1
+    for i in range(last):
+        apply_batch(spark, t, batches[i], batch_id=i)
+
+    io.arm(step, nth)
+    if op == "replace":
+        v = t.current_version()
+        with pytest.raises(OSError, match="crashed listing"):
+            t.replace(spark, resnap)
+        assert t.current_version() == v             # nothing committed
+        t.replace(spark, resnap)
+        expected = resnap_expected
+    elif step == "put":
+        # _transact reruns the attempt once another commit took the
+        # version; that commit is its own, so the batch reads as skipped
+        res = apply_batch(spark, t, batches[last], batch_id=last)
+        assert res["skipped"] and t.last_committed("stream") == last
+        assert apply_batch(spark, t, batches[last], batch_id=last)["skipped"]
+    else:
+        with pytest.raises(OSError, match="crashed listing"):
+            apply_batch(spark, t, batches[last], batch_id=last)
+        # (a) nothing committed; (c) the merge committed, its fold did not
+        assert t.last_committed("stream") == (last if nth == 2 else last - 1)
+        res = apply_batch(spark, t, batches[last], batch_id=last)
+        assert res["skipped"] == (nth == 2)
+    assert io.armed is None                         # the crash happened
+    assert _hashes(spark, t) == expected
+
+    assert _named_files(t) <= _data_files(t)
+    if step == "walk":
+        assert _data_files(t) - _named_files(t)     # the crash left orphans
+    if nth == 2:
+        # the fold's orphans are staged for a version ahead of the current
+        # one, so vacuum spares them (a writer may be in flight) until the
+        # next batch lands and folds
+        t.vacuum(grace_s=0)
+        assert _data_files(t) - _named_files(t)
+        apply_batch(spark, t, batches[0].limit(0), batch_id=last + 1)
+        assert t.manifest().deltas == []
+    named = _named_files(t)
+    t.vacuum(grace_s=0)
+    assert _data_files(t) == named
+    assert _hashes(spark, t) == expected
